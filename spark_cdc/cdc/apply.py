@@ -129,12 +129,15 @@ def apply_batch_routed(
     count is surfaced in the returned dict under ``"_unknown"``.
 
     The per-table merges are submitted from a driver-side thread pool
-    (``max_parallel``): Spark schedules concurrent jobs fine, and N
-    sequential merges would make micro-batch latency N× one merge while
-    the cluster idles between stages. A failed table does not abort the
+    of at most ``max_parallel`` threads, which the unknown-topic count
+    shares: Spark schedules concurrent jobs fine, and N sequential
+    merges would make micro-batch latency N× one merge while the
+    cluster idles between stages. A failed table does not abort the
     others — the batch commits for every healthy table and raises
     :class:`RoutedApplyError` so the stream redelivers; the redelivery
     re-applies only the missed tables (batch-id guards skip the rest).
+    A failed unknown-topic count is reported in that error's
+    ``failed`` under ``"_unknown"``, next to the per-table outcomes.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -174,12 +177,13 @@ def apply_batch_routed(
         )
 
     failed: dict[str, Exception] = {}
-    # one extra pool slot for the unknown-topic count, so it overlaps
-    # the per-table merges instead of serializing ahead of them; the
-    # count runs on the routing column alone — the projection prunes
-    # the scan to the topic bytes, no envelope JSON parse
-    pool = max(1, min(max_parallel, len(tables))) + (0 if quarantine else 1)
-    with ThreadPoolExecutor(max_workers=pool) as ex:
+    # the unknown-topic count shares the pool with the per-table
+    # merges, so it overlaps them instead of serializing ahead of them,
+    # and at most max_parallel jobs run at once; the count runs on the
+    # routing column alone — the projection prunes the scan to the
+    # topic bytes, no envelope JSON parse
+    jobs = len(tables) + (0 if quarantine else 1)
+    with ThreadPoolExecutor(max_workers=max(1, min(max_parallel, jobs))) as ex:
         if quarantine is None:
             unknown_fut = ex.submit(unknown.select(table_col).count)
         futures = {name: ex.submit(_one, name, tbl) for name, tbl in tables.items()}
@@ -189,9 +193,13 @@ def apply_batch_routed(
             except Exception as e:  # noqa: BLE001 — isolate per-table failure
                 failed[name] = e
         if unknown_fut is not None:
-            n_unknown = unknown_fut.result()
-            if n_unknown:
-                results["_unknown"] = n_unknown  # type: ignore[assignment]
+            try:
+                n_unknown = unknown_fut.result()
+            except Exception as e:  # noqa: BLE001 — keep per-table outcomes
+                failed["_unknown"] = e
+            else:
+                if n_unknown:
+                    results["_unknown"] = n_unknown  # type: ignore[assignment]
     if failed:
         raise RoutedApplyError(failed, [n for n in results if n in tables])
     return results

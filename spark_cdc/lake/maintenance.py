@@ -21,7 +21,15 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from spark_cdc.lake.table import BUCKET_COL, DATA_DIR, META_DIR, V_DEL, LakeTable, bucket_expr
+from spark_cdc.lake.table import (
+    BUCKET_COL,
+    DATA_DIR,
+    META_DIR,
+    V_DEL,
+    LakeTable,
+    bucket_expr,
+    resolve_latest,
+)
 
 
 def compact(
@@ -61,14 +69,9 @@ def compact(
     )
     if not fragmented:
         return []
-    # single-exchange fold (same shape as the merge fast path): shuffle
-    # raw multi-generation rows ONCE on the bucket, then resolve with
-    # groupBy(bucket, key) — bucket is a function of the key, so the
-    # grouping equals plain per-key resolution, HashPartitioning(bucket)
-    # satisfies the clustering requirement (in-place aggregate), and
-    # write tasks are already bucket-aligned. The previous form
-    # exchanged the full content twice (resolve by key, then
-    # repartition by bucket).
+    # single-exchange fold, the merge plan's shape: shuffle the raw
+    # multi-generation rows once on the bucket, then resolve per
+    # (bucket, key) in place; write tasks come out bucket-aligned
     raw = table.read(buckets=fragmented, include_hidden=True, resolve=False)
     keys = table.key_columns
     if table.bucket_column:
@@ -81,27 +84,10 @@ def compact(
         len(fragmented),
         max(raw.sparkSession.sparkContext.defaultParallelism, 1),
     )
-    raw = raw.repartition(np_, F.col(BUCKET_COL))
     if keys:
-        from spark_cdc.lake.table import V_GEN, V_SEQ, V_TS
-
-        payload = [c for c in raw.columns if c not in keys and c != BUCKET_COL]
-        pay = F.struct(*[F.col(c).alias(c) for c in payload])
-        ords = F.struct(
-            F.coalesce(F.col(V_TS), F.to_timestamp(F.lit("1900-01-01"))).alias("o_ts"),
-            F.coalesce(F.col(V_SEQ), F.lit(-1)).alias("o_seq"),
-            F.coalesce(F.col(V_GEN), F.lit(-1)).alias("o_gen"),
-        )
-        df = (
-            raw.groupBy(BUCKET_COL, *keys)
-            .agg(F.max_by(pay, ords).alias("_w"))
-            .select(
-                BUCKET_COL, *keys,
-                *[F.col(f"_w.{c}").alias(c) for c in payload],
-            )
-        )
+        df = resolve_latest(raw, keys, partitions=np_)
     else:
-        df = raw
+        df = raw.repartition(np_, F.col(BUCKET_COL))
     if drop_tombstones and V_DEL in df.columns:
         df = df.filter(~F.coalesce(F.col(V_DEL), F.lit(False)))
     table.overwrite_buckets(

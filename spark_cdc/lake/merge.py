@@ -1,4 +1,4 @@
-"""Copy-on-write MERGE of a change batch into a LakeTable.
+"""Exactly-once MERGE of a change batch into a LakeTable.
 
 Semantics (the explicit re-implementation of ClickHouse
 ``ReplacingMergeTree(updated_at)`` latest-version-wins,
@@ -7,27 +7,43 @@ routing of /root/reference/stream_etl/core/processor.py:186-217 —
 with deletes handled properly where the reference dropped them,
 processor.py:214-217):
 
-- one winner per key is chosen from the batch by
-  ``max_by(payload, (ts, op_seq, lsn))``;
-- the winner is merged against the current row (if any) under the
-  same version order — an *older* change never overwrites a newer
-  stored row, which makes re-applying any batch idempotent
+- every change competes for its key under the one version order,
+  :data:`spark_cdc.lake.table.VERSION_ORDER`: (ts, op_seq, gen, lsn),
+  nulls losing. The batch carries gen = snapshot_id + 1, so it wins
+  exact (ts, op_seq) ties against stored rows, and lsn orders the
+  versions within the batch;
+- an *older* change never overwrites a newer stored row or a newer
+  stored tombstone, which makes re-applying any batch idempotent
   (exactly-once under at-least-once delivery);
-- a winning ``op='d'`` removes the row; ``c``/``r``/``u`` upsert it.
+- a winning ``op='d'`` leaves a tombstone; ``c``/``r``/``u`` upsert.
 
-Physical strategy (scale-first):
+Physical strategy: one plan builder, :func:`_merge_plan`, for both
+modes. It is one SQL text over the batch (and the target) passed as
+named DataFrame arguments, so a batch costs one parse/analyze pass on
+the driver where the DataFrame API analyzes once per transformation.
 
-- The batch is resolved against ONLY the hash buckets its keys touch;
-  every other bucket carries over into the new snapshot by reference.
-  MERGE cost ∝ |changed conversations|, not |table|.
-- Resolution is a ``unionByName`` + one hash aggregate
-  (``groupBy(key).agg(max_by(...))``) — *join-free*. Hash aggregation
-  gets map-side partial combine, so a hot key (one conversation
-  receiving millions of updates — the Zipf tail the north rule calls
-  out) is collapsed to one row per map partition before the shuffle.
-  This subsumes explicit salting; `spark_cdc.cdc.dedup` also ships a
-  salted two-phase variant, proven equivalent in tests, for engines
-  that want the salt spelled out.
+- The batch is normalised to the stored row shape: bucket, payload
+  (typed nulls for columns added after it was produced), the hidden
+  version columns, gen and lsn.
+- ``cow`` adds the stored rows of the touched buckets and rewrites
+  those buckets; every other bucket carries over by reference, so
+  MERGE cost ∝ |changed conversations|, not |table|. ``mor`` adds
+  nothing: the resolved batch is appended as delta files, which reads
+  resolve until ``maintenance.compact`` folds them.
+- One ``REPARTITION(min(|touched|, parallelism), bucket)`` feeds one
+  ``groupBy(bucket, key)`` ``max_by``, the resolver
+  :func:`spark_cdc.lake.table.latest_sql` that the MoR read, the feed
+  diff and compaction share. The bucket is a function of the key, so
+  the shuffle on the bucket satisfies the grouping: the plan is
+  join-free with one exchange, and each write task holds whole
+  buckets. `spark_cdc.cdc.dedup` ships a salted two-phase variant,
+  proven equivalent in tests, for engines that want the salt spelled
+  out.
+- Touched buckets: with ``collect_stats`` a pre-pass job over the raw
+  batch computes the batch stats, the per-input-partition lineage and
+  the buckets its keys hash to, which prune the CoW target read.
+  Without it CoW reads every bucket and MoR takes them from the files
+  it wrote.
 - On a real cluster the same call becomes Iceberg
   ``MERGE INTO t USING s ON t.conv_id=s.conv_id AND
   t.turn_idx=s.turn_idx WHEN MATCHED AND s.op='d' THEN DELETE
@@ -43,20 +59,21 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from spark_cdc.lake.table import (
     BUCKET_COL,
+    HIDDEN_COLS,
     V_DEL,
     V_GEN,
+    V_LSN,
     V_SEQ,
     V_TS,
     LakeTable,
-    bucket_expr,
+    _bq,
+    latest_sql,
 )
 
 ENVELOPE_COLS = ("op", "lsn", "op_seq")
-IS_SRC = "_is_src"
 
 
 @dataclass
@@ -72,9 +89,9 @@ class MergeResult:
     max_lsn: int | None = None
     wall_ms: float = 0.0
     partition_lineage: list[dict[str, Any]] = field(default_factory=list)
-    # per-phase wall times: stats_ms (batch stats/lineage pre-pass, 0 on
-    # the bulk fast path), exec_ms (the write action executing the full
-    # dedup+resolve plan), commit_ms (manifest fsync + pointer swap),
+    # per-phase wall times: stats_ms (batch stats/lineage pre-pass, 0
+    # without collect_stats), exec_ms (the write action executing the
+    # full resolve plan), commit_ms (manifest fsync + pointer swap),
     # plan_ms (driver-side plan construction = the py4j remainder)
     phases: dict[str, float] = field(default_factory=dict)
 
@@ -108,6 +125,13 @@ def merge_changes(
       ``maintenance.compact`` folds them. Same final-state semantics
       (tested equal to cow).
 
+    ``collect_stats`` runs the pre-pass job that fills ``batch_rows``,
+    ``batch_keys``, the lsn range and (with ``collect_lineage``) the
+    per-input-partition lineage, and lets CoW read only the buckets the
+    batch touches. Without it those fields are -1/None and the merge is
+    one Spark job: use it for backfills, keep it for targeted streaming
+    batches where bucket pruning pays.
+
     Exactly-once: when ``batch_id`` is given and ≤ the last committed
     batch id for ``source_id`` (stored in snapshot properties — the
     Delta ``txnAppId``/``txnVersion`` idempotent-sink pattern), the
@@ -124,6 +148,8 @@ def merge_changes(
     keys = table.key_columns
     if not keys:
         raise ValueError("merge_changes requires a keyed table")
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"unknown merge mode {mode!r} (expected 'cow' or 'mor')")
 
     last = table.properties.get("last_batch_id", {}).get(source_id)
     if batch_id is not None and last is not None and batch_id <= last:
@@ -141,657 +167,184 @@ def merge_changes(
             nullable = [type(f)(f.name, f.dataType, True) for f in new_fields]
             table.add_columns(nullable)
 
-    user_cols = [f.name for f in table.user_schema.fields]
-    payload_cols = [c for c in user_cols]
-
-    if mode == "mor" and not collect_stats and not collect_lineage:
-        # bulk-replay fastest path: the whole dedup+delta plan is ONE
-        # cached SQL text (temp view + spark.sql) — a single JVM
-        # parse/analyze pass instead of one analysis per DataFrame-API
-        # transformation. Cuts the driver-side plan_ms residual that
-        # round-2 phase timings measured at ~300-400ms/batch (~19% of
-        # a MoR micro-batch); same plan shape (single Exchange on the
-        # bucket — still plan-asserted in tests/test_plans.py).
-        gen = table.snapshot_id + 1
-        delta = build_mor_bulk_delta_sql(
-            changes, table, keys, op_col, ts_col, seq_col, lsn_col,
-            delete_op, gen,
-        )
-        props = dict(table.properties)
-        if extra_properties:
-            props.update(extra_properties)
-        if batch_id is not None:
-            lb = dict(props.get("last_batch_id", {}))
-            lb[source_id] = batch_id
-            props["last_batch_id"] = lb
-        snap_id = table.append_deltas(
-            delta,
-            touched_buckets=None,
-            properties=props,
-            summary={
-                "operation": "merge_mor",
-                "batch_id": batch_id,
-                "source_id": source_id,
-                "batch_rows": -1,
-                "batch_keys": -1,
-                "min_lsn": None,
-                "max_lsn": None,
-                "partition_lineage": [],
-            },
-        )
-        res = MergeResult(
-            snapshot_id=snap_id,
-            touched_buckets=sorted(
-                int(b) for b in table.manifest.get("delta_buckets", [])
-            ),
-            rows_written=-1,
-            files_written=-1,
-            batch_rows=-1,
-            batch_keys=-1,
-        )
-        res.wall_ms = (time.monotonic() - t0) * 1000
-        res.phases = _phases(0.0, table, res.wall_ms)
-        return res
-
-    if mode == "cow" and not collect_stats and not collect_lineage:
-        # same cached-SQL treatment for the CoW bulk path (round-2
-        # phase timings put its driver plan residual at ~34% of a
-        # batch): target ∪ batch resolved in one SQL text — identical
-        # single-exchange plan shape to the DataFrame form
-        tgt = table.read(include_hidden=True, resolve=False)
-        resolved = build_cow_bulk_resolved_sql(
-            changes, tgt, table, keys, op_col, ts_col, seq_col, lsn_col,
-            delete_op,
-        )
-        props = dict(table.properties)
-        if extra_properties:
-            props.update(extra_properties)
-        if batch_id is not None:
-            lb = dict(props.get("last_batch_id", {}))
-            lb[source_id] = batch_id
-            props["last_batch_id"] = lb
-        touched = list(range(table.num_buckets))
-        snap_id = table.overwrite_buckets(
-            resolved,
-            touched,
-            props,
-            {
-                "operation": "merge",
-                "batch_id": batch_id,
-                "source_id": source_id,
-                "batch_rows": -1,
-                "batch_keys": -1,
-                "min_lsn": None,
-                "max_lsn": None,
-                "touched_buckets": touched,
-                "partition_lineage": [],
-            },
-        )
-        res = MergeResult(
-            snapshot_id=snap_id,
-            touched_buckets=touched,
-            rows_written=-1,
-            files_written=-1,
-            batch_rows=-1,
-            batch_keys=-1,
-        )
-        res.wall_ms = (time.monotonic() - t0) * 1000
-        res.phases = _phases(0.0, table, res.wall_ms)
-        return res
-
-    # -- per-key winner within the batch (one hash agg, map-side combined)
-    src = changes
-    for c in payload_cols:
-        if c not in src.columns:
-            src = src.withColumn(c, F.lit(None).cast(dict(
-                (f.name, f.dataType) for f in table.user_schema.fields)[c]))
-    has_lsn = lsn_col in src.columns
-    src = src.withColumn(IS_SRC, F.lit(1))
-    if collect_lineage:
-        # input-partition id must be materialized pre-aggregation
-        # (nondeterministic exprs are rejected inside agg functions)
-        src = src.withColumn("_pid", F.spark_partition_id())
-    win_payload = F.struct(
-        *[F.col(c).alias(c) for c in payload_cols],
-        F.col(op_col).alias("__op"),
-        F.col(ts_col).cast("timestamp").alias(V_TS),
-        F.coalesce(F.col(seq_col).cast("long"), F.lit(-1)).alias(V_SEQ),
-    )
-    batch_ord = F.struct(
-        F.coalesce(F.col(ts_col).cast("timestamp"), F.to_timestamp(F.lit("1900-01-01"))),
-        F.coalesce(F.col(seq_col).cast("long"), F.lit(-1)),
-        (F.col(lsn_col).cast("long") if has_lsn else F.lit(0)),
-    )
-    agg_cols = [F.max_by(win_payload, batch_ord).alias("w"), F.count(F.lit(1)).alias("_n")]
-    if has_lsn:
-        agg_cols += [F.min(lsn_col).alias("_minl"), F.max(lsn_col).alias("_maxl")]
-    if collect_lineage:
-        agg_cols += [F.first("_pid").alias("_pid")]
-    winners = (
-        src.groupBy(*[F.col(k) for k in keys])
-        .agg(*agg_cols)
-        .select(
-            *keys,
-            F.col("w.__op").alias("__op"),
-            *[F.col(f"w.{c}").alias(c) for c in payload_cols if c not in keys],
-            F.col(f"w.{V_TS}").alias(V_TS),
-            F.col(f"w.{V_SEQ}").alias(V_SEQ),
-            F.col("_n"),
-            *( [F.col("_minl"), F.col("_maxl")] if has_lsn else [F.lit(None).cast("long").alias("_minl"), F.lit(None).cast("long").alias("_maxl")] ),
-            *( [F.col("_pid")] if collect_lineage else [] ),
-        )
-        .withColumn(BUCKET_COL, bucket_expr(table.bucket_column, table.num_buckets))
-    )
-    if collect_stats:
-        winners = winners.persist()
     stats_ms = 0.0
-    try:
-        if collect_stats:
-            t_stats = time.monotonic()
-            # batch stats + per-partition lineage + touched buckets in
-            # ONE driver-side aggregation pass
-            group = [F.col("_pid")] if collect_lineage else [F.lit(0).alias("_pid")]
-            stat_rows = (
-                winners.groupBy(*group)
-                .agg(
-                    F.sum("_n").alias("rows"),
-                    F.count(F.lit(1)).alias("keys"),
-                    F.min("_minl").alias("min_lsn"),
-                    F.max("_maxl").alias("max_lsn"),
-                    F.collect_set(BUCKET_COL).alias("buckets"),
-                )
-                .collect()
-            )
-            batch_keys = sum(r["keys"] for r in stat_rows)
-            if batch_keys == 0:
-                res = MergeResult(snapshot_id=table.snapshot_id, skipped=False)
-                res.wall_ms = (time.monotonic() - t0) * 1000
-                _record_batch(table, batch_id, source_id)
-                return res
-            batch_rows = sum(r["rows"] or 0 for r in stat_rows)
-            lsns = [r["min_lsn"] for r in stat_rows if r["min_lsn"] is not None]
-            min_lsn = min(lsns) if lsns else None
-            lsns = [r["max_lsn"] for r in stat_rows if r["max_lsn"] is not None]
-            max_lsn = max(lsns) if lsns else None
-            touched = sorted({int(b) for r in stat_rows for b in r["buckets"]})
-            lineage: list[dict[str, Any]] = (
-                [
-                    {k: r[k] for k in ("_pid", "rows", "keys", "min_lsn", "max_lsn")}
-                    for r in stat_rows
-                ]
-                if collect_lineage
-                else []
-            )
-            stats_ms = (time.monotonic() - t_stats) * 1000
-        else:
-            # bulk-replay fast path: no pre-pass job — every bucket is
-            # assumed touched (true for uniformly-keyed bulk batches),
-            # so merge = ONE Spark job (dedup + resolve + write), and
-            # resolution is single-pass (see below). Use for backfills;
-            # keep stats on for targeted streaming batches where bucket
-            # pruning pays.
-            batch_keys = -1
-            batch_rows = -1
-            min_lsn = max_lsn = None
-            touched = list(range(table.num_buckets))
-            lineage = []
-
-        if mode == "mor":
-            gen = table.snapshot_id + 1
-            if collect_stats:
-                # winners already computed (shared with the stats pass):
-                # one more exchange aligns output files with buckets
-                delta = (
-                    winners.select(
-                        *user_cols,
-                        F.col(f"{V_TS}").alias(V_TS),
-                        F.col(f"{V_SEQ}").alias(V_SEQ),
-                        (F.col("__op") == F.lit(delete_op)).alias(V_DEL),
-                        F.lit(gen).cast("long").alias(V_GEN),
-                    )
-                    .withColumn(BUCKET_COL, bucket_expr(table.bucket_column, table.num_buckets))
-                    .repartition(
-                        min(len(touched), max(
-                            winners.sparkSession.sparkContext.defaultParallelism, 1)),
-                        F.col(BUCKET_COL))
-                )
-            else:
-                delta = build_mor_bulk_delta(
-                    src, table, keys, payload_cols, win_payload, batch_ord,
-                    delete_op, gen,
-                )
-            props = dict(table.properties)
-            if extra_properties:
-                props.update(extra_properties)
-            if batch_id is not None:
-                lb = dict(props.get("last_batch_id", {}))
-                lb[source_id] = batch_id
-                props["last_batch_id"] = lb
-            snap_id = table.append_deltas(
-                delta,
-                touched_buckets=touched if collect_stats else None,
-                properties=props,
-                summary={
-                    "operation": "merge_mor",
-                    "batch_id": batch_id,
-                    "source_id": source_id,
-                    "batch_rows": int(batch_rows),
-                    "batch_keys": int(batch_keys),
-                    "min_lsn": min_lsn,
-                    "max_lsn": max_lsn,
-                    "partition_lineage": lineage,
-                },
-            )
-            rows_written, files_written = (
-                _written_stats(table) if collect_stats else (-1, -1)
-            )
-            res = MergeResult(
-                snapshot_id=snap_id,
-                touched_buckets=touched if collect_stats else sorted(
-                    int(b) for b in table.manifest.get("delta_buckets", [])
-                ),
-                rows_written=rows_written,
-                files_written=files_written,
-                batch_rows=int(batch_rows),
-                batch_keys=int(batch_keys),
-                min_lsn=min_lsn,
-                max_lsn=max_lsn,
-                partition_lineage=lineage,
-            )
+    batch_rows = batch_keys = -1
+    min_lsn = max_lsn = None
+    lineage: list[dict[str, Any]] = []
+    touched = list(range(table.num_buckets))
+    if collect_stats:
+        t_stats = time.monotonic()
+        stat_rows = _batch_stats(table, changes, lsn_col, collect_lineage)
+        batch_keys = sum(r["keys"] for r in stat_rows)
+        if batch_keys == 0:
+            res = MergeResult(snapshot_id=table.snapshot_id)
             res.wall_ms = (time.monotonic() - t0) * 1000
-            res.phases = _phases(stats_ms, table, res.wall_ms)
+            if batch_id is not None:
+                table.set_properties(_with_batch_id(table.properties, batch_id, source_id))
             return res
+        batch_rows = sum(r["rows"] or 0 for r in stat_rows)
+        lsns = [r["min_lsn"] for r in stat_rows if r["min_lsn"] is not None]
+        min_lsn = min(lsns) if lsns else None
+        lsns = [r["max_lsn"] for r in stat_rows if r["max_lsn"] is not None]
+        max_lsn = max(lsns) if lsns else None
+        touched = sorted({int(b) for r in stat_rows for b in r["buckets"]})
+        if collect_lineage:
+            lineage = [
+                {k: r[k] for k in ("_pid", "rows", "keys", "min_lsn", "max_lsn")}
+                for r in stat_rows
+            ]
+        stats_ms = (time.monotonic() - t_stats) * 1000
 
-        # -- resolve against current content of touched buckets only
-        # (raw multi-generation rows: the union+max_by below subsumes
-        # MoR read-path resolution, so resolve=False avoids a shuffle)
-        tgt = table.read(buckets=touched, include_hidden=True, resolve=False)
-        tgt = (
-            # stored tombstones keep competing as deletes so a late
-            # older insert can never resurrect a newer delete
-            tgt.withColumn(
-                "__op",
-                F.when(F.coalesce(F.col(V_DEL), F.lit(False)), F.lit(delete_op)).otherwise(F.lit("keep")),
-            )
-            .withColumn(IS_SRC, F.lit(0))
-        )
-        if collect_stats:
-            src_r = winners.select(
-                *user_cols, "__op", V_TS, V_SEQ, F.lit(1).alias(IS_SRC),
-                F.lit(-1).cast("long").alias("_gen_ord"),
-                F.lit(-1).cast("long").alias("_lsn_ord"),
-            )
-        else:
-            # single-pass resolution: raw batch rows (duplicates and
-            # all) compete directly with stored rows in ONE aggregation
-            # — lsn breaks intra-batch version ties, is_src breaks
-            # src-vs-stored ties. One shuffle instead of two.
-            src_r = src.select(
-                *user_cols,
-                F.col(op_col).alias("__op"),
-                F.col(ts_col).cast("timestamp").alias(V_TS),
-                F.coalesce(F.col(seq_col).cast("long"), F.lit(-1)).alias(V_SEQ),
-                F.lit(1).alias(IS_SRC),
-                F.lit(-1).cast("long").alias("_gen_ord"),
-                (F.col(lsn_col).cast("long") if has_lsn else F.lit(-1).cast("long")).alias("_lsn_ord"),
-            )
-        tgt_r = tgt.select(
-            *user_cols, "__op", V_TS, V_SEQ, IS_SRC,
-            # stored rows carry their write generation: two stored
-            # generations of a key with identical (ts, op_seq) must
-            # resolve exactly as the MoR read path (_resolve_latest)
-            # would — later write wins — so CoW and MoR never disagree
-            F.coalesce(F.col(V_GEN), F.lit(-1)).cast("long").alias("_gen_ord"),
-            F.lit(-1).cast("long").alias("_lsn_ord"),
-        )
-        both = tgt_r.unionByName(src_r)
+    plan = _merge_plan(
+        table, changes, mode, touched, op_col, ts_col, seq_col, lsn_col, delete_op
+    )
+    props = _with_batch_id(
+        {**table.properties, **(extra_properties or {})}, batch_id, source_id
+    )
+    summary = {
+        "operation": "merge_mor" if mode == "mor" else "merge",
+        "batch_id": batch_id,
+        "source_id": source_id,
+        "batch_rows": int(batch_rows),
+        "batch_keys": int(batch_keys),
+        "min_lsn": min_lsn,
+        "max_lsn": max_lsn,
+    }
+    if mode == "mor":
+        summary["partition_lineage"] = lineage
+        snap_id = table.append_deltas(plan, properties=props, summary=summary)
         if not collect_stats:
-            # one-exchange plan: shuffle once on the bucket, then group
-            # by (bucket, key) — HashPartitioning(bucket) satisfies the
-            # clustering requirement since bucket ⊆ group keys, so the
-            # aggregation runs in-place and each task holds exactly one
-            # bucket at write time (no second exchange).
-            both = both.withColumn(
-                BUCKET_COL, bucket_expr(table.bucket_column, table.num_buckets)
-            ).repartition(
-                min(len(touched), max(
-                    both.sparkSession.sparkContext.defaultParallelism, 1)),
-                F.col(BUCKET_COL))
-        resolved_payload = F.struct(
-            *[F.col(c).alias(c) for c in user_cols if c not in keys],
-            F.col("__op").alias("__op"),
-            F.col(V_TS).alias(V_TS),
-            F.col(V_SEQ).alias(V_SEQ),
-        )
-        resolved_ord = F.struct(
-            F.coalesce(F.col(V_TS), F.to_timestamp(F.lit("1900-01-01"))).alias("o_ts"),
-            F.coalesce(F.col(V_SEQ), F.lit(-1)).alias("o_seq"),
-            F.col(IS_SRC).cast("int").alias("o_src"),
-            F.coalesce(F.col("_gen_ord"), F.lit(-1)).alias("o_gen"),
-            F.coalesce(F.col("_lsn_ord"), F.lit(-1)).alias("o_lsn"),
-        )
-        group_keys = ([BUCKET_COL] if not collect_stats else []) + list(keys)
-        resolved = (
-            both.groupBy(*group_keys)
-            .agg(F.max_by(resolved_payload, resolved_ord).alias("w"))
-            .select(
-                *group_keys,
-                *[F.col(f"w.{c}").alias(c) for c in user_cols if c not in keys],
-                F.col("w.__op").alias("__op"),
-                F.col(f"w.{V_TS}").alias(V_TS),
-                F.col(f"w.{V_SEQ}").alias(V_SEQ),
-            )
-            .withColumn(V_DEL, F.col("__op") == F.lit(delete_op))
-            .drop("__op")
-        )
-        if collect_stats:
-            resolved = (
-                resolved.withColumn(
-                    BUCKET_COL, bucket_expr(table.bucket_column, table.num_buckets)
-                )
-                # align write tasks with buckets: without this,
-                # partitionBy writes one file per (task × bucket) — a
-                # tiny-file explosion compounding across micro-batches
-                .repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            )
+            touched = sorted(int(b) for b in table.manifest.get("delta_buckets", []))
+    else:
+        summary.update(touched_buckets=touched, partition_lineage=lineage)
+        snap_id = table.overwrite_buckets(plan, touched, props, summary)
 
-        props = dict(table.properties)
-        if extra_properties:
-            props.update(extra_properties)
-        if batch_id is not None:
-            lb = dict(props.get("last_batch_id", {}))
-            lb[source_id] = batch_id
-            props["last_batch_id"] = lb
-        summary = {
-            "operation": "merge",
-            "batch_id": batch_id,
-            "source_id": source_id,
-            "batch_rows": int(batch_rows),
-            "batch_keys": int(batch_keys),
-            "min_lsn": min_lsn,
-            "max_lsn": max_lsn,
-            "touched_buckets": touched,
-            "partition_lineage": lineage,
-        }
-        snap_id = table.overwrite_buckets(resolved, touched, props, summary)
-
-        rows_written, files_written = (
-            _written_stats(table) if collect_stats else (-1, -1)
-        )
-        res = MergeResult(
-            snapshot_id=snap_id,
-            touched_buckets=touched,
-            rows_written=rows_written,
-            files_written=files_written,
-            batch_rows=int(batch_rows),
-            batch_keys=int(batch_keys),
-            min_lsn=min_lsn,
-            max_lsn=max_lsn,
-            partition_lineage=lineage,
-        )
-        res.wall_ms = (time.monotonic() - t0) * 1000
-        res.phases = _phases(stats_ms, table, res.wall_ms)
-        return res
-    finally:
-        if collect_stats:
-            winners.unpersist()
-
-
-def _bq(name: str) -> str:
-    """Backtick-quote an identifier for SQL embedding, escaping any
-    embedded backticks (``a`b`` → ```a``b```) so a hostile or merely
-    unlucky column name can't break out of the quoted context."""
-    return "`" + str(name).replace("`", "``") + "`"
-
-
-def _sq(val: str) -> str:
-    """Single-quote a string literal for Spark SQL, escaping backslash
-    and quote characters."""
-    return "'" + str(val).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-# SQL-text template per (table schema × batch columns × merge kwargs):
-# built once, reused every batch with only the generation substituted
-# via a token replace (NOT str.format — user identifiers may contain
-# '{'/'}' which would corrupt or KeyError a format call).
-_BULK_DELTA_SQL_CACHE: dict[tuple, tuple[str, str]] = {}
-
-
-def build_mor_bulk_delta_sql(
-    changes: DataFrame,
-    table: LakeTable,
-    keys: list[str],
-    op_col: str,
-    ts_col: str,
-    seq_col: str,
-    lsn_col: str,
-    delete_op: str,
-    gen: int,
-) -> DataFrame:
-    """Same plan as :func:`build_mor_bulk_delta` — one shuffle on the
-    bucket, in-place groupBy(bucket, key), max_by winner — but built as
-    a single cached SQL string over a temp view. The DataFrame-API form
-    analyzes the (growing) plan once per transformation on the driver;
-    this form is one ``createOrReplaceTempView`` + one ``spark.sql``
-    per batch, so steady-state replay pays one parse/analyze pass.
-    Equality with the DataFrame form and the single-Exchange property
-    are pytest/plan-asserted (tests/test_mor.py, tests/test_plans.py).
-    """
-    nb = table.num_buckets
-    # shuffle-partition count: capped at the cluster's parallelism —
-    # writing one task per bucket schedules num_buckets tiny tasks in
-    # ⌈nb/cores⌉ waves, each deserializing the ~1 MB task binary of
-    # this plan (stage metrics: 64 tasks × ~60 ms deserialize per MoR
-    # batch). partitionBy still splits the output per bucket value, so
-    # the one-file-per-bucket layout is unchanged; on a cluster whose
-    # parallelism exceeds the bucket count this is exactly the old
-    # plan.
-    np_ = min(nb, max(changes.sparkSession.sparkContext.defaultParallelism, 1))
-    cols = tuple(changes.columns)
-    cache_key = (
-        table.path,
-        tuple((f.name, f.dataType.simpleString()) for f in table.user_schema.fields),
-        cols, tuple(keys), op_col, ts_col, seq_col, lsn_col, delete_op,
-        nb, np_, table.bucket_column,
+    rows_written, files_written = (
+        _written_stats(table) if collect_stats else (-1, -1)
     )
-    cached = _BULK_DELTA_SQL_CACHE.get(cache_key)
-    if cached is None:
-        view = f"__spark_cdc_bulk_{abs(hash(table.path)) % 10**10}"
-        fields = table.user_schema.fields
-
-        def src(f):
-            # raw when present (parity with the DataFrame form, which
-            # doesn't cast payload); typed NULL when the batch predates
-            # a schema evolution
-            return (
-                _bq(f.name) if f.name in cols
-                else f"CAST(NULL AS {f.dataType.simpleString()})"
-            )
-
-        nonkey = [f for f in fields if f.name not in keys]
-        nv = ", ".join(f"{_sq(f.name)}, {src(f)}" for f in nonkey)
-        ts_c = f"CAST({_bq(ts_col)} AS TIMESTAMP)"
-        seq_c = f"coalesce(CAST({_bq(seq_col)} AS BIGINT), CAST(-1 AS BIGINT))"
-        lsn_c = (
-            f"CAST({_bq(lsn_col)} AS BIGINT)" if lsn_col in cols
-            else "CAST(0 AS BIGINT)"
-        )
-        key_list = ", ".join(_bq(k) for k in keys)
-        payload_sel = ", ".join(f"w.{_bq(f.name)} AS {_bq(f.name)}" for f in nonkey)
-        sql = f"""
-        WITH __b AS (
-          SELECT /*+ REPARTITION({np_}, __bucket) */ * FROM (
-            SELECT CAST(pmod(xxhash64({_bq(table.bucket_column)}), {nb}) AS INT)
-                     AS __bucket, * FROM {view}
-          )
-        )
-        SELECT __bucket AS `{BUCKET_COL}`, {key_list}, {payload_sel},
-               w.`{V_TS}` AS `{V_TS}`, w.`{V_SEQ}` AS `{V_SEQ}`,
-               (w.`__op` = {_sq(delete_op)}) AS `{V_DEL}`,
-               CAST(__GEN__ AS BIGINT) AS `{V_GEN}`
-        FROM (
-          SELECT __bucket, {key_list},
-                 max_by(
-                   named_struct({nv}{"," if nv else ""}
-                                '__op', {_bq(op_col)},
-                                '{V_TS}', {ts_c}, '{V_SEQ}', {seq_c}),
-                   struct(coalesce({ts_c}, TIMESTAMP '1900-01-01'),
-                          {seq_c}, {lsn_c})
-                 ) AS w
-          FROM __b GROUP BY __bucket, {key_list}
-        )
-        """
-        cached = (view, sql)
-        _BULK_DELTA_SQL_CACHE[cache_key] = cached
-    view, sql = cached
-    changes.createOrReplaceTempView(view)
-    return changes.sparkSession.sql(sql.replace("__GEN__", str(int(gen))))
-
-
-_COW_RESOLVE_SQL_CACHE: dict[tuple, tuple[str, str, str]] = {}
-
-
-def build_cow_bulk_resolved_sql(
-    changes: DataFrame,
-    tgt: DataFrame,
-    table: LakeTable,
-    keys: list[str],
-    op_col: str,
-    ts_col: str,
-    seq_col: str,
-    lsn_col: str,
-    delete_op: str,
-) -> DataFrame:
-    """CoW bulk resolution as one cached SQL text: stored rows (with
-    their tombstones competing as deletes and write-generation tie
-    break) union the raw batch, one shuffle on the bucket, in-place
-    groupBy(bucket, key) max_by under the order
-    (ts, op_seq, is_src, gen, lsn) — exactly the DataFrame form's
-    ``resolved_ord``. Built once per (schema × batch columns), reused
-    every batch; two temp-view registrations + one parse/analyze pass
-    replace ~15 per-transformation analyses."""
-    nb = table.num_buckets
-    # same adaptive shuffle-partition cap as the MoR bulk builder
-    np_ = min(nb, max(changes.sparkSession.sparkContext.defaultParallelism, 1))
-    cols = tuple(changes.columns)
-    cache_key = (
-        table.path,
-        tuple((f.name, f.dataType.simpleString()) for f in table.user_schema.fields),
-        cols, tuple(keys), op_col, ts_col, seq_col, lsn_col, delete_op,
-        nb, np_, table.bucket_column,
+    res = MergeResult(
+        snapshot_id=snap_id,
+        touched_buckets=touched,
+        rows_written=rows_written,
+        files_written=files_written,
+        batch_rows=int(batch_rows),
+        batch_keys=int(batch_keys),
+        min_lsn=min_lsn,
+        max_lsn=max_lsn,
+        partition_lineage=lineage,
     )
-    cached = _COW_RESOLVE_SQL_CACHE.get(cache_key)
-    if cached is None:
-        tag = abs(hash(table.path)) % 10**10
-        src_view = f"__spark_cdc_cow_src_{tag}"
-        tgt_view = f"__spark_cdc_cow_tgt_{tag}"
-        fields = table.user_schema.fields
-
-        def src(f):
-            return (
-                _bq(f.name) if f.name in cols
-                else f"CAST(NULL AS {f.dataType.simpleString()})"
-            )
-
-        user_list = ", ".join(_bq(f.name) for f in fields)
-        src_list = ", ".join(f"{src(f)} AS {_bq(f.name)}" for f in fields)
-        nonkey = [f for f in fields if f.name not in keys]
-        nv = ", ".join(f"{_sq(f.name)}, {_bq(f.name)}" for f in nonkey)
-        key_list = ", ".join(_bq(k) for k in keys)
-        payload_sel = ", ".join(f"w.{_bq(f.name)} AS {_bq(f.name)}" for f in nonkey)
-        ts_c = f"CAST({_bq(ts_col)} AS TIMESTAMP)"
-        seq_c = f"coalesce(CAST({_bq(seq_col)} AS BIGINT), CAST(-1 AS BIGINT))"
-        lsn_c = (
-            f"CAST({_bq(lsn_col)} AS BIGINT)" if lsn_col in cols
-            else "CAST(-1 AS BIGINT)"
-        )
-        sql = f"""
-        WITH __u AS (
-          SELECT {user_list},
-                 CASE WHEN coalesce(`{V_DEL}`, false) THEN {_sq(delete_op)}
-                      ELSE 'keep' END AS __op,
-                 `{V_TS}` AS __vts, `{V_SEQ}` AS __vseq,
-                 0 AS __src,
-                 coalesce(CAST(`{V_GEN}` AS BIGINT), CAST(-1 AS BIGINT)) AS __gen,
-                 CAST(-1 AS BIGINT) AS __lsn
-          FROM {tgt_view}
-          UNION ALL
-          SELECT {src_list},
-                 {_bq(op_col)} AS __op, {ts_c} AS __vts, {seq_c} AS __vseq,
-                 1 AS __src, CAST(-1 AS BIGINT) AS __gen, {lsn_c} AS __lsn
-          FROM {src_view}
-        ), __b AS (
-          SELECT /*+ REPARTITION({np_}, __bucket) */ * FROM (
-            SELECT CAST(pmod(xxhash64({_bq(table.bucket_column)}), {nb}) AS INT)
-                     AS __bucket, * FROM __u
-          )
-        )
-        SELECT __bucket AS `{BUCKET_COL}`, {key_list}, {payload_sel},
-               w.`__vts` AS `{V_TS}`, w.`__vseq` AS `{V_SEQ}`,
-               (w.`__op` = {_sq(delete_op)}) AS `{V_DEL}`
-        FROM (
-          SELECT __bucket, {key_list},
-                 max_by(
-                   named_struct({nv}{"," if nv else ""}
-                                '__op', __op, '__vts', __vts, '__vseq', __vseq),
-                   struct(coalesce(__vts, TIMESTAMP '1900-01-01'),
-                          coalesce(__vseq, CAST(-1 AS BIGINT)),
-                          __src, __gen, __lsn)
-                 ) AS w
-          FROM __b GROUP BY __bucket, {key_list}
-        )
-        """
-        cached = (src_view, tgt_view, sql)
-        _COW_RESOLVE_SQL_CACHE[cache_key] = cached
-    src_view, tgt_view, sql = cached
-    changes.createOrReplaceTempView(src_view)
-    tgt.createOrReplaceTempView(tgt_view)
-    return changes.sparkSession.sql(sql)
+    res.wall_ms = (time.monotonic() - t0) * 1000
+    res.phases = _phases(stats_ms, table, res.wall_ms)
+    return res
 
 
-def build_mor_bulk_delta(
-    src: DataFrame,
-    table: LakeTable,
-    keys: list[str],
-    payload_cols: list[str],
-    win_payload,
-    batch_ord,
-    delete_op: str,
-    gen: int,
-) -> DataFrame:
-    """Bulk MoR fast path — ONE exchange: shuffle raw rows once on the
-    bucket, then dedup with groupBy(bucket, key); since bucket ⊆ group
-    keys, HashPartitioning(bucket) satisfies the clustering requirement
-    and the aggregation runs in-place with each task holding exactly
-    one bucket at write time (the same plan shape as the CoW fast
-    path — raw rows compete directly, lsn breaking intra-batch ties via
-    ``batch_ord``). The single-Exchange property is plan-asserted in
-    tests/test_plans.py."""
-    np_ = min(
-        table.num_buckets,
-        max(src.sparkSession.sparkContext.defaultParallelism, 1),
-    )
+def _bucket_sql(table: LakeTable) -> str:
+    """SQL twin of :func:`spark_cdc.lake.table.bucket_expr`."""
     return (
-        src.withColumn(BUCKET_COL, bucket_expr(table.bucket_column, table.num_buckets))
-        .repartition(np_, F.col(BUCKET_COL))
-        .groupBy(BUCKET_COL, *[F.col(k) for k in keys])
-        .agg(F.max_by(win_payload, batch_ord).alias("w"))
-        .select(
-            BUCKET_COL,
-            *keys,
-            *[F.col(f"w.{c}").alias(c) for c in payload_cols if c not in keys],
-            F.col(f"w.{V_TS}").alias(V_TS),
-            F.col(f"w.{V_SEQ}").alias(V_SEQ),
-            (F.col("w.__op") == F.lit(delete_op)).alias(V_DEL),
-            F.lit(gen).cast("long").alias(V_GEN),
-        )
+        f"CAST(pmod(xxhash64({_bq(table.bucket_column)}), "
+        f"{int(table.num_buckets)}) AS INT)"
     )
+
+
+def _merge_plan(
+    table: LakeTable,
+    changes: DataFrame,
+    mode: str,
+    touched: list[int],
+    op_col: str,
+    ts_col: str,
+    seq_col: str,
+    lsn_col: str,
+    delete_op: str,
+) -> DataFrame:
+    """The one merge plan (see the module docstring): the batch as
+    stored rows of generation snapshot_id + 1, plus in ``cow`` mode the
+    stored rows of ``touched``, shuffled once on the bucket and
+    resolved to the latest version per key."""
+    spark = changes.sparkSession
+    cols = set(changes.columns)
+    user = table.user_schema.fields
+    names = [f.name for f in user]
+    bucket = f"{_bucket_sql(table)} AS {_bq(BUCKET_COL)}"
+
+    def batch_col(f) -> str:
+        # a typed null for a column added after the batch was produced
+        raw = _bq(f.name) if f.name in cols else f"CAST(NULL AS {f.dataType.simpleString()})"
+        return f"{raw} AS {_bq(f.name)}"
+
+    lsn = f"CAST({_bq(lsn_col)} AS BIGINT)" if lsn_col in cols else "CAST(NULL AS BIGINT)"
+    rows = f"""
+        SELECT {bucket}, {', '.join(batch_col(f) for f in user)},
+               CAST({_bq(ts_col)} AS TIMESTAMP) AS {_bq(V_TS)},
+               coalesce(CAST({_bq(seq_col)} AS BIGINT), CAST(-1 AS BIGINT)) AS {_bq(V_SEQ)},
+               ({_bq(op_col)} = {{delete_op}}) AS {_bq(V_DEL)},
+               CAST({{gen}} AS BIGINT) AS {_bq(V_GEN)},
+               {lsn} AS {_bq(V_LSN)}
+        FROM {{src}}"""
+    args: dict[str, Any] = {
+        "src": changes, "delete_op": delete_op, "gen": table.snapshot_id + 1,
+    }
+    if mode == "cow":
+        stored = ", ".join(_bq(c) for c in [*names, *HIDDEN_COLS])
+        rows += f"""
+        UNION ALL
+        SELECT {bucket}, {stored}, CAST(NULL AS BIGINT) FROM {{tgt}}"""
+        # read in the batch's session: a streaming micro-batch has its
+        # own, and the SQL text sees only that session's views
+        args["tgt"] = LakeTable(spark, table.path, table.manifest).read(
+            buckets=touched, include_hidden=True, resolve=False
+        )
+    columns = [BUCKET_COL, *names, *HIDDEN_COLS, V_LSN]
+    partitions = min(len(touched), max(spark.sparkContext.defaultParallelism, 1))
+    return spark.sql(
+        latest_sql(f"({rows})", columns, table.key_columns, partitions), **args
+    )
+
+
+def _batch_stats(
+    table: LakeTable, changes: DataFrame, lsn_col: str, lineage: bool
+) -> list:
+    """The stats/lineage pre-pass over the raw batch rows: per input
+    partition (one row when ``lineage`` is off) the rows and keys it
+    contributes and their lsn range, with each key counted in the first
+    input partition that carries it, plus the buckets the keys hash
+    to."""
+    keys = ", ".join(_bq(k) for k in table.key_columns)
+    pid = "spark_partition_id()" if lineage else "0"
+    lsn = _bq(lsn_col) if lsn_col in changes.columns else "CAST(NULL AS BIGINT)"
+    return changes.sparkSession.sql(
+        f"""
+        SELECT __pid AS _pid, sum(__n) AS `rows`, count(1) AS `keys`,
+               min(__lo) AS min_lsn, max(__hi) AS max_lsn,
+               collect_set(__b) AS buckets
+        FROM (
+          SELECT min(__pid) AS __pid, count(1) AS __n, min(__l) AS __lo,
+                 max(__l) AS __hi, min(__b) AS __b
+          FROM (SELECT {keys}, {pid} AS __pid, {lsn} AS __l,
+                       {_bucket_sql(table)} AS __b FROM {{src}})
+          GROUP BY {keys}
+        )
+        GROUP BY __pid""",
+        src=changes,
+    ).collect()
+
+
+def _with_batch_id(
+    props: dict[str, Any], batch_id: int | None, source_id: str
+) -> dict[str, Any]:
+    """``props`` with ``source_id``'s last committed batch id set to
+    ``batch_id`` — the record the exactly-once guard reads."""
+    if batch_id is None:
+        return dict(props)
+    return {
+        **props,
+        "last_batch_id": {**props.get("last_batch_id", {}), source_id: batch_id},
+    }
 
 
 def _phases(stats_ms: float, table: LakeTable, wall_ms: float) -> dict[str, float]:
     """Per-phase breakdown of one merge: the residual (plan_ms) is
-    driver-side py4j plan construction + scheduling — the fixed cost
-    the bulk-replay path amortizes."""
+    driver-side py4j plan construction + scheduling."""
     exec_ms = getattr(table, "last_write_ms", 0.0)
     commit_ms = getattr(table, "last_commit_ms", 0.0)
     return {
@@ -800,14 +353,6 @@ def _phases(stats_ms: float, table: LakeTable, wall_ms: float) -> dict[str, floa
         "commit_ms": round(commit_ms, 1),
         "plan_ms": round(max(wall_ms - stats_ms - exec_ms - commit_ms, 0.0), 1),
     }
-
-
-def _record_batch(table: LakeTable, batch_id: int | None, source_id: str) -> None:
-    if batch_id is None:
-        return
-    lb = dict(table.properties.get("last_batch_id", {}))
-    lb[source_id] = batch_id
-    table.set_properties({"last_batch_id": lb})
 
 
 def _written_stats(table: LakeTable) -> tuple[int, int]:

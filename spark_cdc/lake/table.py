@@ -62,6 +62,16 @@ V_DEL = "_deleted"
 # exact version ties in favour of the later write.
 V_GEN = "_gen"
 HIDDEN_COLS = (V_TS, V_SEQ, V_DEL, V_GEN)
+# change-log position of a batch row; never stored
+V_LSN = "_lsn"
+# The one version order: of all rows of a key, the one with the
+# greatest (ts, seq, gen, lsn) wins, and a null field loses to any
+# value (Spark compares struct fields ascending, nulls first). A batch
+# being merged carries gen = snapshot_id + 1, above every stored
+# generation, so it wins (ts, seq) ties against stored rows and lsn
+# only ever decides between rows of one batch. Stored rows have no
+# lsn, so reads and compaction order by (ts, seq, gen).
+VERSION_ORDER = (V_TS, V_SEQ, V_GEN, V_LSN)
 
 
 class CommitConflictError(RuntimeError):
@@ -111,21 +121,51 @@ def _zone_value(v):
     return None
 
 
-def _resolve_latest(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Latest-version-per-key over possibly-multi-generation rows:
-    max_by(payload, (v_ts, v_seq, gen)) — the MoR read-path resolution.
-    Hash-aggregate with map-side partial combine (skew-safe)."""
-    payload = [c for c in df.columns if c not in keys]
-    pay = F.struct(*[F.col(c).alias(c) for c in payload])
-    ords = F.struct(
-        F.coalesce(F.col(V_TS), F.to_timestamp(F.lit("1900-01-01"))).alias("o_ts"),
-        F.coalesce(F.col(V_SEQ), F.lit(-1)).alias("o_seq"),
-        F.coalesce(F.col(V_GEN), F.lit(-1)).alias("o_gen"),
+def _bq(name: str) -> str:
+    """Backtick-quote an identifier for SQL text that runs through
+    ``spark.sql(text, **dataframes)``. Backticks are doubled (SQL
+    escaping), and so are braces, because that form passes the text
+    through ``str.format``."""
+    return "`" + str(name).replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
+
+
+def latest_sql(
+    rel: str, columns: list[str], keys: list[str], partitions: int | None = None
+) -> str:
+    """SQL text of the one resolver: the latest version of each key of
+    ``rel`` (a relation with ``columns``) under :data:`VERSION_ORDER`,
+    as ``groupBy(key).agg(max_by(row, order))``. Order fields that
+    ``rel`` lacks are null in every row and so never decide. ``V_LSN``
+    only orders and is not returned.
+
+    With ``partitions``, ``rel`` carries ``BUCKET_COL``: its rows are
+    shuffled once into ``partitions`` partitions on the bucket, then
+    grouped by (bucket, key). The bucket is a function of the key, so
+    that shuffle satisfies the grouping (no second exchange) and each
+    task holds whole buckets for the bucket-partitioned write."""
+    by = ([BUCKET_COL] if partitions else []) + list(keys)
+    payload = [c for c in columns if c not in by and c != V_LSN]
+    order = [c for c in VERSION_ORDER if c in columns]
+    by_sql = ", ".join(_bq(c) for c in by)
+    hint = (
+        f"/*+ REPARTITION({int(partitions)}, {_bq(BUCKET_COL)}) */ "
+        if partitions else ""
     )
     return (
-        df.groupBy(*keys)
-        .agg(F.max_by(pay, ords).alias("_w"))
-        .select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload])
+        f"SELECT {by_sql}, w.* FROM ("
+        f"SELECT {by_sql}, max_by(struct({', '.join(_bq(c) for c in payload)}), "
+        f"struct({', '.join(_bq(c) for c in order)})) AS w "
+        f"FROM (SELECT {hint}* FROM {rel}) GROUP BY {by_sql})"
+    )
+
+
+def resolve_latest(
+    df: DataFrame, keys: list[str], partitions: int | None = None
+) -> DataFrame:
+    """:func:`latest_sql` over a DataFrame: the resolver of the MoR
+    read, the change-feed diff and compaction."""
+    return df.sparkSession.sql(
+        latest_sql("{df}", df.columns, keys, partitions), df=df
     )
 
 
@@ -330,7 +370,7 @@ class LakeTable:
             df = df.where(F.col(self.bucket_column).isin(key_in_sorted))
         need_resolve = bool(delta_buckets) if resolve is None else resolve
         if need_resolve and self.key_columns and files:
-            df = _resolve_latest(df, list(manifest["key_columns"]))
+            df = resolve_latest(df, list(manifest["key_columns"]))
         if zone_between:
             # row-level twin of the zone-map file pruning — applied
             # AFTER MoR resolution, because a zone column is not the
@@ -568,7 +608,7 @@ class LakeTable:
                 old_m = old_m.withColumn(f.name, F.lit(None).cast(f.dataType))
 
         def visible(df):
-            res = _resolve_latest(df, keys)
+            res = resolve_latest(df, keys)
             if V_DEL in res.columns:
                 res = res.filter(~F.coalesce(F.col(V_DEL), F.lit(False)))
             return res.drop(*[c for c in HIDDEN_COLS if c in res.columns])

@@ -144,7 +144,12 @@ def _hash_ordered_sample(
     Small samples keep the one-pass TakeOrdered collect: per-partition
     top-n bounds the payload movement by sample_size × partitions, and
     the two-pass form costs an extra Spark job that dominates at the
-    correctness-fixture scale."""
+    correctness-fixture scale.
+
+    The returned array is read-only, for every caller: it is memoized
+    per ``vectors`` frame and shared by later calls. A caller that
+    transforms it in place (e.g. normalizing rows for k-means) must
+    copy it first; writing to it raises ``ValueError``."""
     memo_key = (id_col, vec_col, sample_size)
     try:
         per_df = _SAMPLE_MEMO.get(vectors)

@@ -1,10 +1,12 @@
 """Property-based check (hypothesis): for ANY change log — adversarial
-ties included — and ANY batch split, incrementally merging every batch
-into a LakeTable ends in exactly the state of the one-shot replay
-oracle. This is the engine's core identity; the generator deliberately
-produces duplicate (ts, op_seq) versions, deletes, redeliveries and
-out-of-order lsn to hit the tie-break lattice (ts, op_seq, is_src,
-gen, lsn)."""
+ties and null op_seq included — ANY batch split, either merge mode,
+with or without the stats pre-pass and with or without a compaction
+before the read, incrementally merging every batch into a LakeTable
+ends in exactly the state of the one-shot replay oracle. This is the
+engine's core identity; the generator deliberately produces duplicate
+(ts, op_seq) versions, deletes, redeliveries and out-of-order lsn to
+hit the tie-break lattice of the version order (ts, op_seq, gen,
+lsn)."""
 
 from __future__ import annotations
 
@@ -17,6 +19,7 @@ from pyspark.sql import functions as F
 
 from spark_cdc.cdc.apply import apply_batch, replay_changes_df
 from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
+from spark_cdc.lake.maintenance import compact
 from spark_cdc.lake.table import LakeTable
 
 BASE = datetime.datetime(2024, 1, 1, 0, 0, 0)
@@ -28,7 +31,7 @@ events = st.lists(
         st.integers(0, 2),                          # turn_idx
         st.sampled_from(["c", "u", "d"]),          # op
         st.integers(0, 5),                          # ts offset (seconds)
-        st.integers(0, 3),                          # op_seq
+        st.one_of(st.none(), st.integers(0, 3)),    # op_seq
         st.sampled_from(["x", "y", "z"]),          # text
     ),
     min_size=1,
@@ -55,8 +58,16 @@ def mk_table(spark, tmp_path_factory):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@given(evs=events, n_batches=st.integers(1, 4), mode=st.sampled_from(["cow", "mor"]))
-def test_incremental_merge_equals_oracle_on_any_log(spark, mk_table, evs, n_batches, mode):
+@given(
+    evs=events,
+    n_batches=st.integers(1, 4),
+    mode=st.sampled_from(["cow", "mor"]),
+    stats=st.booleans(),
+    compact_first=st.booleans(),
+)
+def test_incremental_merge_equals_oracle_on_any_log(
+    spark, mk_table, evs, n_batches, mode, stats, compact_first
+):
     rows = [
         (
             lsn,
@@ -88,8 +99,11 @@ def test_incremental_merge_equals_oracle_on_any_log(spark, mk_table, evs, n_batc
             log.where((F.col("lsn") >= lo) & (F.col("lsn") < hi)),
             batch_id=i,
             mode=mode,
+            collect_stats=stats,
             collect_lineage=False,
         )
+    if compact_first:
+        compact(table, max_files_per_bucket=0)
     cols = [f.name for f in PAYLOAD_SCHEMA.fields]
     got = sorted(tuple(r) for r in table.read().select(*cols).collect())
     want = sorted(

@@ -79,3 +79,59 @@ def test_mor_fast_path_no_stats(spark, tmp_path):
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
     assert_df_equal(mor.read(), expect, KEY_COLUMNS)
+
+
+def test_merge_quotes_hostile_identifiers(spark, tmp_path):
+    """The SQL-text merge plan and pre-pass quote what they embed:
+    payload columns named with a backtick, braces and a quote, and a
+    delete op carrying a quote, end equal to the one-shot replay in
+    every mode, with and without the stats pre-pass."""
+    import datetime
+    import random
+
+    from pyspark.sql import types as T
+
+    hostile = ["we`ird", "{br}ace", "it's"]
+    delete_op = "d'el"
+    payload = T.StructType(
+        [T.StructField("conv_id", T.StringType()), T.StructField("turn_idx", T.IntegerType())]
+        + [T.StructField(c, T.StringType()) for c in hostile]
+        + [T.StructField("ts", T.TimestampType())]
+    )
+    envelope = T.StructType(
+        [T.StructField("lsn", T.LongType()), T.StructField("op_seq", T.LongType()),
+         T.StructField("op", T.StringType())] + payload.fields
+    )
+    rnd = random.Random(7)
+    base = datetime.datetime(2024, 1, 1)
+    rows = [
+        (lsn, rnd.randint(0, 2), rnd.choice(["c", "u", delete_op]),
+         rnd.choice(["a", "b", "c"]), rnd.randint(0, 1),
+         f"w{lsn}", f"b{lsn}", f"q{lsn}", base + datetime.timedelta(seconds=rnd.randint(0, 3)))
+        for lsn in range(24)
+    ]
+    log = spark.createDataFrame(rows, envelope)
+    names = [f.name for f in payload.fields]
+    # the reference resolves columns by parsed name, so it replays the
+    # same log under plain names
+    plain = [f"h{hostile.index(c)}" if c in hostile else c for c in log.columns]
+    want = sorted(
+        tuple(r) for r in replay_changes_df(
+            log.toDF(*plain), ["conv_id", "turn_idx"], delete_op=delete_op
+        ).collect()
+    )
+    assert want, "the fixture must leave live rows"
+    for mode in ("cow", "mor"):
+        table = LakeTable.create(
+            spark, str(tmp_path / mode), payload,
+            key_columns=["conv_id", "turn_idx"], num_buckets=4,
+        )
+        # the pre-pass alternates, so runs with and without it meet stored rows
+        for i, stats in enumerate((True, False, True)):
+            apply_batch(
+                table, log.where((F.col("lsn") >= 8 * i) & (F.col("lsn") < 8 * i + 8)),
+                batch_id=i, mode=mode, delete_op=delete_op,
+                collect_stats=stats, collect_lineage=stats,
+            )
+        got = sorted(tuple(r.asDict()[c] for c in names) for r in table.read().collect())
+        assert got == want, mode

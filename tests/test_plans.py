@@ -67,15 +67,15 @@ def test_lsh_dedup_plan_has_no_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
 
 
-def test_mor_bulk_delta_is_single_exchange(spark, tmp_path):
-    """The bulk MoR dedup plan must shuffle exactly once (on the
-    bucket): HashPartitioning(bucket) satisfies groupBy(bucket, key)'s
+def test_merge_plan_is_single_exchange(spark, tmp_path):
+    """The one merge plan must shuffle exactly once (on the bucket) in
+    both modes, over every bucket (no pre-pass) and over a touched
+    subset: HashPartitioning(bucket) satisfies groupBy(bucket, key)'s
     clustering, so no second exchange may appear — the one-exchange
     property the 10^10-event ingest path depends on."""
-    from pyspark.sql import functions as F
-
+    from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
-    from spark_cdc.lake.merge import build_mor_bulk_delta
+    from spark_cdc.lake.merge import _merge_plan
     from spark_cdc.lake.table import LakeTable
     from spark_cdc.sources.changelog import generate_change_log
 
@@ -83,23 +83,19 @@ def test_mor_bulk_delta_is_single_exchange(spark, tmp_path):
         spark, str(tmp_path / "t"), PAYLOAD_SCHEMA, key_columns=KEY_COLUMNS, num_buckets=8
     )
     src = generate_change_log(spark, n_events=2000, n_convs=50, seed=1, partitions=4)
-    payload_cols = [f.name for f in table.user_schema.fields]
-    win_payload = F.struct(
-        *[F.col(c).alias(c) for c in payload_cols],
-        F.col("op").alias("__op"),
-        F.col("ts").cast("timestamp").alias("_v_ts"),
-        F.coalesce(F.col("op_seq").cast("long"), F.lit(-1)).alias("_v_seq"),
-    )
-    batch_ord = F.struct(F.col("ts"), F.col("op_seq"), F.col("lsn"))
-    delta = build_mor_bulk_delta(
-        src, table, KEY_COLUMNS, payload_cols, win_payload, batch_ord, "d", 1
-    )
-    delta.collect()
-    plan = delta._jdf.queryExecution().executedPlan().toString()
-    # AQE prints the final AND the initial plan; count only the final
-    final = plan.split("== Initial Plan ==")[0]
-    n_exchanges = final.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, final
+    # stored rows for the CoW side of the plan to read
+    apply_batch(table, src, batch_id=0, collect_stats=False, collect_lineage=False)
+    for mode in ("cow", "mor"):
+        for touched in (list(range(8)), [1, 5]):
+            plan_df = _merge_plan(
+                table, src, mode, touched, "op", "ts", "op_seq", "lsn", "d"
+            )
+            plan_df.collect()
+            plan = plan_df._jdf.queryExecution().executedPlan().toString()
+            # AQE prints the final AND the initial plan; count only the final
+            final = plan.split("== Initial Plan ==")[0]
+            assert final.count("Exchange hashpartitioning") == 1, (mode, touched, final)
+            assert "partial_max_by" in final, (mode, touched, final)
 
 
 def test_wholestage_codegen_in_flagship(spark):
@@ -107,85 +103,6 @@ def test_wholestage_codegen_in_flagship(spark):
     plan = _plan(spark, "tpch_q1_pricing_summary")
     assert "*(1)" in plan, plan
     assert "HashAggregate" in plan and "partial_sum" in plan, plan
-
-
-def test_mor_bulk_delta_sql_equals_dataframe_form(spark, tmp_path):
-    """The cached-SQL bulk delta (one parse/analyze per batch instead
-    of one per DataFrame transformation) must produce the exact same
-    rows AND keep the single-Exchange property."""
-    from pyspark.sql import functions as F
-
-    from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
-    from spark_cdc.lake.merge import build_mor_bulk_delta, build_mor_bulk_delta_sql
-    from spark_cdc.lake.table import LakeTable
-    from spark_cdc.sources.changelog import generate_change_log
-
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), PAYLOAD_SCHEMA, key_columns=KEY_COLUMNS, num_buckets=8
-    )
-    src = generate_change_log(spark, n_events=2000, n_convs=50, seed=1, partitions=4)
-    payload_cols = [f.name for f in table.user_schema.fields]
-    win_payload = F.struct(
-        *[F.col(c).alias(c) for c in payload_cols],
-        F.col("op").alias("__op"),
-        F.col("ts").cast("timestamp").alias("_v_ts"),
-        F.coalesce(F.col("op_seq").cast("long"), F.lit(-1)).alias("_v_seq"),
-    )
-    batch_ord = F.struct(
-        F.coalesce(F.col("ts").cast("timestamp"), F.to_timestamp(F.lit("1900-01-01"))),
-        F.coalesce(F.col("op_seq").cast("long"), F.lit(-1)),
-        F.col("lsn").cast("long"),
-    )
-    df_form = build_mor_bulk_delta(
-        src, table, KEY_COLUMNS, payload_cols, win_payload, batch_ord, "d", 7
-    )
-    sql_form = build_mor_bulk_delta_sql(
-        src, table, KEY_COLUMNS, "op", "ts", "op_seq", "lsn", "d", 7
-    )
-    assert sorted(df_form.columns) == sorted(sql_form.columns)
-    cols = sorted(df_form.columns)
-    a = sorted(tuple(r[c] for c in cols) for r in df_form.collect())
-    b = sorted(tuple(r[c] for c in cols) for r in sql_form.collect())
-    assert a == b
-    plan = sql_form._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange hashpartitioning") == 1, final
-
-
-def test_cow_bulk_sql_replay_reference_equal_and_single_exchange(spark, tmp_path):
-    """The cached-SQL CoW bulk path must end reference-equal to the
-    one-shot replay oracle across multi-batch replays (updates,
-    deletes, duplicates, out-of-order lsn) and keep the one-exchange
-    plan shape."""
-    from pyspark.sql import functions as F
-
-    from spark_cdc.cdc.apply import apply_batch, replay_changes_df
-    from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
-    from spark_cdc.lake.merge import build_cow_bulk_resolved_sql
-    from spark_cdc.lake.table import LakeTable
-    from spark_cdc.sources.changelog import generate_change_log
-
-    log = generate_change_log(
-        spark, n_events=4000, n_convs=80, seed=3, partitions=4
-    ).localCheckpoint()
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), PAYLOAD_SCHEMA, key_columns=KEY_COLUMNS, num_buckets=8
-    )
-    for i in range(4):
-        batch = log.where((F.col("lsn") >= i * 1000) & (F.col("lsn") < (i + 1) * 1000))
-        apply_batch(table, batch, batch_id=i, mode="cow",
-                    collect_stats=False, collect_lineage=False)
-    got = table.read()
-    want = replay_changes_df(log, KEY_COLUMNS).select(*got.columns)
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-    tgt = table.read(include_hidden=True, resolve=False)
-    resolved = build_cow_bulk_resolved_sql(
-        log.limit(100), tgt, table, KEY_COLUMNS, "op", "ts", "op_seq", "lsn", "d"
-    )
-    plan = resolved._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange hashpartitioning") == 1, final
 
 
 def test_dedup_corpus_plan_scales(spark):

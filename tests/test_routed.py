@@ -148,3 +148,57 @@ def test_routed_merges_run_concurrently(spark, tmp_path, monkeypatch):
     res = apply_mod.apply_batch_routed(tables, env, batch_id=0)
     assert set(res) == set(tables)
     assert state["peak"] >= 2, "per-table merges ran sequentially"
+
+
+def test_routed_pool_bounded_by_max_parallel(spark, tmp_path, monkeypatch):
+    """``max_parallel`` bounds the jobs in flight: the unknown-topic
+    count shares a slot with the merges instead of adding one."""
+    import spark_cdc.cdc.apply as apply_mod
+
+    state = {"live": 0, "peak": 0}
+    lock = threading.Lock()
+
+    def busy(result):
+        with lock:
+            state["live"] += 1
+            state["peak"] = max(state["peak"], state["live"])
+        time.sleep(0.2)
+        with lock:
+            state["live"] -= 1
+        return result
+
+    env = _changes(
+        spark, [(1, 1, "c", "c0", 0, "user", "x", None, None, "t0")]
+    )
+    monkeypatch.setattr(apply_mod, "apply_batch", lambda table, changes, **kw: busy("ok"))
+    monkeypatch.setattr(type(env), "count", lambda self: busy(0))
+    tables = {f"t{i}": object() for i in range(4)}
+    apply_mod.apply_batch_routed(tables, env, batch_id=0, max_parallel=2)
+    assert state["peak"] == 2, state
+
+
+def test_routed_count_failure_keeps_per_table_outcomes(spark, tmp_path, monkeypatch):
+    """A failing unknown-topic count must not mask RoutedApplyError:
+    the error still names the failed table and the committed one, and
+    carries the count failure under ``_unknown``."""
+    ta = _mk_table(spark, tmp_path, "a")
+
+    class _BoomTable:
+        def __getattr__(self, name):
+            raise RuntimeError("boom: table b unavailable")
+
+    env = _changes(spark, [
+        (1, 1, "c", "conv-a", 0, "user", "ok-a", None, None, "a"),
+        (2, 2, "c", "conv-b", 0, "user", "ok-b", None, None, "b"),
+    ])
+
+    def boom_count(self):
+        raise RuntimeError("boom: unknown-topic count")
+
+    monkeypatch.setattr(type(env), "count", boom_count)
+    with pytest.raises(RoutedApplyError) as ei:
+        apply_batch_routed({"a": ta, "b": _BoomTable()}, env, batch_id=0, source_id="s")
+    monkeypatch.undo()
+    assert set(ei.value.failed) == {"b", "_unknown"}
+    assert ei.value.succeeded == ["a"]
+    assert ta.read().count() == 1
