@@ -27,6 +27,27 @@ import sys
 from pyspark.sql import functions as F
 
 
+def _stop_on_signal():
+    """Install flag-only SIGTERM/SIGINT handlers; return the
+    ``should_stop()`` that reads the flag.
+
+    A service loop checks it at iteration boundaries, so an in-flight
+    poll or micro-batch commits before exit. The handler must ONLY set
+    the flag: the main thread may be blocked inside a py4j recv, and a
+    py4j call from the handler would interleave on that same socket and
+    corrupt the protocol (PEP 475 retries the interrupted recv after the
+    handler returns). Handlers can only be installed from the main
+    thread; elsewhere the flag never sets."""
+    import signal
+    import threading
+
+    stop_requested: list[int] = []
+    if threading.current_thread() is threading.main_thread():
+        for sig in (signal.SIGTERM, signal.SIGINT):
+            signal.signal(sig, lambda signum, frame: stop_requested.append(signum))
+    return lambda: bool(stop_requested)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="spark_cdc")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -300,7 +321,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "feed-mirror":
         from spark_cdc.cdc.apply import apply_batch
-        from spark_cdc.lake.feed import ChangeFeedConsumer, feed_to_changes
+        from spark_cdc.lake.feed import ChangeFeedConsumer, feed_to_changes, follow
 
         src = LakeTable.load(spark, args.source_table)
         if LakeTable.exists(args.mirror):
@@ -326,30 +347,13 @@ def main(argv: list[str] | None = None) -> int:
             apply_diff(diff, to_snap)
             c.commit(to_snap)
 
-        if args.follow:
-            import signal
-            import threading
-
-            from spark_cdc.lake.feed import follow
-
-            stop_requested: list[int] = []
-            if threading.current_thread() is threading.main_thread():
-                # flag-only handlers, same discipline as `stream
-                # --continuous`: the loop checks the flag at iteration
-                # boundaries, so an in-flight poll commits before exit
-                signal.signal(signal.SIGTERM, lambda s, f: stop_requested.append(s))
-                signal.signal(signal.SIGINT, lambda s, f: stop_requested.append(s))
-            polls = follow(
-                consumer, apply_diff,
-                interval_sec=args.interval,
-                should_stop=lambda: bool(stop_requested),
-                on_expired=recover,
-            )
-        else:
-            from spark_cdc.lake.feed import follow
-
-            polls = follow(consumer, apply_diff, interval_sec=0.0,
-                           max_idle_polls=1, on_expired=recover)
+        polls = follow(
+            consumer, apply_diff,
+            interval_sec=args.interval if args.follow else 0.0,
+            should_stop=_stop_on_signal() if args.follow else None,
+            max_idle_polls=None if args.follow else 1,
+            on_expired=recover,
+        )
         print(json.dumps({
             "polls": polls,
             "cursor": consumer.position(),
@@ -358,11 +362,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "index-follow":
-        from spark_cdc.lake.feed import ChangeFeedConsumer
+        from spark_cdc.lake.feed import ChangeFeedConsumer, follow
         from spark_cdc.operators.index_maint import (
             MaintainedBM25Index,
             create_bm25_index_table,
-            follow_index,
         )
 
         docs = LakeTable.load(spark, args.docs_table)
@@ -377,23 +380,16 @@ def main(argv: list[str] | None = None) -> int:
             idx_tbl, ChangeFeedConsumer(docs, args.cursor),
             text_col=args.text_col, id_col=args.id_col,
         )
-        if args.follow:
-            import signal
-            import threading
-
-            stop_requested: list[int] = []
-            if threading.current_thread() is threading.main_thread():
-                # flag-only handlers (same discipline as `stream
-                # --continuous`): the loop checks at iteration
-                # boundaries, so an in-flight poll commits before exit
-                signal.signal(signal.SIGTERM, lambda s, f: stop_requested.append(s))
-                signal.signal(signal.SIGINT, lambda s, f: stop_requested.append(s))
-            polls = follow_index(
-                maint, interval_sec=args.interval,
-                should_stop=lambda: bool(stop_requested),
-            )
-        else:
-            polls = follow_index(maint, interval_sec=0.0, max_idle_polls=1)
+        # a retention-lapped cursor self-heals with a full rebuild
+        # instead of ending the service with a traceback
+        polls = follow(
+            maint.consumer, maint.apply_diff,
+            interval_sec=args.interval if args.follow else 0.0,
+            should_stop=_stop_on_signal() if args.follow else None,
+            max_idle_polls=None if args.follow else 1,
+            on_expired=lambda _c: maint.rebuild(),
+            include_preimage=maint.include_preimage,
+        )
         out = {
             "polls": polls,
             "cursor": maint.consumer.position(),
@@ -551,32 +547,19 @@ def main(argv: list[str] | None = None) -> int:
             ),
         )
         if args.continuous:
-            import signal
-
             q = runner.start_continuous()
 
             # graceful shutdown (reference consumer.py:111-139 installed
             # SIGINT/SIGTERM handlers): stop() lets the in-flight
             # micro-batch finish and the checkpoint commit, so restart
             # resumes exactly where we left off — no reliance on the
-            # redelivery guard for a ROUTINE shutdown.
-            # The handler must ONLY set a flag: the main thread is
-            # blocked inside a py4j recv (awaitTermination), and a py4j
-            # call from the handler would interleave on that same
-            # socket and corrupt the protocol. PEP 475 retries the
-            # interrupted recv after the handler returns, so the short
-            # poll below wakes, sees the flag, and stops the query from
-            # a clean call site.
-            stop_requested: list[int] = []
-
-            def _flag(signum, frame):
-                stop_requested.append(signum)
-
-            signal.signal(signal.SIGTERM, _flag)
-            signal.signal(signal.SIGINT, _flag)
-            while not stop_requested and q.isActive:
+            # redelivery guard for a ROUTINE shutdown. The short wait
+            # below wakes, sees the flag, and stops the query from a
+            # clean call site.
+            should_stop = _stop_on_signal()
+            while not should_stop() and q.isActive:
                 q.awaitTermination(1.0)
-            if stop_requested:
+            if should_stop():
                 q.stop()
             q.awaitTermination()
             print(

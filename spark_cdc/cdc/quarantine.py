@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_cdc.lake.table import LakeTable
+from spark_cdc.lake.table import LakeTable, with_batch_id
 
 REASON_COL = "_q_reason"
 
@@ -108,8 +108,7 @@ class DeadLetterSink:
         guard — keyed **per source_id**, so a router fanning one batch
         out to many tables must pass each table its own source id (see
         :func:`spark_cdc.cdc.apply.apply_batch_routed`)."""
-        last = self.table.properties.get("last_batch_id", {}).get(source_id)
-        if batch_id is not None and last is not None and batch_id <= last:
+        if self.table.has_committed(source_id, batch_id):
             return self.table.snapshot_id
         if bad.isEmpty():
             # nothing written → nothing a redelivery could duplicate;
@@ -135,18 +134,12 @@ class DeadLetterSink:
         with self._lock:
             # re-check under the lock: a concurrent thread with the
             # same source_id (stream retry racing) may have committed
-            last = self.table.properties.get("last_batch_id", {}).get(source_id)
-            if batch_id is not None and last is not None and batch_id <= last:
+            if self.table.has_committed(source_id, batch_id):
                 return self.table.snapshot_id
-            props = dict(self.table.properties)
-            if batch_id is not None:
-                lb = dict(props.get("last_batch_id", {}))
-                lb[source_id] = batch_id
-                props["last_batch_id"] = lb
             return self.table.append(
                 out,
                 summary={"operation": "quarantine", "source_id": source_id, "batch_id": batch_id},
-                properties=props,
+                properties=with_batch_id(self.table.properties, batch_id, source_id),
             )
 
     def read(self) -> DataFrame:

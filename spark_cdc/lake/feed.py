@@ -1,4 +1,5 @@
-"""Incremental downstream consumption of a LakeTable's change feed.
+"""Incremental downstream consumption of a LakeTable's change feed,
+and the one exactly-once protocol every derived table follows.
 
 The reference had no incremental-consumption story: every downstream
 read re-scanned full tables (/root/reference/etl/core/pipeline.py:
@@ -6,19 +7,34 @@ read re-scanned full tables (/root/reference/etl/core/pipeline.py:
 with a persisted snapshot cursor — the same poll → process → commit
 offset discipline the reference's Kafka consumer used for its ingress
 (/root/reference/stream_etl/core/consumer.py:86-109), now available on
-the egress side:
+the egress side.
 
-    consumer = ChangeFeedConsumer(table, cursor_path)
-    got = consumer.poll()          # None when caught up
-    if got:
-        diff, to_snap = got
-        ... apply diff downstream ...
-        consumer.commit(to_snap)   # advance cursor AFTER downstream commit
+The protocol has two halves, each defined once:
 
-Crash between process and commit ⇒ the next poll returns the same diff
-(at-least-once); an idempotent downstream apply (e.g. ``apply_batch``
-into another LakeTable, which is a latest-version-wins MERGE) makes the
-pipeline exactly-once end to end.
+- **Ingress guard** (:meth:`LakeTable.has_committed` +
+  :func:`~spark_cdc.lake.table.with_batch_id`): a table commit records
+  its batch id per source in the snapshot properties, in the same
+  commit as the data, and a batch at or below the recorded id is
+  skipped. ``merge_changes``, the rollups, the distinct view and the
+  dead-letter sink all use it.
+- **Egress step** (:func:`poll_once`, looped by :func:`follow`): poll
+  the feed; apply the diff downstream under batch id = the diff's
+  ``to_snapshot``; then commit the cursor. Every derived-table writer
+  (feed mirrors, ``maintain_from_feed`` views, the maintained indexes
+  of :mod:`spark_cdc.operators.index_maint`) runs this step and no
+  other::
+
+    follow(consumer, apply_fn, interval_sec=0.0, max_idle_polls=1)
+    # apply_fn(diff, to_snap) writes under batch_id=to_snap
+
+The one place a crash can land between the downstream commit and the
+cursor commit is inside :func:`poll_once` (an ``on_expired`` rebuild
+commits the same way: data under the head's snapshot id, then the
+cursor). The next poll then returns
+the same diff with the same ``to_snapshot`` (at-least-once), and the
+ingress guard skips the redelivered apply, which makes the pipeline
+exactly-once end to end. (A consumer whose apply is a latest-version-
+wins MERGE is idempotent even without the guard.)
 
 Scale: a poll costs O(change set) — ``read_changes`` reads only buckets
 whose manifest file lists differ between the cursor snapshot and the
@@ -123,6 +139,20 @@ class ChangeFeedConsumer:
         os.replace(tmp, self.cursor_path)
 
 
+def poll_once(consumer: ChangeFeedConsumer, apply_fn, include_preimage: bool = False) -> bool:
+    """The egress step of the module's protocol: poll →
+    ``apply_fn(diff, to_snap)`` → commit the cursor. False when caught
+    up. ``apply_fn`` must make its downstream effect durable under
+    batch id ``to_snap`` before it returns."""
+    got = consumer.poll(include_preimage=include_preimage)
+    if got is None:
+        return False
+    diff, to_snap = got
+    apply_fn(diff, to_snap)
+    consumer.commit(to_snap)
+    return True
+
+
 def follow(
     consumer: ChangeFeedConsumer,
     apply_fn,
@@ -130,53 +160,51 @@ def follow(
     should_stop=None,
     max_idle_polls: int | None = None,
     on_expired=None,
+    include_preimage: bool = False,
 ) -> int:
-    """Service loop over the feed: poll → ``apply_fn(diff, to_snap)`` →
-    commit, sleeping ``interval_sec`` between caught-up polls — the
-    egress twin of the reference's consumer poll loop
+    """The feed loop: :func:`poll_once` until stopped, sleeping
+    ``interval_sec`` between caught-up polls — the egress twin of the
+    reference's consumer poll loop
     (/root/reference/stream_etl/core/consumer.py:86-109).
 
     ``should_stop()`` (e.g. a signal-set flag) ends the loop at the
     next iteration boundary, after any in-flight apply+commit completes
     — the same graceful-shutdown discipline as ``stream --continuous``.
     ``max_idle_polls`` ends it after that many consecutive caught-up
-    polls (catch-up mode / tests). Returns the number of applied polls.
+    polls: ``interval_sec=0.0, max_idle_polls=1`` drains the feed and
+    returns (catch-up mode). ``include_preimage`` passes through to
+    :meth:`ChangeFeedConsumer.poll` (retraction consumers need both
+    images). Returns the number of applied polls.
 
     ``on_expired(consumer)`` is the :class:`FeedExpiredError` recovery
-    hook for service mode — without it a long-running follower dies
-    with a traceback the moment snapshot retention overtakes its
+    hook — without it the error propagates, so a long-running follower
+    dies with a traceback the moment snapshot retention overtakes its
     cursor. The hook must restore a consistent downstream state AND
     commit the cursor (merge-idempotent mirrors: apply
-    :meth:`ChangeFeedConsumer.bootstrap` + commit); the loop then
-    resumes normal polling.
+    :meth:`ChangeFeedConsumer.bootstrap` + commit; retraction views and
+    indexes: rebuild from the source keyed on its head snapshot); the
+    loop counts it as a poll and resumes normal polling.
     """
     import time
 
     polls = 0
     idle = 0
-    while True:
-        if should_stop is not None and should_stop():
-            break
+    while should_stop is None or not should_stop():
         try:
-            got = consumer.poll()
+            applied = poll_once(consumer, apply_fn, include_preimage)
         except FeedExpiredError:
             if on_expired is None:
                 raise
             on_expired(consumer)
+            applied = True
+        if applied:
             polls += 1
             idle = 0
             continue
-        if got is None:
-            idle += 1
-            if max_idle_polls is not None and idle >= max_idle_polls:
-                break
-            time.sleep(interval_sec)
-            continue
-        idle = 0
-        diff, to_snap = got
-        apply_fn(diff, to_snap)
-        consumer.commit(to_snap)
-        polls += 1
+        idle += 1
+        if max_idle_polls is not None and idle >= max_idle_polls:
+            break
+        time.sleep(interval_sec)
     return polls
 
 

@@ -53,7 +53,6 @@ the driver where the DataFrame API analyzes once per transformation.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 from typing import Any
@@ -71,6 +70,7 @@ from spark_cdc.lake.table import (
     LakeTable,
     _bq,
     latest_sql,
+    with_batch_id,
 )
 
 ENVELOPE_COLS = ("op", "lsn", "op_seq")
@@ -151,8 +151,7 @@ def merge_changes(
     if mode not in ("cow", "mor"):
         raise ValueError(f"unknown merge mode {mode!r} (expected 'cow' or 'mor')")
 
-    last = table.properties.get("last_batch_id", {}).get(source_id)
-    if batch_id is not None and last is not None and batch_id <= last:
+    if table.has_committed(source_id, batch_id):
         return MergeResult(snapshot_id=table.snapshot_id, skipped=True)
 
     # -- schema evolution: payload columns not yet in the table schema
@@ -180,7 +179,7 @@ def merge_changes(
             res = MergeResult(snapshot_id=table.snapshot_id)
             res.wall_ms = (time.monotonic() - t0) * 1000
             if batch_id is not None:
-                table.set_properties(_with_batch_id(table.properties, batch_id, source_id))
+                table.set_properties(with_batch_id(table.properties, batch_id, source_id))
             return res
         batch_rows = sum(r["rows"] or 0 for r in stat_rows)
         lsns = [r["min_lsn"] for r in stat_rows if r["min_lsn"] is not None]
@@ -198,7 +197,7 @@ def merge_changes(
     plan = _merge_plan(
         table, changes, mode, touched, op_col, ts_col, seq_col, lsn_col, delete_op
     )
-    props = _with_batch_id(
+    props = with_batch_id(
         {**table.properties, **(extra_properties or {})}, batch_id, source_id
     )
     summary = {
@@ -220,7 +219,7 @@ def merge_changes(
         snap_id = table.overwrite_buckets(plan, touched, props, summary)
 
     rows_written, files_written = (
-        _written_stats(table) if collect_stats else (-1, -1)
+        (table.last_write_rows, table.last_write_files) if collect_stats else (-1, -1)
     )
     res = MergeResult(
         snapshot_id=snap_id,
@@ -329,19 +328,6 @@ def _batch_stats(
     ).collect()
 
 
-def _with_batch_id(
-    props: dict[str, Any], batch_id: int | None, source_id: str
-) -> dict[str, Any]:
-    """``props`` with ``source_id``'s last committed batch id set to
-    ``batch_id`` — the record the exactly-once guard reads."""
-    if batch_id is None:
-        return dict(props)
-    return {
-        **props,
-        "last_batch_id": {**props.get("last_batch_id", {}), source_id: batch_id},
-    }
-
-
 def _phases(stats_ms: float, table: LakeTable, wall_ms: float) -> dict[str, float]:
     """Per-phase breakdown of one merge: the residual (plan_ms) is
     driver-side py4j plan construction + scheduling."""
@@ -353,21 +339,3 @@ def _phases(stats_ms: float, table: LakeTable, wall_ms: float) -> dict[str, floa
         "commit_ms": round(commit_ms, 1),
         "plan_ms": round(max(wall_ms - stats_ms - exec_ms - commit_ms, 0.0), 1),
     }
-
-
-def _written_stats(table: LakeTable) -> tuple[int, int]:
-    """Rows/files written by the snapshot just committed, read from
-    parquet footers (no extra Spark action)."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
-        return 0, 0
-    snap_tag = f"snap{table.snapshot_id}-"
-    rows = 0
-    nfiles = 0
-    for flist in table.manifest["files"].values():
-        for rel in flist:
-            if snap_tag in rel:
-                rows += pq.ParquetFile(os.path.join(table.path, rel)).metadata.num_rows
-                nfiles += 1
-    return rows, nfiles

@@ -35,6 +35,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import uuid
@@ -74,6 +75,21 @@ V_LSN = "_lsn"
 VERSION_ORDER = (V_TS, V_SEQ, V_GEN, V_LSN)
 
 
+# snapshot property: source id → last committed batch id
+_BATCH_IDS = "last_batch_id"
+
+
+def with_batch_id(
+    props: dict[str, Any], batch_id: int | None, source_id: str
+) -> dict[str, Any]:
+    """``props`` with ``source_id``'s last committed batch id set to
+    ``batch_id`` — the record :meth:`LakeTable.has_committed` reads.
+    Commit it in the same snapshot as the batch's data."""
+    if batch_id is None:
+        return dict(props)
+    return {**props, _BATCH_IDS: {**props.get(_BATCH_IDS, {}), source_id: batch_id}}
+
+
 class CommitConflictError(RuntimeError):
     """Optimistic-concurrency commit failure: another writer committed
     a snapshot with this id first (Iceberg ``CommitFailedException``
@@ -97,17 +113,15 @@ def _zone_value(v):
     mixed-precision safe: a shorter stamp is a prefix of, and sorts
     before, its sub-second extension). Anything else → None (never
     prune on it)."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
+    if isinstance(v, datetime.datetime):
         if v.tzinfo is not None:
             # footers for TIMESTAMP (adjusted-to-UTC) may surface
             # tz-aware values; normalize to naive UTC so probe and
             # stat render identically (a stray "+00:00" suffix would
             # mis-order exact-boundary comparisons)
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
         return v.isoformat(sep=" ")
-    if isinstance(v, _dt.date):
+    if isinstance(v, datetime.date):
         return v.isoformat()
     if isinstance(v, bytes):
         try:
@@ -180,6 +194,9 @@ class LakeTable:
         # commit — per-phase lineage for MergeResult.phases and bench
         self.last_write_ms = 0.0
         self.last_commit_ms = 0.0
+        # rows/files the most recent _write_data wrote (MergeResult)
+        self.last_write_rows = 0
+        self.last_write_files = 0
         # per-file [min,max] key stats from the most recent _write_data,
         # folded into the manifest by _commit_next
         self._last_write_stats: dict[str, list] = {}
@@ -278,6 +295,16 @@ class LakeTable:
     @property
     def properties(self) -> dict[str, Any]:
         return self.manifest["properties"]
+
+    def has_committed(self, source_id: str, batch_id: int | None) -> bool:
+        """The exactly-once guard: True when ``batch_id`` is at or below
+        the last batch id this table committed for ``source_id`` (kept
+        in snapshot properties, see :func:`with_batch_id` — the Delta
+        ``txnAppId``/``txnVersion`` idempotent-sink pattern), so a
+        redelivered batch must be skipped. Always False without a batch
+        id."""
+        last = self.properties.get(_BATCH_IDS, {}).get(source_id)
+        return batch_id is not None and last is not None and batch_id <= last
 
     def history(self) -> list[dict[str, Any]]:
         """All snapshot manifests, oldest first (time-travel index)."""
@@ -533,13 +560,7 @@ class LakeTable:
         )
 
     def _diff_sides(
-        self,
-        m_from: dict[str, Any],
-        m_to: dict[str, Any],
-        from_id: int,
-        to_id: int,
-        changed: list[int],
-        keys: list[str],
+        self, m_from: dict[str, Any], m_to: dict[str, Any], changed: list[int]
     ):
         """(old, new) VISIBLE-row DataFrames feeding the change-feed
         outer join — with an append-only fast path.
@@ -569,6 +590,8 @@ class LakeTable:
         Falls back to the general two-snapshot form whenever any bucket
         saw files removed or reordered (CoW merges, compaction,
         z-order, GC) — the prefix check below."""
+        from_id, to_id = m_from["snapshot_id"], m_to["snapshot_id"]
+        keys = list(m_to["key_columns"])
         appended: list[str] = []
         append_only = True
         for b in set(m_from["files"]) | set(m_to["files"]):
@@ -679,9 +702,7 @@ class LakeTable:
         )
         if not changed:
             return self.spark.createDataFrame([], schema_out)
-        old, new = self._diff_sides(
-            m_from, m_to, from_snapshot_id, to_id, changed, keys
-        )
+        old, new = self._diff_sides(m_from, m_to, changed)
         # schema evolution between the snapshots: null-fill columns the
         # old snapshot predates (ADD COLUMN read semantics)
         for c in to_user:
@@ -730,7 +751,6 @@ class LakeTable:
         table has a bucket spec, else lands in bucket 0. ``properties``
         replaces the snapshot properties in the same commit (used for
         exactly-once batch-id bookkeeping on append-only sinks)."""
-        new_id = self.snapshot_id + 1
         df = self._conform(df)
         if self.bucket_column:
             df = df.withColumn(
@@ -738,17 +758,15 @@ class LakeTable:
             )
         else:
             df = df.withColumn(BUCKET_COL, F.lit(0))
-        new_files = self._write_data(df, new_id)
+        new_files = self._write_data(df)
         files = {k: list(v) for k, v in self.manifest["files"].items()}
         for b, fl in new_files.items():
             files.setdefault(b, []).extend(fl)
-        self._commit_next(
-            new_id,
+        return self._commit_next(
             files,
             properties if properties is not None else dict(self.properties),
             summary or {"operation": "append"},
         )
-        return new_id
 
     def overwrite_buckets(
         self,
@@ -766,8 +784,7 @@ class LakeTable:
         their delta flag clears. ``presorted`` skips the key-order
         sortWithinPartitions for callers that already arranged rows
         (z-order rewrite)."""
-        new_id = self.snapshot_id + 1
-        new_files = self._write_data(df, new_id, presorted=presorted)
+        new_files = self._write_data(df, presorted=presorted)
         files = {
             b: list(fl)
             for b, fl in self.manifest["files"].items()
@@ -779,14 +796,12 @@ class LakeTable:
             set(int(b) for b in self.manifest.get("delta_buckets", []))
             - set(touched_buckets)
         )
-        self._commit_next(
-            new_id,
+        return self._commit_next(
             files,
             properties if properties is not None else dict(self.properties),
             summary or {"operation": "overwrite_buckets"},
             delta_buckets=deltas,
         )
-        return new_id
 
     def append_deltas(
         self,
@@ -800,8 +815,7 @@ class LakeTable:
         data. Ingest cost is O(batch); reads of flagged buckets resolve
         latest-version on the fly until :func:`spark_cdc.lake.
         maintenance.compact` folds them."""
-        new_id = self.snapshot_id + 1
-        new_files = self._write_data(df, new_id)
+        new_files = self._write_data(df)
         files = {b: list(fl) for b, fl in self.manifest["files"].items()}
         for b, fl in new_files.items():
             files.setdefault(b, []).extend(fl)
@@ -813,14 +827,12 @@ class LakeTable:
             set(int(b) for b in self.manifest.get("delta_buckets", []))
             | set(touched_buckets)
         )
-        self._commit_next(
-            new_id,
+        return self._commit_next(
             files,
             properties if properties is not None else dict(self.properties),
             summary or {"operation": "append_deltas"},
             delta_buckets=deltas,
         )
-        return new_id
 
     def add_columns(self, fields: list[T.StructField]) -> None:
         """Schema evolution: ADD COLUMN (nullable, null backfill on read).
@@ -883,19 +895,20 @@ class LakeTable:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         return df.select(*cols)
 
-    def _write_data(
-        self, df: DataFrame, snapshot_id: int, presorted: bool = False
-    ) -> dict[str, list[str]]:
-        """Write df (with ``_bucket``) partitioned by bucket; return
-        relative file paths per bucket. Wall time of the write job (the
-        Spark action that executes the whole merge plan) is recorded in
-        ``last_write_ms`` for per-phase lineage/bench reporting."""
+    def _write_data(self, df: DataFrame, presorted: bool = False) -> dict[str, list[str]]:
+        """Write df (with ``_bucket``) partitioned by bucket, as files of
+        the next snapshot; return relative file paths per bucket. Wall
+        time of the write job (the Spark action that executes the whole
+        merge plan) is recorded in ``last_write_ms`` for per-phase
+        lineage/bench reporting."""
         import time as _time
 
         t0 = _time.monotonic()
         self._last_write_stats = {}
         self._last_write_col_stats = {}
-        rel_dir = os.path.join(DATA_DIR, f"snap{snapshot_id}-{uuid.uuid4().hex[:8]}")
+        self.last_write_rows = 0
+        self.last_write_files = 0
+        rel_dir = os.path.join(DATA_DIR, f"snap{self.snapshot_id + 1}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
         if presorted:
             pass  # caller already ordered the partitions (e.g. z-order)
@@ -926,168 +939,114 @@ class LakeTable:
                 for f in sorted(os.listdir(bdir))
                 if f.endswith(".parquet")
             ]
-        self._last_write_stats = self._collect_file_stats(files)
-        extra = [
-            c for c in self.properties.get("stats_columns", [])
-            if c != self.bucket_column and c in {f.name for f in self.schema.fields}
-        ]
-        if extra:
-            self._last_write_col_stats = self._collect_col_stats(files, extra)
+        self._collect_footer_stats(files)
         self.last_write_ms = (_time.monotonic() - t0) * 1000
         return files
 
-    def _collect_file_stats(self, files: dict[str, list[str]]) -> dict[str, list]:
-        """Per-file [min, max] of the bucket column from parquet
-        footers (files are sorted by key, so ranges are tight) —
-        powers manifest-level data-file skipping (``read(key_between=
-        ...)``), the Iceberg per-file column-stats analogue.
+    def _collect_footer_stats(self, files: dict[str, list[str]]) -> None:
+        """One footer read per written file, recording three things for
+        the next commit: the row count (``last_write_rows``), the
+        [min, max] of the bucket column, and the [min, max] zone maps of
+        the table's ``stats_columns`` property.
+
+        The bucket-column ranges power manifest-level file skipping
+        (``read(key_between=...)``, ``key_in``), the Iceberg per-file
+        column-stats analogue; files are sorted by key, so ranges are
+        tight. They are recorded only when they serialize safely AND
+        order consistently between parquet (UTF-8 bytes) and Python
+        (codepoints) — ints, floats, ASCII strings; not datetimes,
+        because ``key_between`` compares raw probe values. The zone
+        maps power ``read(zone_between=...)`` skipping on columns OTHER
+        than the bucket key (ClickHouse's multi-column ``ORDER BY
+        (campaign_id, event_date)`` primary index, reference
+        init.sql:41; Delta/Iceberg column-stats skipping after a
+        Z-ORDER rewrite); their temporal values are normalized to
+        ISO-8601 strings (lexicographic == chronological), so probes
+        must use matching datetime/date objects. A file or column
+        without a recorded range is never pruned.
 
         Footers are read driver-side here (a commit writes ≤ #buckets
         files, each footer is a few KB); on a real cluster the write
-        tasks return these stats with their commit messages, as
-        Iceberg writers do — the manifest shape is identical. Values
-        are recorded only when they serialize safely AND order
-        consistently between parquet (UTF-8 bytes) and Python
-        (codepoints): ints, floats, ASCII strings. Files without a
-        recorded range are never pruned.
+        tasks return these stats with their commit messages, as Iceberg
+        writers do — the manifest shape is identical.
         """
         col = self.bucket_column
-        if not col:
-            return {}
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            return {}
-
-        def safe(v):
-            if isinstance(v, bytes):
-                try:
-                    v = v.decode("utf-8")
-                except UnicodeDecodeError:
-                    return None
-            if isinstance(v, str):
-                return v if v.isascii() else None
-            if isinstance(v, (int, float)) and not isinstance(v, bool):
-                return v
-            return None
-
-        def one(rel: str):
-            try:
-                md = pq.read_metadata(os.path.join(self.path, rel))
-            except Exception:
-                return rel, None
-            idx = next(
-                (
-                    j
-                    for j in range(md.num_columns)
-                    if md.row_group(0).column(j).path_in_schema == col
-                ),
-                None,
-            ) if md.num_row_groups else None
-            if idx is None:
-                return rel, None
-            mins, maxs = [], []
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return rel, None
-                lo, hi = safe(st.min), safe(st.max)
-                if lo is None or hi is None:
-                    return rel, None
-                mins.append(lo)
-                maxs.append(hi)
-            return rel, ([min(mins), max(maxs)] if mins else None)
-
+        zone_cols = [
+            c for c in self.properties.get("stats_columns", [])
+            if c != col and c in {f.name for f in self.schema.fields}
+        ]
         rels = [rel for fl in files.values() for rel in fl]
-        out: dict[str, list] = {}
-        if len(rels) > 4:
-            # footer reads are independent tiny I/O; a commit writes up
-            # to one file per bucket and the serial loop was a visible
-            # driver-side slice of every micro-batch
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(min(8, len(rels))) as ex:
-                results = list(ex.map(one, rels))
-        else:
-            results = [one(rel) for rel in rels]
-        for rel, rng in results:
-            if rng is not None:
-                out[rel] = rng
-        return out
-
-    def _collect_col_stats(
-        self, files: dict[str, list[str]], cols: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """Per-file [min, max] zone maps for ``cols`` (the table's
-        ``stats_columns`` property) from parquet footers — the
-        multi-column twin of :meth:`_collect_file_stats`, powering
-        ``read(zone_between=...)`` file skipping on columns OTHER than
-        the bucket key (ClickHouse's multi-column ``ORDER BY
-        (campaign_id, event_date)`` primary index, reference
-        init.sql:41; Delta/Iceberg column-stats skipping after a
-        Z-ORDER rewrite). Temporal values are normalized to ISO-8601
-        strings (lexicographic == chronological), so probes must use
-        matching datetime/date objects. A column missing stats in a
-        file never prunes that file."""
+        self.last_write_files = len(rels)
+        if not col and not zone_cols:
+            return
         try:
             import pyarrow.parquet as pq
         except ImportError:
-            return {}
+            return
 
         def one(rel: str):
             try:
                 md = pq.read_metadata(os.path.join(self.path, rel))
             except Exception:
-                return rel, None
-            if not md.num_row_groups:
-                return rel, None
-            name_to_idx = {
+                return rel, 0, None, {}
+            idx = {
                 md.row_group(0).column(j).path_in_schema: j
                 for j in range(md.num_columns)
-            }
-            per_col: dict[str, list] = {}
-            for col in cols:
-                idx = name_to_idx.get(col)
-                if idx is None:
-                    continue
+            } if md.num_row_groups else {}
+
+            def value_range(name: str | None) -> list | None:
+                j = idx.get(name)
+                if j is None:
+                    return None
                 mins, maxs = [], []
                 for g in range(md.num_row_groups):
-                    st = md.row_group(g).column(idx).statistics
+                    st = md.row_group(g).column(j).statistics
                     if st is None or not st.has_min_max:
-                        mins = []
-                        break
+                        return None
+                    if name == col and isinstance(st.min, datetime.date):
+                        return None  # key_between compares raw probe values
                     lo, hi = _zone_value(st.min), _zone_value(st.max)
                     if lo is None or hi is None:
-                        mins = []
-                        break
+                        return None
                     mins.append(lo)
                     maxs.append(hi)
-                if mins:
-                    per_col[col] = [min(mins), max(maxs)]
-            return rel, (per_col or None)
+                return [min(mins), max(maxs)]
 
-        rels = [rel for fl in files.values() for rel in fl]
+            zones = {c: value_range(c) for c in zone_cols}
+            return (
+                rel,
+                md.num_rows,
+                value_range(col),
+                {c: r for c, r in zones.items() if r is not None},
+            )
+
         if len(rels) > 4:
-            # same independent-tiny-I/O argument as _collect_file_stats
-            # (its threaded twin): a z-order rewrite emits
-            # files_per_bucket × buckets files and the serial footer
-            # loop was a visible driver-side slice of every OPTIMIZE
+            # footer reads are independent tiny I/O; a commit writes up
+            # to one file per bucket (a z-order rewrite files_per_bucket
+            # × buckets) and the serial loop was a visible driver-side
+            # slice of every micro-batch
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(min(8, len(rels))) as ex:
                 results = list(ex.map(one, rels))
         else:
             results = [one(rel) for rel in rels]
-        return {rel: per_col for rel, per_col in results if per_col is not None}
+        for rel, rows, key_range, zones in results:
+            self.last_write_rows += rows
+            if key_range is not None:
+                self._last_write_stats[rel] = key_range
+            if zones:
+                self._last_write_col_stats[rel] = zones
 
     def _commit_next(
         self,
-        new_id: int,
         files: dict[str, list[str]],
         properties: dict[str, Any],
         summary: dict[str, Any],
         delta_buckets: list[int] | None = None,
-    ) -> None:
+    ) -> int:
+        """Commit the next snapshot over ``files``; return its id."""
+        new_id = self.snapshot_id + 1
         manifest = dict(self.manifest)
         live = {f for fl in files.values() for f in fl}
         merged_stats = {
@@ -1117,6 +1076,7 @@ class LakeTable:
             }
         )
         self._commit(manifest)
+        return new_id
 
     def _commit(self, manifest: dict[str, Any]) -> None:
         import time as _time

@@ -44,11 +44,12 @@ ignore NULLs, so null values never enter the support table, and a
 group whose live rows are all-null has no view row (the oracle form is
 ``GROUP BY g HAVING COUNT(v) > 0``).
 
-Duck-typed to the :func:`~spark_cdc.operators.ivm.maintain_from_feed`
-contract (``apply_batch(signed_rows, batch_id)`` + ``rebuild(signed_
-source, batch_id)``), so feed draining, crash-safe cursors,
+Duck-typed to the rollup contract (``apply_batch(signed_rows,
+batch_id)`` + ``rebuild(signed_source, batch_id)``) that
+:func:`~spark_cdc.operators.ivm.maintain_from_feed` drives through the
+one feed step of :mod:`spark_cdc.lake.feed`, so crash-safe cursors,
 ``auto_rebuild`` expiry recovery, and stream attachment via
-:class:`~spark_cdc.operators.ivm.MaintainedView` all work unchanged.
+:class:`~spark_cdc.operators.ivm.MaintainedView` all apply unchanged.
 
 Exactly-once across the two commits: level 1 is guarded by the
 rollup's batch-id key, level 2 by its own ``distinct_view`` key. The
@@ -63,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_cdc.lake.table import BUCKET_COL, V_SEQ, V_TS, LakeTable, bucket_expr
+from spark_cdc.lake.table import BUCKET_COL, LakeTable, bucket_expr, with_batch_id
 from spark_cdc.operators.ivm import SIGN_COL, signed_count
 from spark_cdc.operators.rollup import IncrementalRollup
 
@@ -179,21 +180,10 @@ class DistinctRollup:
         )
 
     # ------------------------------------------------------- maintenance
-    def _touched_buckets(self, signed: DataFrame) -> list[int]:
-        return sorted(
-            r[0]
-            for r in signed.where(F.col(self.value_col).isNotNull())
-            .select(
-                bucket_expr(self.group_cols[0], self.view.num_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-
     def _batch_stats(self, signed: DataFrame) -> tuple[list[int], int]:
         """(touched buckets, distinct batch groups) in ONE aggregation
         job — the group count feeds the auto refresh-mode decision at
-        no extra Spark job over the bucket collect it replaces."""
+        no extra Spark job over a bucket-only collect."""
         row = signed.agg(
             F.collect_set(
                 bucket_expr(self.group_cols[0], self.view.num_buckets)
@@ -276,8 +266,7 @@ class DistinctRollup:
     def _refresh_view(self, touched: list[int], batch_id: int | None) -> int:
         """Full recompute of level 2 for ``touched`` buckets from the
         support table (rebuild path; its own batch-id guard)."""
-        last = self.view.properties.get("last_batch_id", {}).get(self.GUARD)
-        if batch_id is not None and last is not None and batch_id <= last:
+        if self.view.has_committed(self.GUARD, batch_id):
             return self.view.snapshot_id
         fresh = (
             self.support.read(buckets=touched)
@@ -292,21 +281,10 @@ class DistinctRollup:
             )
             .repartition(max(len(touched) // 4, 1), F.col(BUCKET_COL))
         )
-        for hidden in (V_TS, V_SEQ):
-            if hidden in {f.name for f in self.view.schema.fields}:
-                fresh = fresh.withColumn(
-                    hidden,
-                    F.lit(None).cast("timestamp" if hidden == V_TS else "long"),
-                )
-        props = dict(self.view.properties)
-        if batch_id is not None:
-            lb = dict(props.get("last_batch_id", {}))
-            lb[self.GUARD] = batch_id
-            props["last_batch_id"] = lb
         return self.view.overwrite_buckets(
             fresh,
             touched,
-            properties=props,
+            properties=with_batch_id(self.view.properties, batch_id, self.GUARD),
             summary={"operation": "distinct_view_refresh", "batch_id": batch_id},
         )
 

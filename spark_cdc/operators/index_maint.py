@@ -27,9 +27,15 @@ MERGE into a :class:`~spark_cdc.lake.table.LakeTable`:
   separate, rarer operation — the serving-tier contract of FAISS-style
   systems, where codebooks version independently of the data.
 
-Exactly-once: each poll's merge uses the feed's target snapshot id as
-its batch id, so a crash between index commit and cursor commit makes
-the redelivered poll a no-op. Maintained == rebuilt equality after
+Every maintainer follows the feed protocol of :mod:`spark_cdc.lake.feed`:
+its ``apply_diff`` is the apply of :func:`~spark_cdc.lake.feed.follow`'s
+step, and each poll's merge uses the feed's target snapshot id as its
+batch id, so a crash between index commit and cursor commit makes the
+redelivered poll a no-op. Serve one as a loop with ``follow(m.consumer,
+m.apply_diff, include_preimage=m.include_preimage, on_expired=lambda c:
+m.rebuild())`` (``python -m spark_cdc index-follow``), drain it with
+``catch_up``, or attach ``on_batch`` to a stream runner. Maintained ==
+rebuilt equality after
 mixed insert/update/delete batches is pinned by
 tests/test_index_maint.py; the driver entry ``bm25_index_incremental``
 scores a query from a feed-maintained index against DuckDB's
@@ -48,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_cdc.cdc.apply import apply_batch
-from spark_cdc.lake.feed import ChangeFeedConsumer
+from spark_cdc.lake.feed import ChangeFeedConsumer, follow, poll_once
 from spark_cdc.lake.table import LakeTable
 from spark_cdc.operators.search import bm25_index, bm25_scores, bm25_topk
 
@@ -108,10 +114,13 @@ def create_bm25_index_table(
     )
 
 
-def _envelope(df: DataFrame, ordinal: int, op: str, op_seq: int) -> DataFrame:
+def _envelope(df: DataFrame, ordinal: int, op: str) -> DataFrame:
+    """Change events at ``ordinal``; a retraction ('d') carries op_seq 0
+    and an insertion ('c') op_seq 1, so within one batch the insertion
+    wins a key present in both."""
     return df.select(
         F.lit(ordinal).cast("long").alias("lsn"),
-        F.lit(op_seq).cast("long").alias("op_seq"),
+        F.lit(0 if op == "d" else 1).cast("long").alias("op_seq"),
         F.lit(op).alias("op"),
         F.timestamp_seconds(F.lit(ordinal)).alias("ts"),
         *df.columns,
@@ -143,8 +152,8 @@ def bm25_postings_changes(
     new_docs = diff.where(
         F.col("_change_type").isin("insert", "update_postimage")
     ).select(F.col(id_col), F.col(text_col))
-    dels = _envelope(bm25_index(old_docs, text_col, id_col), ordinal, "d", 0)
-    ins = _envelope(bm25_index(new_docs, text_col, id_col), ordinal, "c", 1)
+    dels = _envelope(bm25_index(old_docs, text_col, id_col), ordinal, "d")
+    ins = _envelope(bm25_index(new_docs, text_col, id_col), ordinal, "c")
     return dels.unionByName(ins)
 
 
@@ -181,59 +190,97 @@ def bm25_stats_delta(diff: DataFrame, text_col: str = "text") -> tuple[int, int]
 
 
 class _MorMaintenance:
-    """Shared write-amplification discipline for maintained indexes.
+    """The feed-follower half every maintained index shares: the apply
+    step of :func:`spark_cdc.lake.feed.poll_once` (derive the change
+    batch from the diff, MERGE it under batch id = the feed's
+    ``to_snapshot``, maybe compact) and the drain loop around it. A
+    subclass supplies only :meth:`_derive` (diff → change batch plus
+    the snapshot properties that ride in the same commit) and
+    ``rebuild`` (the :class:`~spark_cdc.lake.feed.FeedExpiredError`
+    recovery: full recompute keyed on the source's head snapshot, then
+    cursor commit).
 
-    A CDC poll's change set scatters across the index's hash-bucket
-    space — by token for postings, by id for projections/codes — so as
-    soon as a poll touches more keys than there are buckets, a
-    copy-on-write merge rewrites O(index) per poll. The scalable
-    steady state is merge-on-read polls (O(change set) delta appends;
-    probes stay pruned because delta files carry the same per-file
-    bucket-column range stats, and reads resolve latest-version on the
-    fly) plus a SELECTIVE compaction every ``compact_every`` polls that
-    folds only buckets which accumulated > ``compact_max_files`` files
-    (``fold_all_deltas=False``) — the ClickHouse background-merge /
-    Iceberg binpack discipline. The poll counter is in-memory: a
-    service restart shifts the next compaction by at most one cycle.
+    Write-amplification discipline: a CDC poll's change set scatters
+    across the index's hash-bucket space — by token for postings, by id
+    for projections/codes — so as soon as a poll touches more keys than
+    there are buckets, a copy-on-write merge rewrites O(index) per poll.
+    The scalable steady state is merge-on-read polls (O(change set)
+    delta appends; probes stay pruned because delta files carry the
+    same per-file bucket-column range stats, and reads resolve
+    latest-version on the fly) plus a SELECTIVE compaction every
+    ``compact_every`` polls that folds only buckets which accumulated
+    > ``compact_max_files`` files (``fold_all_deltas=False``) — the
+    ClickHouse background-merge / Iceberg binpack discipline. The poll
+    counter is in-memory: a service restart shifts the next compaction
+    by at most one cycle.
     """
 
+    # set True to self-heal a retention-lapped cursor via rebuild()
+    # instead of raising FeedExpiredError out of catch_up/on_batch
     auto_rebuild = False
+    # whether _derive needs the diff's pre-images
+    include_preimage = False
+    _polls_since_compact = 0
 
-    def _init_compaction(
-        self,
-        merge_mode: str,
-        compact_every: int | None,
-        compact_max_files: int,
+    def apply_diff(self, diff: DataFrame, to_snap: int) -> None:
+        """The apply of one feed poll — pass it to
+        :func:`~spark_cdc.lake.feed.follow` (with ``include_preimage=
+        self.include_preimage``). Snapshot properties derived from the
+        diff (corpus stats, drift state) ride in the guarded merge
+        commit, so a redelivered poll can neither double-count nor
+        drift them."""
+        # _derive reads the diff in several jobs and union branches;
+        # materialize it once instead of re-running the snapshot diff
+        changes, props = self._derive(diff.localCheckpoint(), to_snap)
+        self._merge(changes, to_snap, props, self.merge_mode)
+        self._maybe_compact()
+
+    def _merge(
+        self, changes: DataFrame, batch_id: int | None,
+        extra_properties: dict | None = None, mode: str = "cow",
     ) -> None:
-        self.merge_mode = merge_mode
-        self.compact_every = compact_every
-        self.compact_max_files = compact_max_files
-        self._polls_since_compact = 0
+        """MERGE a change batch into the index under this maintainer's
+        guard. Rebuilds keep the copy-on-write default: they rewrite
+        every bucket, so the table is single-version afterwards."""
+        apply_batch(
+            self.table,
+            changes,
+            batch_id=batch_id,
+            source_id=self.source_id,
+            collect_lineage=False,
+            collect_stats=False,
+            mode=mode,
+            extra_properties=extra_properties,
+        )
+
+    def poll_apply(self) -> bool:
+        """One feed step; False when caught up."""
+        return poll_once(self.consumer, self.apply_diff, self.include_preimage)
+
+    def catch_up(self) -> int:
+        """Drain the feed; number of polls applied (a rebuild counts as
+        one when ``auto_rebuild`` is set)."""
+        return follow(
+            self.consumer, self.apply_diff, interval_sec=0.0, max_idle_polls=1,
+            include_preimage=self.include_preimage,
+            on_expired=(lambda _c: self.rebuild()) if self.auto_rebuild else None,
+        )
 
     def on_batch(self, batch_id: int | None = None, res=None) -> None:
         """Plug into ``StreamRunner(on_batch=...)`` — after every merged
         micro-batch the index drains the corpus table's change feed, so
         search/ANN serving stays in lockstep with ingest (the index twin
-        of :meth:`spark_cdc.operators.ivm.MaintainedView.on_batch`).
-        Crash-safe for the same reasons: the feed cursor and the merge's
-        batch-id guard make redelivered maintenance idempotent, and a
+        of :meth:`spark_cdc.operators.ivm.MaintainedView.on_batch`). A
         crash between table commit and index maintenance is healed by
-        the next batch's drain. Set ``self.auto_rebuild = True`` to
-        self-heal a retention-lapped cursor via :meth:`rebuild` instead
-        of raising ``FeedExpiredError`` into the stream."""
-        from spark_cdc.lake.feed import FeedExpiredError
-
-        try:
-            self.catch_up()
-        except FeedExpiredError:
-            if not self.auto_rebuild:
-                raise
-            self.rebuild()
+        the next batch's drain."""
+        self.catch_up()
 
     def _maybe_compact(self) -> list[int]:
-        """Runs AFTER the cursor commit: compaction is state-preserving
-        and carries no batch id, so a crash around it can neither lose
-        nor double-apply a change batch."""
+        """Runs inside :meth:`apply_diff`, before the cursor commit.
+        Compaction rewrites this maintainer's own table, not the
+        source, and carries no batch id: a crash after it redelivers
+        the poll with the same ``to_snapshot``, whose merge the guard
+        skips, so no change batch is lost or applied twice."""
         if self.merge_mode != "mor" or not self.compact_every:
             return []
         self._polls_since_compact += 1
@@ -270,6 +317,7 @@ class MaintainedBM25Index(_MorMaintenance):
     """
 
     STATS_PROP = "bm25_stats"
+    include_preimage = True
 
     def __init__(
         self,
@@ -287,39 +335,15 @@ class MaintainedBM25Index(_MorMaintenance):
         self.text_col = text_col
         self.id_col = id_col
         self.source_id = source_id
-        self._init_compaction(merge_mode, compact_every, compact_max_files)
+        self.merge_mode = merge_mode
+        self.compact_every = compact_every
+        self.compact_max_files = compact_max_files
 
-    def poll_apply(self) -> bool:
-        """One poll; False when caught up. Crash-safe: the merge's
-        batch id is the feed snapshot, so a redelivered poll after a
-        crash-before-cursor-commit is skipped by the batch-id guard —
-        and since the stats properties ride in that same guarded
-        commit, they can neither double-count nor drift."""
-        got = self.consumer.poll(include_preimage=True)
-        if got is None:
-            return False
-        diff, to_snap = got
-        # the diff feeds two consumers (stats delta + postings merge);
-        # materialize it once instead of recomputing the bucket join
-        diff = diff.localCheckpoint()
+    def _derive(self, diff: DataFrame, to_snap: int) -> tuple[DataFrame, dict]:
         dn, ddl = bm25_stats_delta(diff, self.text_col)
         n0, s0 = self.stats_raw()
         changes = bm25_postings_changes(diff, to_snap, self.text_col, self.id_col)
-        apply_batch(
-            self.table,
-            changes,
-            batch_id=to_snap,
-            source_id=self.source_id,
-            collect_lineage=False,
-            collect_stats=False,
-            mode=self.merge_mode,
-            extra_properties={
-                self.STATS_PROP: {"n_docs": n0 + dn, "sum_dl": s0 + ddl}
-            },
-        )
-        self.consumer.commit(to_snap)
-        self._maybe_compact()
-        return True
+        return changes, {self.STATS_PROP: {"n_docs": n0 + dn, "sum_dl": s0 + ddl}}
 
     def stats_raw(self) -> tuple[int, int]:
         """Maintained ``(n_docs, sum_dl)`` from snapshot properties.
@@ -355,13 +379,6 @@ class MaintainedBM25Index(_MorMaintenance):
             df = self.table.read()
         return df.select("doc_id", "token", "tf", "dl")
 
-    def catch_up(self) -> int:
-        """Drain the feed; number of polls applied."""
-        n = 0
-        while self.poll_apply():
-            n += 1
-        return n
-
     def read(self) -> DataFrame:
         return self.table.read().select("doc_id", "token", "tf", "dl")
 
@@ -372,7 +389,7 @@ class MaintainedBM25Index(_MorMaintenance):
         same discipline as ``IncrementalRollup.rebuild``): stale
         ``(doc_id, token)`` keys are tombstoned, fresh postings
         inserted, cursor committed to the head. O(corpus), which is
-        the price of letting retention lap a consumer — ``poll_apply``
+        the price of letting retention lap a consumer — a feed poll
         stays O(change set) on the healthy path."""
         self.consumer.table.refresh()
         to_snap = self.consumer.table.snapshot_id
@@ -391,28 +408,17 @@ class MaintainedBM25Index(_MorMaintenance):
                 F.lit(None).cast("int").alias("dl"),
             )
         )
-        changes = _envelope(stale, to_snap, "d", 0).unionByName(
-            _envelope(fresh, to_snap, "c", 1)
+        changes = _envelope(stale, to_snap, "d").unionByName(
+            _envelope(fresh, to_snap, "c")
         )
         counted, dl = _corpus_stat_exprs(F.col(self.text_col))
         srow = docs.agg(
             F.sum(F.when(counted, F.lit(1)).otherwise(F.lit(0))).alias("n"),
             F.sum(dl).alias("s"),
         ).first()
-        apply_batch(
-            self.table,
-            changes,
-            batch_id=to_snap,
-            source_id=self.source_id,
-            collect_lineage=False,
-            collect_stats=False,
-            extra_properties={
-                self.STATS_PROP: {
-                    "n_docs": int(srow["n"] or 0),
-                    "sum_dl": int(srow["s"] or 0),
-                }
-            },
-        )
+        self._merge(changes, to_snap, {
+            self.STATS_PROP: {"n_docs": int(srow["n"] or 0), "sum_dl": int(srow["s"] or 0)}
+        })
         self.consumer.commit(to_snap)
 
     def scores(self, query: str, k1: float = 1.2, b: float = 0.75) -> DataFrame:
@@ -452,53 +458,6 @@ class MaintainedBM25Index(_MorMaintenance):
         )
 
 
-def follow_index(
-    maint,
-    interval_sec: float = 5.0,
-    should_stop=None,
-    max_idle_polls: int | None = None,
-    auto_rebuild: bool = True,
-) -> int:
-    """Service loop keeping an index current with its corpus table —
-    the index twin of :func:`spark_cdc.lake.feed.follow`. ``maint`` is
-    any maintained index with ``poll_apply``/``rebuild``
-    (:class:`MaintainedBM25Index`, :class:`MaintainedVectorCodes`,
-    :class:`MaintainedProjection`). ``should_stop()`` (flag set by a signal
-    handler) ends the loop at an iteration boundary after the in-flight
-    poll commits; ``max_idle_polls`` ends it after that many
-    consecutive caught-up polls (catch-up mode). ``auto_rebuild``
-    self-heals a retention-lapped cursor via ``maint.rebuild()``
-    instead of dying with a traceback mid-service. Returns applied
-    polls (a rebuild counts as one)."""
-    import time
-
-    from spark_cdc.lake.feed import FeedExpiredError
-
-    polls = 0
-    idle = 0
-    while True:
-        if should_stop is not None and should_stop():
-            break
-        try:
-            applied = maint.poll_apply()
-        except FeedExpiredError:
-            if not auto_rebuild:
-                raise
-            maint.rebuild()
-            polls += 1
-            idle = 0
-            continue
-        if applied:
-            polls += 1
-            idle = 0
-            continue
-        idle += 1
-        if max_idle_polls is not None and idle >= max_idle_polls:
-            break
-        time.sleep(interval_sec)
-    return polls
-
-
 class MaintainedProjection(_MorMaintenance):
     """Generic CDC-live derived table: any deterministic ROW-WISE keyed
     projection of a corpus table (one output row per input key), kept
@@ -532,9 +491,11 @@ class MaintainedProjection(_MorMaintenance):
         self.project = project
         self.id_col = id_col
         self.source_id = source_id
-        self._init_compaction(merge_mode, compact_every, compact_max_files)
+        self.merge_mode = merge_mode
+        self.compact_every = compact_every
+        self.compact_max_files = compact_max_files
 
-    def _changes(self, diff: DataFrame, ordinal: int) -> DataFrame:
+    def _derive(self, diff: DataFrame, ordinal: int) -> tuple[DataFrame, None]:
         up = diff.where(F.col("_change_type").isin("insert", "update_postimage"))
         projected = self.project(up.drop("_change_type"))
         pay = [c for c in projected.columns if c != self.id_col]
@@ -542,37 +503,10 @@ class MaintainedProjection(_MorMaintenance):
             F.col(self.id_col),
             *[F.lit(None).cast(projected.schema[c].dataType).alias(c) for c in pay],
         )
-        return _envelope(projected, ordinal, "c", 1).unionByName(
-            _envelope(dels, ordinal, "d", 0)
+        changes = _envelope(projected, ordinal, "c").unionByName(
+            _envelope(dels, ordinal, "d")
         )
-
-    def poll_apply(self) -> bool:
-        got = self.consumer.poll()
-        if got is None:
-            return False
-        diff, to_snap = got
-        # _changes references the diff in both union branches (project +
-        # tombstones); materialize once so the snapshot-diff join isn't
-        # executed per branch (same discipline as the BM25 poll)
-        diff = diff.localCheckpoint()
-        apply_batch(
-            self.table,
-            self._changes(diff, to_snap),
-            batch_id=to_snap,
-            source_id=self.source_id,
-            collect_lineage=False,
-            collect_stats=False,
-            mode=self.merge_mode,
-        )
-        self.consumer.commit(to_snap)
-        self._maybe_compact()
-        return True
-
-    def catch_up(self) -> int:
-        n = 0
-        while self.poll_apply():
-            n += 1
-        return n
+        return changes, None
 
     def read(self) -> DataFrame:
         drop = [c for c in ("ts",) if c in self.table.user_schema.names]
@@ -596,11 +530,8 @@ class MaintainedProjection(_MorMaintenance):
         for c in full.columns:
             if c not in gone.columns:
                 gone = gone.withColumn(c, F.lit(None).cast(full.schema[c].dataType))
-        changes = self._changes(full.unionByName(gone.select(full.columns)), to_snap)
-        apply_batch(
-            self.table, changes, batch_id=to_snap, source_id=self.source_id,
-            collect_lineage=False, collect_stats=False,
-        )
+        changes, _ = self._derive(full.unionByName(gone.select(full.columns)), to_snap)
+        self._merge(changes, to_snap)
         self.consumer.commit(to_snap)
 
 
@@ -635,8 +566,8 @@ def vector_codes_changes(
         F.lit(None).cast("int").alias("list_id"),
         F.lit(None).cast("array<smallint>").alias("codes"),
     )
-    return _envelope(enc, ordinal, "c", 1).unionByName(
-        _envelope(dels, ordinal, "d", 0)
+    return _envelope(enc, ordinal, "c").unionByName(
+        _envelope(dels, ordinal, "d")
     )
 
 
@@ -684,7 +615,9 @@ class MaintainedVectorCodes(_MorMaintenance):
         self.vec_col = vec_col
         self.id_col = id_col
         self.source_id = source_id
-        self._init_compaction(merge_mode, compact_every, compact_max_files)
+        self.merge_mode = merge_mode
+        self.compact_every = compact_every
+        self.compact_max_files = compact_max_files
 
     def _batch_quality(self, upserts: DataFrame) -> tuple[int, float | None]:
         """(count, mean nearest-centroid cosine) of a change batch's
@@ -722,12 +655,7 @@ class MaintainedVectorCodes(_MorMaintenance):
             q["last_n"] = n
         return {self.QUANT_PROP: q}
 
-    def poll_apply(self) -> bool:
-        got = self.consumer.poll()
-        if got is None:
-            return False
-        diff, to_snap = got
-        diff = diff.localCheckpoint()
+    def _derive(self, diff: DataFrame, to_snap: int) -> tuple[DataFrame, dict]:
         changes = vector_codes_changes(
             diff, to_snap, self.centroids, self.codebooks, self.vec_col, self.id_col
         )
@@ -736,19 +664,7 @@ class MaintainedVectorCodes(_MorMaintenance):
                 F.col("_change_type").isin("insert", "update_postimage")
             ).select(F.col(self.vec_col))
         )
-        apply_batch(
-            self.table,
-            changes,
-            batch_id=to_snap,
-            source_id=self.source_id,
-            collect_lineage=False,
-            collect_stats=False,
-            mode=self.merge_mode,
-            extra_properties=self._quality_props(n, sim),
-        )
-        self.consumer.commit(to_snap)
-        self._maybe_compact()
-        return True
+        return changes, self._quality_props(n, sim)
 
     def drift_status(self, sim_drop: float = 0.05,
                      imbalance_factor: float = 4.0) -> dict:
@@ -847,12 +763,6 @@ class MaintainedVectorCodes(_MorMaintenance):
             raise
         return new_version
 
-    def catch_up(self) -> int:
-        n = 0
-        while self.poll_apply():
-            n += 1
-        return n
-
     def read(self) -> DataFrame:
         return self.table.read().select("vec_id", "list_id", "codes")
 
@@ -860,8 +770,8 @@ class MaintainedVectorCodes(_MorMaintenance):
                 batch_id: int | object = _HEAD,
                 extra_properties: dict | None = None) -> None:
         """Full re-encode with the frozen quantizers (FeedExpired
-        recovery via :func:`follow_index`, post-retrain refresh, or
-        bootstrap): one insert batch replacing every key, plus
+        recovery via ``follow(on_expired=...)`` or ``auto_rebuild``,
+        post-retrain refresh, or bootstrap): one insert batch replacing every key, plus
         tombstones for code rows whose vectors vanished while the feed
         was expired. ``vectors`` defaults to the corpus table's current
         state.
@@ -904,18 +814,6 @@ class MaintainedVectorCodes(_MorMaintenance):
         )
         changes = vector_codes_changes(
             fake_diff, to_snap, self.centroids, self.codebooks, self.vec_col, self.id_col
-        ).unionByName(
-            _envelope(
-                gone.drop("_change_type"), to_snap, "d", 0
-            )
-        )
-        apply_batch(
-            self.table,
-            changes,
-            batch_id=batch_id,
-            source_id=self.source_id,
-            collect_lineage=False,
-            collect_stats=False,
-            extra_properties=extra_properties,
-        )
+        ).unionByName(_envelope(gone.drop("_change_type"), to_snap, "d"))
+        self._merge(changes, batch_id, extra_properties)
         self.consumer.commit(to_snap)

@@ -131,38 +131,28 @@ def rebuild_view(rollup, consumer) -> int:
 def maintain_from_feed(rollup, consumer, auto_rebuild: bool = False) -> int:
     """Drain a :class:`spark_cdc.lake.feed.ChangeFeedConsumer` into an
     :class:`~spark_cdc.operators.rollup.IncrementalRollup` whose
-    measures are written over signed rows. Returns the number of polls
-    applied. Exactly-once: the rollup's batch-id guard keys on the
-    feed's ``to_snapshot``, and the cursor only advances after the
-    rollup commit.
+    measures are written over signed rows — the feed loop
+    :func:`~spark_cdc.lake.feed.follow` in catch-up mode, so the rollup
+    commits under the rollup's batch-id guard keyed on the feed's
+    ``to_snapshot`` before the cursor advances. Returns the number of
+    polls applied.
 
     ``auto_rebuild=True`` turns :class:`FeedExpiredError` (snapshot
     retention overtook the cursor) into a :func:`rebuild_view`
     self-heal instead of an exception; leave False when expiry should
     page an operator rather than silently trigger a full recompute."""
-    from spark_cdc.lake.feed import FeedExpiredError
+    from spark_cdc.lake.feed import follow
 
-    polls = 0
-    while True:
-        try:
-            got = consumer.poll(include_preimage=True)
-        except FeedExpiredError:
-            if not auto_rebuild:
-                raise
-            rebuild_view(rollup, consumer)
-            polls += 1
-            continue
-        if got is None:
-            return polls
-        diff, to_snap = got
+    def apply(diff: DataFrame, to_snap: int) -> None:
         # one poll's diff feeds several downstream jobs (touched-bucket
         # stats, the level-1 merge, a distinct view's level-2 refresh);
         # materialize it ONCE — the diff PLAN re-reads and re-joins two
         # snapshots of the growing source per action, while its OUTPUT
-        # is O(change set) rows (same discipline as the BM25
-        # maintainer's poll; measured ~2× on the wide-batch
+        # is O(change set) rows (measured ~2× on the wide-batch
         # distinct-view series)
-        diff = diff.localCheckpoint()
-        rollup.apply_batch(signed_rows(diff), batch_id=to_snap)
-        consumer.commit(to_snap)
-        polls += 1
+        rollup.apply_batch(signed_rows(diff.localCheckpoint()), batch_id=to_snap)
+
+    return follow(
+        consumer, apply, interval_sec=0.0, max_idle_polls=1, include_preimage=True,
+        on_expired=(lambda c: rebuild_view(rollup, c)) if auto_rebuild else None,
+    )

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_cdc.lake.table import BUCKET_COL, V_SEQ, V_TS, LakeTable, bucket_expr
+from spark_cdc.lake.table import BUCKET_COL, LakeTable, bucket_expr, with_batch_id
 
 
 class IncrementalRollup:
@@ -46,6 +46,9 @@ class IncrementalRollup:
     would linger as an all-zero row.
     """
 
+    # source id of this rollup's batch-id guard
+    GUARD = "rollup"
+
     def __init__(
         self,
         table: LakeTable,
@@ -59,62 +62,7 @@ class IncrementalRollup:
         self.count_col = count_col
 
     def apply_batch(self, batch: DataFrame, batch_id: int | None = None) -> int:
-        last = self.table.properties.get("last_batch_id", {}).get("rollup")
-        if batch_id is not None and last is not None and batch_id <= last:
-            return self.table.snapshot_id  # exactly-once skip
-        # cast each measure to its declared table type (count-style
-        # measures stay integral; a blanket long cast would silently
-        # truncate double/decimal sums per batch and drift the rollup
-        # away from the from-scratch-recompute equivalence contract)
-        decl = {f.name: f.dataType for f in self.table.user_schema.fields}
-        deltas = (
-            batch.groupBy(*self.group_cols)
-            .agg(*[
-                (m.cast(decl[name]) if name in decl else m).alias(name)
-                for name, m in self.measures.items()
-            ])
-            .withColumn(BUCKET_COL, bucket_expr(self.table.bucket_column, self.table.num_buckets))
-            .persist()
-        )
-        # only buckets containing groups present in this batch are
-        # read + rewritten; the rest carry over by manifest reference
-        touched = sorted(r[0] for r in deltas.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            deltas.unpersist()
-            return self.table.snapshot_id
-        current = self.table.read(buckets=touched)
-        merged = (
-            current.unionByName(deltas.drop(BUCKET_COL), allowMissingColumns=True)
-            .groupBy(*self.group_cols)
-            .agg(*[
-                (F.sum(name).cast(decl[name]) if name in decl else F.sum(name)).alias(name)
-                for name in self.measures
-            ])
-        )
-        if self.count_col:
-            merged = merged.where(F.col(self.count_col) != 0)
-        merged = (
-            merged
-            .withColumn(BUCKET_COL, bucket_expr(self.table.bucket_column, self.table.num_buckets))
-            .repartition(max(len(touched) // 4, 1), F.col(BUCKET_COL))
-        )
-        for hidden in (V_TS, V_SEQ):
-            if hidden in {f.name for f in self.table.schema.fields}:
-                merged = merged.withColumn(hidden, F.lit(None).cast("timestamp" if hidden == V_TS else "long"))
-        props = dict(self.table.properties)
-        if batch_id is not None:
-            lb = dict(props.get("last_batch_id", {}))
-            lb["rollup"] = batch_id
-            props["last_batch_id"] = lb
-        try:
-            return self.table.overwrite_buckets(
-                merged,
-                touched,
-                properties=props,
-                summary={"operation": "rollup_merge", "batch_id": batch_id},
-            )
-        finally:
-            deltas.unpersist()
+        return self._fold(batch, batch_id, rebuild=False)
 
     def rebuild(self, source: DataFrame, batch_id: int | None = None) -> int:
         """From-scratch recompute over ``source``, replacing the ENTIRE
@@ -128,49 +76,63 @@ class IncrementalRollup:
         :meth:`apply_batch`: a crash between the rebuild commit and the
         caller's cursor commit redelivers the rebuild, which the guard
         skips (the table already holds the recomputed state)."""
-        last = self.table.properties.get("last_batch_id", {}).get("rollup")
-        if batch_id is not None and last is not None and batch_id <= last:
-            return self.table.snapshot_id  # redelivered rebuild: no-op
+        return self._fold(source, batch_id, rebuild=True)
+
+    def _fold(self, rows: DataFrame, batch_id: int | None, rebuild: bool) -> int:
+        """Aggregate ``rows`` into per-group deltas and add them to the
+        stored groups of the buckets they touch — for a rebuild, to
+        nothing, replacing every bucket — in one commit that records
+        ``batch_id`` for the guard. Groups whose count reaches 0 are
+        dropped. Untouched buckets carry over by manifest reference."""
+        if self.table.has_committed(self.GUARD, batch_id):
+            return self.table.snapshot_id  # exactly-once skip
+        # cast each measure to its declared table type (count-style
+        # measures stay integral; a blanket long cast would silently
+        # truncate double/decimal sums per batch and drift the rollup
+        # away from the from-scratch-recompute equivalence contract)
         decl = {f.name: f.dataType for f in self.table.user_schema.fields}
-        full = (
-            source.groupBy(*self.group_cols)
+        bucket = bucket_expr(self.table.bucket_column, self.table.num_buckets)
+        deltas = (
+            rows.groupBy(*self.group_cols)
             .agg(*[
                 (m.cast(decl[name]) if name in decl else m).alias(name)
                 for name, m in self.measures.items()
             ])
+            .withColumn(BUCKET_COL, bucket)
+            .persist()
         )
-        if self.count_col:
-            full = full.where(F.col(self.count_col) != 0)
-        full = full.withColumn(
-            BUCKET_COL, bucket_expr(self.table.bucket_column, self.table.num_buckets)
-        ).persist()
         try:
-            new_buckets = {r[0] for r in full.select(BUCKET_COL).distinct().collect()}
-            touched = sorted(
-                {int(b) for b in self.table.manifest["files"]} | new_buckets
-            )
+            touched = {r[0] for r in deltas.select(BUCKET_COL).distinct().collect()}
+            if rebuild:
+                touched |= {int(b) for b in self.table.manifest["files"]}
             if not touched:
                 return self.table.snapshot_id
-            out = full.repartition(max(len(touched) // 4, 1), F.col(BUCKET_COL))
-            for hidden in (V_TS, V_SEQ):
-                if hidden in {f.name for f in self.table.schema.fields}:
-                    out = out.withColumn(
-                        hidden,
-                        F.lit(None).cast("timestamp" if hidden == V_TS else "long"),
-                    )
-            props = dict(self.table.properties)
-            if batch_id is not None:
-                lb = dict(props.get("last_batch_id", {}))
-                lb["rollup"] = batch_id
-                props["last_batch_id"] = lb
+            touched = sorted(touched)
+            groups = deltas.drop(BUCKET_COL)
+            if not rebuild:
+                groups = self.table.read(buckets=touched).unionByName(
+                    groups, allowMissingColumns=True
+                )
+            merged = groups.groupBy(*self.group_cols).agg(*[
+                (F.sum(name).cast(decl[name]) if name in decl else F.sum(name)).alias(name)
+                for name in self.measures
+            ])
+            if self.count_col:
+                merged = merged.where(F.col(self.count_col) != 0)
+            merged = merged.withColumn(BUCKET_COL, bucket).repartition(
+                max(len(touched) // 4, 1), F.col(BUCKET_COL)
+            )
             return self.table.overwrite_buckets(
-                out,
+                merged,
                 touched,
-                properties=props,
-                summary={"operation": "rollup_rebuild", "batch_id": batch_id},
+                properties=with_batch_id(self.table.properties, batch_id, self.GUARD),
+                summary={
+                    "operation": "rollup_rebuild" if rebuild else "rollup_merge",
+                    "batch_id": batch_id,
+                },
             )
         finally:
-            full.unpersist()
+            deltas.unpersist()
 
     def read(self) -> DataFrame:
         return self.table.read()

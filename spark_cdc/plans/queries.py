@@ -49,30 +49,27 @@ ORACLES: dict[str, str] = {}
 # ``spark.read.parquet`` pays file listing + footer schema inference
 # (~80 ms); a suite run calls ``_t`` dozens of times over the same
 # static fixture dirs. The memo holds the lazy SCAN PLAN only — every
-# action still recomputes from the parquet files — and is keyed weakly
-# on the live session, so nothing survives the process. Fixture dirs
+# action still recomputes from the parquet files. It is keyed on
+# ``id(session)`` and keeps the JVM-side plan, not the Python DataFrame
+# (which references its session and would keep it alive); a finalizer
+# drops a session's entry when the session is collected. Fixture dirs
 # are immutable inputs by contract; a caller that rewrites files under
 # an ``sf_dir`` mid-session would need the fresh listing a direct
 # ``spark.read.parquet`` gives.
-_SCAN_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+_SCAN_MEMO: dict[int, dict] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (os.path.abspath(sf_dir), name)
-    try:
-        per = _SCAN_MEMO.get(spark)
-    except TypeError:
-        per = None
-    if per is not None and key in per:
-        return per[key]
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    try:
-        _SCAN_MEMO.setdefault(spark, {})[key] = df
-    except TypeError:
-        pass
-    return df
+    per = _SCAN_MEMO.get(id(spark))
+    if per is None:
+        per = _SCAN_MEMO[id(spark)] = {}
+        weakref.finalize(spark, _SCAN_MEMO.pop, id(spark), None)
+    if key not in per:
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        per[key] = (type(df), df._jdf)
+    cls, jdf = per[key]
+    return cls(jdf, spark)
 
 
 def query(name: str, oracle: str | None = None):

@@ -231,11 +231,11 @@ def test_vector_codes_maintained_equals_reencode(spark, tmp_path):
 
 def test_index_rebuild_after_feed_expiry(spark, tmp_path):
     """Snapshot retention overtakes the index's cursor mid-lag:
-    follow_index(auto_rebuild=True) self-heals with a full recompute
+    ``follow(on_expired=rebuild)`` self-heals with a full recompute
     keyed on the observed head (stale keys tombstoned), instead of
     dying — and the result equals a from-scratch index."""
+    from spark_cdc.lake.feed import follow
     from spark_cdc.lake.maintenance import expire_snapshots
-    from spark_cdc.operators.index_maint import follow_index
 
     docs, maint = _mk_maintained(spark, str(tmp_path))
     apply_batch(docs, _env(spark, _texts(30), 0, "c"), batch_id=0,
@@ -248,9 +248,12 @@ def test_index_rebuild_after_feed_expiry(spark, tmp_path):
                 batch_id=2, collect_lineage=False)
     # retention laps the cursor (keep only the head snapshot)
     expire_snapshots(docs, keep_last=1)
-    with pytest.raises(Exception):  # FeedExpiredError surfaces without auto_rebuild
-        follow_index(maint, max_idle_polls=1, auto_rebuild=False)
-    polls = follow_index(maint, interval_sec=0.0, max_idle_polls=1)
+    with pytest.raises(Exception):  # FeedExpiredError surfaces without on_expired
+        follow(maint.consumer, maint.apply_diff, max_idle_polls=1,
+               include_preimage=maint.include_preimage)
+    polls = follow(maint.consumer, maint.apply_diff, interval_sec=0.0,
+                   max_idle_polls=1, include_preimage=maint.include_preimage,
+                   on_expired=lambda _c: maint.rebuild())
     assert polls >= 1
     rebuilt = bm25_index(docs.read().select("doc_id", "text")).select(
         "doc_id", "token", "tf", "dl"
@@ -297,7 +300,8 @@ def test_maintained_projection_minhash_signatures(spark, tmp_path):
     corpus; rebuild() self-heals after retention laps the cursor."""
     from spark_cdc.lake.maintenance import expire_snapshots
     from spark_cdc.operators.dedup_ops import text_minhash_np
-    from spark_cdc.operators.index_maint import MaintainedProjection, follow_index
+    from spark_cdc.lake.feed import follow
+    from spark_cdc.operators.index_maint import MaintainedProjection
 
     sig_udf = text_minhash_np(num_hashes=8, shingle_k=4)
 
@@ -341,7 +345,8 @@ def test_maintained_projection_minhash_signatures(spark, tmp_path):
     apply_batch(docs, _env(spark, [(i, None) for i in (1,)], 4, "d"),
                 batch_id=4, collect_lineage=False)
     expire_snapshots(docs, keep_last=1)
-    polls = follow_index(maint, interval_sec=0.0, max_idle_polls=1)
+    polls = follow(maint.consumer, maint.apply_diff, interval_sec=0.0,
+                   max_idle_polls=1, on_expired=lambda _c: maint.rebuild())
     assert polls >= 1
     want2 = as_map(project(docs.read().select("doc_id", "text")))
     assert as_map(maint.read()) == want2 and 60 in want2 and 1 not in want2

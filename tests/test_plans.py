@@ -215,3 +215,22 @@ def test_incremental_lsh_probe_never_shuffles_index(spark):
     )
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_scan_memo_released_with_its_session(spark, tmp_path):
+    """The input-scan memo keys on the session without keeping it
+    alive: once a session is dropped, its entry goes."""
+    import gc
+
+    from spark_cdc.plans import queries
+
+    spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
+    other = spark.newSession()
+    assert queries._t(other, str(tmp_path), "t").count() == 3
+    assert queries._t(other, str(tmp_path), "t").count() == 3  # memo hit
+    held = len(queries._SCAN_MEMO)
+    del other
+    # pyspark's RDD.toDF patch closes over the newest session; move it on
+    spark.newSession()
+    gc.collect()
+    assert len(queries._SCAN_MEMO) == held - 1
