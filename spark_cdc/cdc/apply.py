@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_cdc.cdc.dedup import DEFAULT_ORDER, latest_version_per_key_agg
+from spark_cdc.cdc.envelope import TABLE_COL
 from spark_cdc.lake.merge import MergeResult, merge_changes
 from spark_cdc.lake.table import LakeTable
 
@@ -53,7 +54,6 @@ def apply_batch(
     source_id: str = "default",
     normalize: dict[str, Column] | None = None,
     quarantine=None,
-    quarantine_rules=None,
     **merge_kwargs,
 ) -> MergeResult:
     """Apply one micro-batch of change events to a LakeTable.
@@ -64,19 +64,20 @@ def apply_batch(
     transform layer (/root/reference/etl/core/pipeline.py:54-121).
 
     ``quarantine`` (a :class:`spark_cdc.cdc.quarantine.DeadLetterSink`)
-    routes rows violating envelope invariants to the dead-letter table
-    instead of merging them; ``quarantine_rules`` overrides the default
-    envelope rules. No quarantine sink → all rows go to the merge
-    (caller's responsibility), but nothing is ever fabricated (contrast:
-    reference processor.py:66-68 turned malformed numerics into 1.0).
+    routes rows violating the default envelope rules to the dead-letter
+    table instead of merging them. No quarantine sink → all rows go to
+    the merge (caller's responsibility), but nothing is ever fabricated
+    (contrast: reference processor.py:66-68 turned malformed numerics
+    into 1.0).
     """
     for col_name, expr in (normalize or {}).items():
         changes = changes.withColumn(col_name, expr)
     if quarantine is not None:
         from spark_cdc.cdc.quarantine import default_envelope_rules, split_quarantine
 
-        rules = quarantine_rules or default_envelope_rules(table.key_columns)
-        changes, bad = split_quarantine(changes, rules)
+        changes, bad = split_quarantine(
+            changes, default_envelope_rules(table.key_columns)
+        )
         quarantine.record(bad, source_id=source_id, batch_id=batch_id)
     return merge_changes(
         table, changes, batch_id=batch_id, source_id=source_id, **merge_kwargs
@@ -104,7 +105,6 @@ class RoutedApplyError(RuntimeError):
 def apply_batch_routed(
     tables: dict[str, LakeTable],
     changes: DataFrame,
-    table_col: str = "_table",
     batch_id: int | None = None,
     source_id: str | None = None,
     quarantine=None,
@@ -123,7 +123,7 @@ def apply_batch_routed(
     (``{source_id}:{name}``), so table B's dead-lettered rows are never
     suppressed by table A having already recorded the same batch id.
 
-    Rows whose ``table_col`` matches no configured table are routed to
+    Rows whose ``_table`` matches no configured table are routed to
     the quarantine sink with reason ``unknown_table`` (a topic-mapping
     typo must be loud, not silent data loss); without a sink their
     count is surfaced in the returned dict under ``"_unknown"``.
@@ -149,7 +149,7 @@ def apply_batch_routed(
     # while the lazy plan lets each consumer's column pruning parse
     # only the rows/columns it routes. Left unpersisted deliberately.
     unknown = changes.where(
-        F.col(table_col).isNull() | ~F.col(table_col).isin(names)
+        F.col(TABLE_COL).isNull() | ~F.col(TABLE_COL).isin(names)
     )
     results: dict[str, MergeResult] = {}
     unknown_fut = None
@@ -160,13 +160,13 @@ def apply_batch_routed(
             REASON_COL,
             F.concat(
                 F.lit("unknown_table:"),
-                F.coalesce(F.col(table_col), F.lit("<null>")),
+                F.coalesce(F.col(TABLE_COL), F.lit("<null>")),
             ),
         )
         quarantine.record(flagged, source_id=f"{base}:_unknown", batch_id=batch_id)
 
     def _one(name: str, tbl: LakeTable) -> MergeResult:
-        sub = changes.where(F.col(table_col) == name).drop(table_col)
+        sub = changes.where(F.col(TABLE_COL) == name).drop(TABLE_COL)
         return apply_batch(
             tbl,
             sub,
@@ -185,7 +185,7 @@ def apply_batch_routed(
     jobs = len(tables) + (0 if quarantine else 1)
     with ThreadPoolExecutor(max_workers=max(1, min(max_parallel, jobs))) as ex:
         if quarantine is None:
-            unknown_fut = ex.submit(unknown.select(table_col).count)
+            unknown_fut = ex.submit(unknown.select(TABLE_COL).count)
         futures = {name: ex.submit(_one, name, tbl) for name, tbl in tables.items()}
         for name, fut in futures.items():
             try:

@@ -30,6 +30,9 @@ from spark_cdc.functions.parsers import parse_timestamp_any
 
 KEY_COLUMNS = ["conv_id", "turn_idx"]
 
+# the routing column parse_kafka_frames adds: each row's target table
+TABLE_COL = "_table"
+
 PAYLOAD_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -132,7 +135,7 @@ def parse_kafka_frames(
         mapping = F.create_map(*[F.lit(x) for kv in topic_table_map.items() for x in kv])
         table_col = F.coalesce(mapping[F.col("topic")], table_col)
     return normalize_envelope(
-        enriched.withColumn("_table", table_col), extra_cols=("_table",)
+        enriched.withColumn(TABLE_COL, table_col), extra_cols=(TABLE_COL,)
     )
 
 

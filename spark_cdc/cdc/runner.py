@@ -37,24 +37,21 @@ class IncrementalRunner:
     rendering of the reference's ``run_sync_cycle``
     (/root/reference/etl/core/pipeline.py:332-365)."""
 
-    def __init__(self, table: LakeTable, source_id: str = "batch", normalize=None):
+    def __init__(self, table: LakeTable, source_id: str = "batch"):
         self.table = table
         self.source_id = source_id
-        self.normalize = normalize
 
     @property
     def watermark(self) -> int:
         return int(self.table.properties.get(WATERMARK_PROP, {}).get(self.source_id, -1))
 
-    def run_cycle(self, changelog: DataFrame, lsn_col: str = "lsn") -> CycleResult:
+    def run_cycle(self, changelog: DataFrame) -> CycleResult:
         wm = self.watermark
         # predicate pushed to the source scan by Catalyst (the
         # reference hand-wrote this WHERE clause per table,
         # pipeline.py:19-51)
-        fresh = changelog.where(F.col(lsn_col) > F.lit(wm))
-        res = apply_batch(
-            self.table, fresh, source_id=self.source_id, normalize=self.normalize
-        )
+        fresh = changelog.where(F.col("lsn") > F.lit(wm))
+        res = apply_batch(self.table, fresh, source_id=self.source_id)
         new_wm = res.max_lsn if res.max_lsn is not None else wm
         if new_wm > wm:
             props = dict(self.table.properties.get(WATERMARK_PROP, {}))

@@ -71,18 +71,18 @@ class FeedExpiredError(RuntimeError):
 class ChangeFeedConsumer:
     """Cursor-tracked poll loop over a table's net change feed."""
 
-    def __init__(self, table: LakeTable, cursor_path: str, start_snapshot: int = 0):
+    def __init__(self, table: LakeTable, cursor_path: str):
         self.table = table
         self.cursor_path = cursor_path
-        self.start_snapshot = start_snapshot
 
     def position(self) -> int:
-        """Last committed snapshot id (``start_snapshot`` before any commit)."""
+        """Last committed snapshot id (0, the table's creation, before
+        any commit)."""
         try:
             with open(self.cursor_path) as f:
                 return int(f.read().strip())
         except FileNotFoundError:
-            return self.start_snapshot
+            return 0
 
     def poll(self, include_preimage: bool = False) -> tuple[DataFrame, int] | None:
         """Net diff since the cursor, or None when caught up.

@@ -195,11 +195,8 @@ def _zone_bounds_from_footers(
 def zorder_compact(
     table: LakeTable,
     cols: list[str],
-    bits: int = 12,
     files_per_bucket: int = 4,
     normalization: str = "minmax",
-    quantile_bits: int = 8,
-    quantile_eps: float = 0.001,
 ) -> list[str]:
     """Rewrite the whole table clustered by the Z-order (Morton)
     interleave of ``cols``, and record per-file [min, max] zone maps
@@ -234,11 +231,11 @@ def zorder_compact(
     in a bucket/partition spec, not a z-order — z-order earns its keep
     on high-cardinality range-probed columns (timestamps, external
     ids). ``normalization="quantile"`` switches numeric/date/timestamp
-    dims to EQUAL-FREQUENCY ranks: 2^``quantile_bits``−1 approximate
-    quantile boundaries (one approxQuantile pass, ``quantile_eps``
-    relative error) define the cells, and a row's rank is how many
-    boundaries it clears (a ≤255-comparison JVM fold per row) scaled
-    up to the ``bits`` range — every cell then holds ~equal row counts
+    dims to EQUAL-FREQUENCY ranks: 255 approximate quantile boundaries
+    (one approxQuantile pass, 0.001 relative error) define the cells,
+    and a row's rank is how many boundaries it clears (a
+    ≤255-comparison JVM fold per row) scaled up to the 12-bit rank
+    range — every cell then holds ~equal row counts
     no matter the skew, so per-file zones stay tight where the data is
     dense. String dims keep their (already data-adaptive) mixed-radix
     ranks in either mode. Hash bucketing by the merge key is
@@ -356,17 +353,18 @@ def zorder_compact(
     )
     boundaries: dict[str, list[float]] = {}
     if quantile_cols:
-        q = 1 << quantile_bits
+        q = 256
         probs = [j / q for j in range(1, q)]
         nums = df.select(
             *[as_num(c).alias(f"_q_{i}") for i, c in enumerate(quantile_cols)]
         )
         got = nums.approxQuantile(
-            [f"_q_{i}" for i in range(len(quantile_cols))], probs, quantile_eps
+            [f"_q_{i}" for i in range(len(quantile_cols))], probs, 0.001
         )
         for c, bs in zip(quantile_cols, got):
             boundaries[c] = [float(b) for b in bs]
-    n, scale = len(cols), (1 << bits) - 1
+    n, bits = len(cols), 12
+    scale = (1 << bits) - 1
     z = F.lit(0).cast("long")
     for i, c in enumerate(cols):
         lo = float(bounds[f"lo_{i}"] or 0.0)
@@ -485,7 +483,6 @@ def plan_maintenance(
     max_files_per_bucket: int = 4,
     keep_last: int = 3,
     zorder_overlap_threshold: float = 0.5,
-    min_files_for_zorder: int = 8,
 ) -> dict:
     """Advise maintenance actions from the manifest ALONE — zero Spark
     jobs, zero data I/O. The planning half of what ClickHouse's
@@ -503,8 +500,8 @@ def plan_maintenance(
     Policy mirrors the executors: ``compact_buckets`` is exactly what
     ``compact(fold_all_deltas=False, max_files_per_bucket=...)`` would
     rewrite; ``zorder.recommend`` fires only when the caller opted
-    into clustering (``stats_columns`` property set) AND enough files
-    exist for skipping to matter AND the recorded zone maps have
+    into clustering (``stats_columns`` property set) AND at least 8
+    files exist for skipping to matter AND the recorded zone maps have
     degraded past ``zorder_overlap_threshold`` (fresh ingest writes
     key-sorted files with wide zone ranges — overlap creeps up between
     OPTIMIZE passes; see :func:`zorder_compact`)."""
@@ -534,7 +531,7 @@ def plan_maintenance(
         if per_bucket:
             zone_overlap[col] = round(sum(per_bucket) / len(per_bucket), 4)
     degraded = [c for c, f in zone_overlap.items() if f > zorder_overlap_threshold]
-    recommend_z = bool(degraded) and n_files >= min_files_for_zorder
+    recommend_z = bool(degraded) and n_files >= 8
     return {
         "compact_buckets": compact_buckets,
         "expire_snapshots": expire_n,
@@ -551,7 +548,6 @@ def run_maintenance(
     plan: dict | None = None,
     max_files_per_bucket: int = 4,
     keep_last: int = 3,
-    zorder_files_per_bucket: int = 4,
 ) -> dict:
     """Execute a :func:`plan_maintenance` plan (computing one if not
     given): z-order rewrite when recommended (it also folds every
@@ -564,10 +560,7 @@ def run_maintenance(
         )
     did: dict = {"plan": plan}
     if plan["zorder"]["recommend"]:
-        did["zordered_columns"] = zorder_compact(
-            table, plan["zorder"]["columns"],
-            files_per_bucket=zorder_files_per_bucket,
-        )
+        did["zordered_columns"] = zorder_compact(table, plan["zorder"]["columns"])
     elif plan["compact_buckets"]:
         did["compacted_buckets"] = compact(
             table, max_files_per_bucket=max_files_per_bucket,

@@ -78,6 +78,13 @@ ENVELOPE_COLS = ("op", "lsn", "op_seq")
 
 @dataclass
 class MergeResult:
+    """What one :func:`merge_changes` call did. ``touched_buckets`` are
+    the buckets this commit wrote (CoW: rewrote; MoR: appended deltas
+    to); ``rows_written``/``files_written`` count its new files. The
+    batch fields (``batch_rows``, ``batch_keys``, the lsn range,
+    ``partition_lineage``) come from the ``collect_stats`` pre-pass
+    and are -1/None/empty without it."""
+
     snapshot_id: int
     skipped: bool = False
     touched_buckets: list[int] = field(default_factory=list)
@@ -101,18 +108,18 @@ def merge_changes(
     changes: DataFrame,
     batch_id: int | None = None,
     source_id: str = "default",
-    op_col: str = "op",
-    ts_col: str = "ts",
-    seq_col: str = "op_seq",
-    lsn_col: str = "lsn",
-    delete_op: str = "d",
-    evolve_schema: bool = True,
     collect_lineage: bool = True,
     collect_stats: bool = True,
     mode: str = "cow",
     extra_properties: dict | None = None,
 ) -> MergeResult:
     """Apply a CDC change batch to ``table``. Returns merge stats.
+
+    ``changes`` carries the payload columns plus the envelope: ``op``
+    (``'d'`` deletes; ``c``/``r``/``u`` upsert), ``ts`` and ``op_seq``
+    (the version) and, optionally, ``lsn`` (the tie-break within the
+    batch). Payload columns the table lacks are added to its schema
+    (nullable; older rows read them as null).
 
     ``mode``:
 
@@ -128,9 +135,11 @@ def merge_changes(
     ``collect_stats`` runs the pre-pass job that fills ``batch_rows``,
     ``batch_keys``, the lsn range and (with ``collect_lineage``) the
     per-input-partition lineage, and lets CoW read only the buckets the
-    batch touches. Without it those fields are -1/None and the merge is
-    one Spark job: use it for backfills, keep it for targeted streaming
-    batches where bucket pruning pays.
+    batch touches. Without it those fields are -1/None, CoW rewrites
+    every bucket and the merge is one Spark job: turn it off for MoR
+    backfills, keep it for targeted streaming batches where bucket
+    pruning pays. ``touched_buckets``, ``rows_written`` and
+    ``files_written`` are reported either way.
 
     Exactly-once: when ``batch_id`` is given and ≤ the last committed
     batch id for ``source_id`` (stored in snapshot properties — the
@@ -155,16 +164,14 @@ def merge_changes(
         return MergeResult(snapshot_id=table.snapshot_id, skipped=True)
 
     # -- schema evolution: payload columns not yet in the table schema
-    if evolve_schema:
-        known = {f.name for f in table.schema.fields}
-        new_fields = [
-            f
-            for f in changes.schema.fields
-            if f.name not in known and f.name not in ENVELOPE_COLS
-        ]
-        if new_fields:
-            nullable = [type(f)(f.name, f.dataType, True) for f in new_fields]
-            table.add_columns(nullable)
+    known = {f.name for f in table.schema.fields}
+    new_fields = [
+        f
+        for f in changes.schema.fields
+        if f.name not in known and f.name not in ENVELOPE_COLS
+    ]
+    if new_fields:
+        table.add_columns([type(f)(f.name, f.dataType, True) for f in new_fields])
 
     stats_ms = 0.0
     batch_rows = batch_keys = -1
@@ -173,7 +180,7 @@ def merge_changes(
     touched = list(range(table.num_buckets))
     if collect_stats:
         t_stats = time.monotonic()
-        stat_rows = _batch_stats(table, changes, lsn_col, collect_lineage)
+        stat_rows = _batch_stats(table, changes, collect_lineage)
         batch_keys = sum(r["keys"] for r in stat_rows)
         if batch_keys == 0:
             res = MergeResult(snapshot_id=table.snapshot_id)
@@ -194,9 +201,7 @@ def merge_changes(
             ]
         stats_ms = (time.monotonic() - t_stats) * 1000
 
-    plan = _merge_plan(
-        table, changes, mode, touched, op_col, ts_col, seq_col, lsn_col, delete_op
-    )
+    plan = _merge_plan(table, changes, mode, touched)
     props = with_batch_id(
         {**table.properties, **(extra_properties or {})}, batch_id, source_id
     )
@@ -212,20 +217,16 @@ def merge_changes(
     if mode == "mor":
         summary["partition_lineage"] = lineage
         snap_id = table.append_deltas(plan, properties=props, summary=summary)
-        if not collect_stats:
-            touched = sorted(int(b) for b in table.manifest.get("delta_buckets", []))
+        touched = table.last_write_buckets
     else:
         summary.update(touched_buckets=touched, partition_lineage=lineage)
         snap_id = table.overwrite_buckets(plan, touched, props, summary)
 
-    rows_written, files_written = (
-        (table.last_write_rows, table.last_write_files) if collect_stats else (-1, -1)
-    )
     res = MergeResult(
         snapshot_id=snap_id,
         touched_buckets=touched,
-        rows_written=rows_written,
-        files_written=files_written,
+        rows_written=table.last_write_rows,
+        files_written=table.last_write_files,
         batch_rows=int(batch_rows),
         batch_keys=int(batch_keys),
         min_lsn=min_lsn,
@@ -250,11 +251,6 @@ def _merge_plan(
     changes: DataFrame,
     mode: str,
     touched: list[int],
-    op_col: str,
-    ts_col: str,
-    seq_col: str,
-    lsn_col: str,
-    delete_op: str,
 ) -> DataFrame:
     """The one merge plan (see the module docstring): the batch as
     stored rows of generation snapshot_id + 1, plus in ``cow`` mode the
@@ -271,18 +267,16 @@ def _merge_plan(
         raw = _bq(f.name) if f.name in cols else f"CAST(NULL AS {f.dataType.simpleString()})"
         return f"{raw} AS {_bq(f.name)}"
 
-    lsn = f"CAST({_bq(lsn_col)} AS BIGINT)" if lsn_col in cols else "CAST(NULL AS BIGINT)"
+    lsn = "CAST(lsn AS BIGINT)" if "lsn" in cols else "CAST(NULL AS BIGINT)"
     rows = f"""
         SELECT {bucket}, {', '.join(batch_col(f) for f in user)},
-               CAST({_bq(ts_col)} AS TIMESTAMP) AS {_bq(V_TS)},
-               coalesce(CAST({_bq(seq_col)} AS BIGINT), CAST(-1 AS BIGINT)) AS {_bq(V_SEQ)},
-               ({_bq(op_col)} = {{delete_op}}) AS {_bq(V_DEL)},
+               CAST(ts AS TIMESTAMP) AS {_bq(V_TS)},
+               coalesce(CAST(op_seq AS BIGINT), CAST(-1 AS BIGINT)) AS {_bq(V_SEQ)},
+               (op = 'd') AS {_bq(V_DEL)},
                CAST({{gen}} AS BIGINT) AS {_bq(V_GEN)},
                {lsn} AS {_bq(V_LSN)}
         FROM {{src}}"""
-    args: dict[str, Any] = {
-        "src": changes, "delete_op": delete_op, "gen": table.snapshot_id + 1,
-    }
+    args: dict[str, Any] = {"src": changes, "gen": table.snapshot_id + 1}
     if mode == "cow":
         stored = ", ".join(_bq(c) for c in [*names, *HIDDEN_COLS])
         rows += f"""
@@ -300,9 +294,7 @@ def _merge_plan(
     )
 
 
-def _batch_stats(
-    table: LakeTable, changes: DataFrame, lsn_col: str, lineage: bool
-) -> list:
+def _batch_stats(table: LakeTable, changes: DataFrame, lineage: bool) -> list:
     """The stats/lineage pre-pass over the raw batch rows: per input
     partition (one row when ``lineage`` is off) the rows and keys it
     contributes and their lsn range, with each key counted in the first
@@ -310,7 +302,7 @@ def _batch_stats(
     to."""
     keys = ", ".join(_bq(k) for k in table.key_columns)
     pid = "spark_partition_id()" if lineage else "0"
-    lsn = _bq(lsn_col) if lsn_col in changes.columns else "CAST(NULL AS BIGINT)"
+    lsn = "lsn" if "lsn" in changes.columns else "CAST(NULL AS BIGINT)"
     return changes.sparkSession.sql(
         f"""
         SELECT __pid AS _pid, sum(__n) AS `rows`, count(1) AS `keys`,

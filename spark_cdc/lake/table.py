@@ -194,9 +194,10 @@ class LakeTable:
         # commit — per-phase lineage for MergeResult.phases and bench
         self.last_write_ms = 0.0
         self.last_commit_ms = 0.0
-        # rows/files the most recent _write_data wrote (MergeResult)
+        # rows/files/buckets the most recent _write_data wrote (MergeResult)
         self.last_write_rows = 0
         self.last_write_files = 0
+        self.last_write_buckets: list[int] = []
         # per-file [min,max] key stats from the most recent _write_data,
         # folded into the manifest by _commit_next
         self._last_write_stats: dict[str, list] = {}
@@ -806,26 +807,21 @@ class LakeTable:
     def append_deltas(
         self,
         df: DataFrame,
-        touched_buckets: list[int] | None = None,
         properties: dict[str, Any] | None = None,
         summary: dict[str, Any] | None = None,
     ) -> int:
         """Merge-on-read commit: append ``df`` (carrying ``_bucket``) as
-        delta files to ``touched_buckets`` without rewriting existing
-        data. Ingest cost is O(batch); reads of flagged buckets resolve
-        latest-version on the fly until :func:`spark_cdc.lake.
-        maintenance.compact` folds them."""
+        delta files to the buckets it writes, without rewriting existing
+        data, and flag those buckets. Ingest cost is O(batch); reads of
+        flagged buckets resolve latest-version on the fly until
+        :func:`spark_cdc.lake.maintenance.compact` folds them."""
         new_files = self._write_data(df)
         files = {b: list(fl) for b, fl in self.manifest["files"].items()}
         for b, fl in new_files.items():
             files.setdefault(b, []).extend(fl)
-        if touched_buckets is None:
-            # derive from what the write actually produced (saves the
-            # caller a pre-pass job)
-            touched_buckets = [int(b) for b in new_files]
         deltas = sorted(
             set(int(b) for b in self.manifest.get("delta_buckets", []))
-            | set(touched_buckets)
+            | set(self.last_write_buckets)
         )
         return self._commit_next(
             files,
@@ -939,6 +935,7 @@ class LakeTable:
                 for f in sorted(os.listdir(bdir))
                 if f.endswith(".parquet")
             ]
+        self.last_write_buckets = sorted(int(b) for b in files)
         self._collect_footer_stats(files)
         self.last_write_ms = (_time.monotonic() - t0) * 1000
         return files

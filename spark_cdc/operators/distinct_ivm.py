@@ -27,16 +27,18 @@ drift. Here it is solved with the standard two-level construction
   table is exactly the per-group multiset of live non-null values,
   bounded by the number of DISTINCT (group, value) pairs, not rows.
 - **View table** (level 2): ``group_cols → (n_distinct, min_v,
-  max_v)`` recomputed *only for buckets touched by the batch* from the
-  support table — ``n_distinct`` is a plain row count there, and
-  min/max see every surviving value, so retracting the extremum is
-  just not seeing it anymore.
+  max_v)``. Its one refresh path recomputes every group of the buckets
+  the batch touched from the support table and overwrites only those
+  view buckets; the rest carry over by reference. ``n_distinct`` is a
+  plain row count there, and min/max see every surviving value, so
+  retracting the extremum is just not seeing it anymore.
 
 Cost per maintenance step: O(change set) to merge level 1 (same
 touched-bucket CoW as every rollup) plus O(support volume of touched
 buckets) to refresh level 2 — the distinct values co-bucketed with the
-changed groups, never the full table. At 100 TB both levels shuffle on
-the same group-hash bucketing, so the level-2 refresh is a co-located
+changed groups, never the full table. Both levels bucket on the same
+group hash, so the touched buckets come out of level 1's own job and
+serve level 2 too, and at 100 TB the level-2 refresh is a co-located
 scan with no cross-bucket exchange.
 
 SQL semantics: ``COUNT(DISTINCT v)``, ``MIN(v)``, ``MAX(v)`` all
@@ -55,7 +57,9 @@ Exactly-once across the two commits: level 1 is guarded by the
 rollup's batch-id key, level 2 by its own ``distinct_view`` key. The
 orders matter — support first, view second — so a crash between them
 redelivers a batch whose support merge no-ops (guard) while the view
-refresh re-runs against the already-correct support rows.
+refresh re-runs against the already-correct support rows. The skipped
+support merge does not report its buckets, so that recovery refreshes
+every view bucket.
 """
 
 from __future__ import annotations
@@ -90,32 +94,9 @@ class DistinctRollup:
         view: LakeTable,
         group_cols: list[str],
         value_col: str,
-        refresh: str = "auto",
     ):
         if value_col in group_cols:
             raise ValueError("value_col must not be a group column")
-        if refresh not in ("auto", "merge", "overwrite"):
-            raise ValueError("refresh must be 'auto', 'merge' or 'overwrite'")
-        # 'merge': recompute ONLY the batch's groups and MERGE
-        # them into the view — O(batch groups), the right shape when
-        # polls are narrow relative to the accumulated table (the
-        # steady-state CDC regime: the table grows without bound, the
-        # poll doesn't). 'overwrite': recompute every group co-bucketed
-        # with a change and blind-overwrite those view buckets — no
-        # view-side read/dedup, so it wins when nearly every group is
-        # touched every poll (small-cardinality fixtures, full-corpus
-        # recomputes). Both are exactly-once under the same guard key
-        # and can be switched between polls. 'auto' (default) picks per
-        # poll from the observed touched-group fraction: the batch's
-        # distinct-group count comes out of the same aggregation job
-        # that finds the touched buckets, and the view's current group
-        # count is a parquet-footer sum over its manifest (no Spark
-        # job) — when the batch touches ≥ half the view's groups the
-        # merge path's view-side read+dedup buys no pruning and the
-        # overwrite path wins (round-6 bench: distinct_ivm_ms drifted
-        # 4.4→7.6s on the wide-batch fixture under 'merge').
-        self.refresh = refresh
-        self.last_refresh_mode: str | None = None
         if (
             support.bucket_column != group_cols[0]
             or view.bucket_column != group_cols[0]
@@ -145,7 +126,6 @@ class DistinctRollup:
         group_fields: list[T.StructField],
         value_field: T.StructField,
         num_buckets: int = 32,
-        refresh: str = "auto",
     ) -> "DistinctRollup":
         """Create the support/view table pair with aligned bucketing."""
         group_cols = [f.name for f in group_fields]
@@ -175,97 +155,14 @@ class DistinctRollup:
             bucket_column=group_cols[0],
             num_buckets=num_buckets,
         )
-        return DistinctRollup(
-            support, view, group_cols, value_field.name, refresh=refresh
-        )
+        return DistinctRollup(support, view, group_cols, value_field.name)
 
     # ------------------------------------------------------- maintenance
-    def _batch_stats(self, signed: DataFrame) -> tuple[list[int], int]:
-        """(touched buckets, distinct batch groups) in ONE aggregation
-        job — the group count feeds the auto refresh-mode decision at
-        no extra Spark job over a bucket-only collect."""
-        row = signed.agg(
-            F.collect_set(
-                bucket_expr(self.group_cols[0], self.view.num_buckets)
-            ).alias("b"),
-            F.count_distinct(*[F.col(c) for c in self.group_cols]).alias("g"),
-        ).first()
-        return sorted(int(b) for b in (row["b"] or [])), int(row["g"] or 0)
-
-    def _view_rows(self) -> int:
-        """Current view row count from parquet footers — a manifest
-        walk, zero Spark jobs (the view is CoW single-version, so
-        footer rows ≈ live groups; the handful of tombstone rows only
-        make the auto decision marginally more conservative)."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
-            return 0
-        n = 0
-        import os
-
-        for fl in self.view.manifest["files"].values():
-            for rel in fl:
-                try:
-                    n += pq.read_metadata(
-                        os.path.join(self.view.path, rel)
-                    ).num_rows
-                except Exception:
-                    continue
-        return n
-
-    def _merge_view(
-        self, touched: list[int], groups: DataFrame, batch_id: int | None
-    ) -> int:
-        """Group-pruned level-2 refresh: recompute ONLY the batch's
-        distinct groups from the (already-merged) support rows and
-        MERGE them into the view — upsert for groups that still have
-        live values, delete for groups whose support vanished. The
-        full-bucket overwrite this replaces rewrote every view row
-        co-bucketed with a change, so a diverse batch re-aggregated
-        and re-wrote the WHOLE view each poll; now the aggregate's
-        shuffle and the write are bounded by the batch's group set
-        (bucket-file I/O stays the floor — level 1's CoW merge reads
-        those same files anyway). Exactly-once rides the merge's own
-        per-source batch-id guard (source_id=``GUARD``)."""
-        from spark_cdc.cdc.apply import apply_batch as _apply
-
-        agg = (
-            self.support.read(buckets=touched)
-            .join(groups, self.group_cols, "leftsemi")
-            .groupBy(*self.group_cols)
-            .agg(
-                F.count(F.lit(1)).alias("n_distinct"),
-                F.min(self.value_col).alias("min_v"),
-                F.max(self.value_col).alias("max_v"),
-            )
-        )
-        changes = groups.join(agg, self.group_cols, "left").select(
-            F.lit(0).cast("long").alias("lsn"),
-            F.lit(1).cast("long").alias("op_seq"),
-            F.when(F.col("n_distinct").isNull(), F.lit("d"))
-            .otherwise(F.lit("c"))
-            .alias("op"),
-            F.timestamp_seconds(F.lit(0)).alias("ts"),
-            *self.group_cols,
-            "n_distinct",
-            "min_v",
-            "max_v",
-        )
-        res = _apply(
-            self.view,
-            changes,
-            batch_id=batch_id,
-            source_id=self.GUARD,
-            collect_lineage=False,
-            collect_stats=False,
-            evolve_schema=False,
-        )
-        return res.snapshot_id
-
     def _refresh_view(self, touched: list[int], batch_id: int | None) -> int:
-        """Full recompute of level 2 for ``touched`` buckets from the
-        support table (rebuild path; its own batch-id guard)."""
+        """The level-2 refresh: recompute every group of the
+        ``touched`` buckets from the support table and overwrite those
+        view buckets, under the view's own batch-id guard. The other
+        buckets carry over by reference."""
         if self.view.has_committed(self.GUARD, batch_id):
             return self.view.snapshot_id
         fresh = (
@@ -295,27 +192,17 @@ class DistinctRollup:
         signed = signed.where(F.col(self.value_col).isNotNull()).select(
             *self.group_cols, self.value_col, SIGN_COL
         )
-        touched, n_batch_groups = self._batch_stats(signed)
+        self._level1.apply_batch(signed, batch_id=batch_id)
+        # the levels share bucketing, so the buckets level 1 touched are
+        # the view buckets to refresh
+        touched = self._level1.last_touched
+        if touched is None:
+            # level 1 skipped a redelivered batch; a crash may have come
+            # before the view commit, so refresh every bucket
+            touched = self._all_buckets()
         if not touched:
             return self.view.snapshot_id
-        mode = self.refresh
-        if mode == "auto":
-            # overwrite when the batch touches at least half the view's
-            # groups (or the view is empty — bootstrap): at that
-            # fraction the merge path's per-group pruning no longer
-            # narrows the refresh, it just adds a view read + dedup
-            view_groups = self._view_rows()
-            mode = (
-                "overwrite"
-                if view_groups == 0 or n_batch_groups * 2 >= view_groups
-                else "merge"
-            )
-        self.last_refresh_mode = mode
-        groups = signed.select(*self.group_cols).distinct()
-        self._level1.apply_batch(signed, batch_id=batch_id)
-        if mode == "overwrite":
-            return self._refresh_view(touched, batch_id)
-        return self._merge_view(touched, groups, batch_id)
+        return self._refresh_view(touched, batch_id)
 
     def rebuild(self, source: DataFrame, batch_id: int | None = None) -> int:
         """From-scratch recompute (feed-expiry recovery); ``source``
@@ -325,13 +212,15 @@ class DistinctRollup:
             *self.group_cols, self.value_col, SIGN_COL
         )
         self._level1.rebuild(source, batch_id=batch_id)
-        touched = sorted(
-            {int(b) for b in self.support.manifest["files"]}
-            | {int(b) for b in self.view.manifest["files"]}
-        )
+        touched = self._all_buckets()
         if not touched:
             return self.view.snapshot_id
         return self._refresh_view(touched, batch_id)
+
+    def _all_buckets(self) -> list[int]:
+        return sorted(
+            {int(b) for t in (self.support, self.view) for b in t.manifest["files"]}
+        )
 
     # -------------------------------------------------------------- read
     def read(self) -> DataFrame:

@@ -204,10 +204,10 @@ class _MorMaintenance:
     across the index's hash-bucket space — by token for postings, by id
     for projections/codes — so as soon as a poll touches more keys than
     there are buckets, a copy-on-write merge rewrites O(index) per poll.
-    The scalable steady state is merge-on-read polls (O(change set)
-    delta appends; probes stay pruned because delta files carry the
-    same per-file bucket-column range stats, and reads resolve
-    latest-version on the fly) plus a SELECTIVE compaction every
+    So every poll merges on read (O(change set) delta appends; probes
+    stay pruned because delta files carry the same per-file
+    bucket-column range stats, and reads resolve latest-version on the
+    fly), and a SELECTIVE compaction runs every
     ``compact_every`` polls that folds only buckets which accumulated
     > ``compact_max_files`` files (``fold_all_deltas=False``) — the
     ClickHouse background-merge / Iceberg binpack discipline. The poll
@@ -232,7 +232,7 @@ class _MorMaintenance:
         # _derive reads the diff in several jobs and union branches;
         # materialize it once instead of re-running the snapshot diff
         changes, props = self._derive(diff.localCheckpoint(), to_snap)
-        self._merge(changes, to_snap, props, self.merge_mode)
+        self._merge(changes, to_snap, props, mode="mor")
         self._maybe_compact()
 
     def _merge(
@@ -281,7 +281,7 @@ class _MorMaintenance:
         source, and carries no batch id: a crash after it redelivers
         the poll with the same ``to_snapshot``, whose merge the guard
         skips, so no change batch is lost or applied twice."""
-        if self.merge_mode != "mor" or not self.compact_every:
+        if not self.compact_every:
             return []
         self._polls_since_compact += 1
         if self._polls_since_compact < self.compact_every:
@@ -326,7 +326,6 @@ class MaintainedBM25Index(_MorMaintenance):
         text_col: str = "text",
         id_col: str = "doc_id",
         source_id: str = "bm25_maint",
-        merge_mode: str = "mor",
         compact_every: int | None = 8,
         compact_max_files: int = 8,
     ):
@@ -335,7 +334,6 @@ class MaintainedBM25Index(_MorMaintenance):
         self.text_col = text_col
         self.id_col = id_col
         self.source_id = source_id
-        self.merge_mode = merge_mode
         self.compact_every = compact_every
         self.compact_max_files = compact_max_files
 
@@ -482,7 +480,6 @@ class MaintainedProjection(_MorMaintenance):
         project,
         id_col: str = "doc_id",
         source_id: str = "proj_maint",
-        merge_mode: str = "mor",
         compact_every: int | None = 8,
         compact_max_files: int = 8,
     ):
@@ -491,7 +488,6 @@ class MaintainedProjection(_MorMaintenance):
         self.project = project
         self.id_col = id_col
         self.source_id = source_id
-        self.merge_mode = merge_mode
         self.compact_every = compact_every
         self.compact_max_files = compact_max_files
 
@@ -604,7 +600,6 @@ class MaintainedVectorCodes(_MorMaintenance):
         vec_col: str = "embedding",
         id_col: str = "vec_id",
         source_id: str = "codes_maint",
-        merge_mode: str = "mor",
         compact_every: int | None = 8,
         compact_max_files: int = 8,
     ):
@@ -615,7 +610,6 @@ class MaintainedVectorCodes(_MorMaintenance):
         self.vec_col = vec_col
         self.id_col = id_col
         self.source_id = source_id
-        self.merge_mode = merge_mode
         self.compact_every = compact_every
         self.compact_max_files = compact_max_files
 

@@ -60,6 +60,8 @@ class IncrementalRollup:
         self.group_cols = group_cols
         self.measures = measures
         self.count_col = count_col
+        # buckets the last fold rewrote; None when its guard skipped it
+        self.last_touched: list[int] | None = None
 
     def apply_batch(self, batch: DataFrame, batch_id: int | None = None) -> int:
         return self._fold(batch, batch_id, rebuild=False)
@@ -84,6 +86,7 @@ class IncrementalRollup:
         nothing, replacing every bucket — in one commit that records
         ``batch_id`` for the guard. Groups whose count reaches 0 are
         dropped. Untouched buckets carry over by manifest reference."""
+        self.last_touched = None
         if self.table.has_committed(self.GUARD, batch_id):
             return self.table.snapshot_id  # exactly-once skip
         # cast each measure to its declared table type (count-style
@@ -105,9 +108,9 @@ class IncrementalRollup:
             touched = {r[0] for r in deltas.select(BUCKET_COL).distinct().collect()}
             if rebuild:
                 touched |= {int(b) for b in self.table.manifest["files"]}
+            self.last_touched = touched = sorted(touched)
             if not touched:
                 return self.table.snapshot_id
-            touched = sorted(touched)
             groups = deltas.drop(BUCKET_COL)
             if not rebuild:
                 groups = self.table.read(buckets=touched).unionByName(

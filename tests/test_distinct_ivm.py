@@ -283,25 +283,11 @@ def test_quantile_values_exact_weighted(spark, tmp_path):
     assert u["q0_5"] == ref_q(vals2, 0.5) == "c"
 
 
-def test_overwrite_refresh_mode_equals_merge(spark, tmp_path):
-    """Both refresh modes (group-pruned MERGE — default, wins when
-    polls are narrow vs the table — and full-bucket overwrite — wins
-    when every poll touches nearly every group) maintain the same
-    view, batch for batch, and stay exactly-once under the shared
-    guard key."""
-    src = LakeTable.create(
-        spark, str(tmp_path / "src"), PAYLOAD_SCHEMA,
-        key_columns=["conv_id", "turn_idx"], num_buckets=4,
-    )
-    drs = {}
-    for mode in ("merge", "overwrite"):
-        drs[mode] = (
-            DistinctRollup.create(
-                spark, str(tmp_path / f"s_{mode}"), str(tmp_path / f"v_{mode}"),
-                GROUP_FIELDS, VALUE_FIELD, num_buckets=4, refresh=mode,
-            ),
-            ChangeFeedConsumer(src, str(tmp_path / f"cur_{mode}")),
-        )
+def test_view_equals_scratch_batch_for_batch(spark, tmp_path):
+    """The touched-bucket refresh keeps the view equal to the
+    from-scratch aggregate after every poll, through a min retraction,
+    a new group and a vanished group."""
+    src, dr, consumer = _mk(spark, tmp_path)
     batches = [
         [_ev(1, "c", "c1", 0, "user", "b", 1),
          _ev(2, "c", "c2", 0, "user", "a", 1),
@@ -313,51 +299,32 @@ def test_overwrite_refresh_mode_equals_merge(spark, tmp_path):
     for i, rows in enumerate(batches):
         apply_batch(src, spark.createDataFrame(rows, CHANGE_SCHEMA),
                     batch_id=i, collect_lineage=False)
-        for mode, (dr, consumer) in drs.items():
-            assert maintain_from_feed(dr, consumer) == 1
-        assert _maintained(drs["merge"][0]) == _maintained(drs["overwrite"][0])
-        assert _maintained(drs["merge"][0]) == _scratch(src), f"batch {i}"
+        assert maintain_from_feed(dr, consumer) == 1
+        assert _maintained(dr) == _scratch(src), f"batch {i}"
 
 
-def test_auto_refresh_mode_flips_on_touched_fraction(spark, tmp_path):
-    """refresh='auto' (the default) must pick overwrite for wide
-    batches (most view groups touched) and merge for narrow ones —
-    while staying equal to the from-scratch aggregate either way."""
+def test_narrow_poll_rewrites_only_its_view_bucket(spark, tmp_path):
+    """A poll that touches one group of many rewrites only that group's
+    view bucket; every other bucket keeps its files."""
+    from spark_cdc.lake.table import bucket_expr
+
     src, dr, consumer = _mk(spark, tmp_path)
-    assert dr.refresh == "auto"
-
-    # bootstrap batch: two groups, empty view → overwrite
-    b0 = [_ev(1, "c", "c1", 0, "user", "a", 1),
-          _ev(2, "c", "c2", 0, "assistant", "b", 1)]
-    apply_batch(src, spark.createDataFrame(b0, CHANGE_SCHEMA),
+    wide = [_ev(10 + i, "c", f"w{i}", 0, f"role{i}", f"v{i}", 1)
+            for i in range(12)]
+    apply_batch(src, spark.createDataFrame(wide, CHANGE_SCHEMA),
                 batch_id=0, collect_lineage=False)
     assert maintain_from_feed(dr, consumer) == 1
-    assert dr.last_refresh_mode == "overwrite"
-    assert _maintained(dr) == _scratch(src)
+    before = {b: list(fl) for b, fl in dr.view.manifest["files"].items()}
+    assert len(before) == 4, "the fixture must fill every view bucket"
 
-    # widen the view to many groups so a single-group batch is narrow
-    b1 = [_ev(10 + i, "c", f"w{i}", 0, f"role{i}", f"v{i}", 2)
-          for i in range(10)]
-    apply_batch(src, spark.createDataFrame(b1, CHANGE_SCHEMA),
-                batch_id=1, collect_lineage=False)
+    apply_batch(src, spark.createDataFrame(
+        [_ev(100, "c", "n1", 0, "role3", "zzz", 2)], CHANGE_SCHEMA),
+        batch_id=1, collect_lineage=False)
     assert maintain_from_feed(dr, consumer) == 1
-    assert _maintained(dr) == _scratch(src)
-
-    # narrow batch: 1 of 12 groups touched → merge path
-    b2 = [_ev(100, "c", "c9", 0, "user", "zzz", 3)]
-    apply_batch(src, spark.createDataFrame(b2, CHANGE_SCHEMA),
-                batch_id=2, collect_lineage=False)
-    assert maintain_from_feed(dr, consumer) == 1
-    assert dr.last_refresh_mode == "merge"
-    assert _maintained(dr) == _scratch(src)
-
-    # wide batch touching every group → overwrite path
-    b3 = [_ev(200 + i, "c", f"x{i}", 0, f"role{i}", f"nv{i}", 4)
-          for i in range(10)]
-    b3 += [_ev(300, "c", "c10", 0, "user", "q", 4),
-           _ev(301, "c", "c11", 0, "assistant", "r", 4)]
-    apply_batch(src, spark.createDataFrame(b3, CHANGE_SCHEMA),
-                batch_id=3, collect_lineage=False)
-    assert maintain_from_feed(dr, consumer) == 1
-    assert dr.last_refresh_mode == "overwrite"
+    want = spark.createDataFrame([("role3",)], ["role"]) \
+        .select(bucket_expr("role", 4)).first()[0]
+    after = dr.view.manifest["files"]
+    changed = sorted(int(b) for b in set(before) | set(after)
+                     if before.get(b) != after.get(b))
+    assert changed == [want]
     assert _maintained(dr) == _scratch(src)

@@ -706,7 +706,7 @@ def test_quantizer_drift_detection_and_versioned_retrain(spark, tmp_path):
 
 
 def test_mor_polls_append_deltas_probe_still_prunes(spark, tmp_path):
-    """The default poll mode is merge-on-read: each poll appends
+    """Polls merge on read: each poll appends
     O(change set) delta files instead of rewriting every token bucket
     (a diverse doc batch touches most of the token hash space, so CoW
     would be an O(index) rewrite per poll). With compaction disabled,
@@ -725,7 +725,6 @@ def test_mor_polls_append_deltas_probe_still_prunes(spark, tmp_path):
         idx, ChangeFeedConsumer(docs, os.path.join(base, "cursor")),
         compact_every=None,
     )
-    assert maint.merge_mode == "mor"
     for i, rows in enumerate(
         [_texts(40), [(j, f"updated zeta w{j}") for j in range(0, 40, 7)],
          [(j, None) for j in range(0, 40, 11)]]
@@ -733,6 +732,8 @@ def test_mor_polls_append_deltas_probe_still_prunes(spark, tmp_path):
         apply_batch(docs, _env(spark, rows, i, "d" if i == 2 else "c"),
                     batch_id=i, collect_lineage=False)
         maint.catch_up()
+    ops = [m["summary"]["operation"] for m in maint.table.history()[1:]]
+    assert ops == ["merge_mor"] * 3, ops
     assert maint.table.manifest.get("delta_buckets"), "MoR polls must leave deltas"
     total = len(idx.selected_files())
     probed = len(idx.selected_files(buckets=idx.buckets_for(["alpha"]),

@@ -81,18 +81,42 @@ def test_mor_fast_path_no_stats(spark, tmp_path):
     assert_df_equal(mor.read(), expect, KEY_COLUMNS)
 
 
+def test_mor_touched_buckets_are_this_commits(spark, tmp_path):
+    """A MoR merge reports the buckets it wrote, not the table's
+    accumulated delta buckets, and counts its rows and files, with and
+    without the stats pre-pass."""
+    from spark_cdc.lake.table import bucket_expr
+
+    log = generate_change_log(spark, n_events=400, n_convs=40, seed=37)
+    hot = log.select("conv_id").first()["conv_id"]
+    one = log.where(F.col("conv_id") == hot).withColumn("lsn", F.col("lsn") + 10_000)
+    want = [one.select(bucket_expr("conv_id", 8)).first()[0]]
+    for stats in (False, True):
+        mor = LakeTable.create(
+            spark, str(tmp_path / f"t{stats}"), PAYLOAD_SCHEMA,
+            key_columns=KEY_COLUMNS, num_buckets=8,
+        )
+        apply_batch(mor, log, batch_id=0, mode="mor", collect_stats=stats)
+        assert len(mor.manifest["delta_buckets"]) > 1
+        files = {b: list(fl) for b, fl in mor.manifest["files"].items()}
+        res = apply_batch(mor, one, batch_id=1, mode="mor", collect_stats=stats)
+        assert res.touched_buckets == want, (stats, res.touched_buckets)
+        grew = [int(b) for b, fl in mor.manifest["files"].items() if fl != files.get(b)]
+        assert grew == want
+        assert res.rows_written > 0 and res.files_written > 0
+
+
 def test_merge_quotes_hostile_identifiers(spark, tmp_path):
     """The SQL-text merge plan and pre-pass quote what they embed:
-    payload columns named with a backtick, braces and a quote, and a
-    delete op carrying a quote, end equal to the one-shot replay in
-    every mode, with and without the stats pre-pass."""
+    payload columns named with a backtick, braces and a quote end
+    equal to the one-shot replay in every mode, with and without the
+    stats pre-pass."""
     import datetime
     import random
 
     from pyspark.sql import types as T
 
     hostile = ["we`ird", "{br}ace", "it's"]
-    delete_op = "d'el"
     payload = T.StructType(
         [T.StructField("conv_id", T.StringType()), T.StructField("turn_idx", T.IntegerType())]
         + [T.StructField(c, T.StringType()) for c in hostile]
@@ -105,7 +129,7 @@ def test_merge_quotes_hostile_identifiers(spark, tmp_path):
     rnd = random.Random(7)
     base = datetime.datetime(2024, 1, 1)
     rows = [
-        (lsn, rnd.randint(0, 2), rnd.choice(["c", "u", delete_op]),
+        (lsn, rnd.randint(0, 2), rnd.choice(["c", "u", "d"]),
          rnd.choice(["a", "b", "c"]), rnd.randint(0, 1),
          f"w{lsn}", f"b{lsn}", f"q{lsn}", base + datetime.timedelta(seconds=rnd.randint(0, 3)))
         for lsn in range(24)
@@ -117,7 +141,7 @@ def test_merge_quotes_hostile_identifiers(spark, tmp_path):
     plain = [f"h{hostile.index(c)}" if c in hostile else c for c in log.columns]
     want = sorted(
         tuple(r) for r in replay_changes_df(
-            log.toDF(*plain), ["conv_id", "turn_idx"], delete_op=delete_op
+            log.toDF(*plain), ["conv_id", "turn_idx"]
         ).collect()
     )
     assert want, "the fixture must leave live rows"
@@ -130,7 +154,7 @@ def test_merge_quotes_hostile_identifiers(spark, tmp_path):
         for i, stats in enumerate((True, False, True)):
             apply_batch(
                 table, log.where((F.col("lsn") >= 8 * i) & (F.col("lsn") < 8 * i + 8)),
-                batch_id=i, mode=mode, delete_op=delete_op,
+                batch_id=i, mode=mode,
                 collect_stats=stats, collect_lineage=stats,
             )
         got = sorted(tuple(r.asDict()[c] for c in names) for r in table.read().collect())

@@ -87,9 +87,7 @@ def test_merge_plan_is_single_exchange(spark, tmp_path):
     apply_batch(table, src, batch_id=0, collect_stats=False, collect_lineage=False)
     for mode in ("cow", "mor"):
         for touched in (list(range(8)), [1, 5]):
-            plan_df = _merge_plan(
-                table, src, mode, touched, "op", "ts", "op_seq", "lsn", "d"
-            )
+            plan_df = _merge_plan(table, src, mode, touched)
             plan_df.collect()
             plan = plan_df._jdf.queryExecution().executedPlan().toString()
             # AQE prints the final AND the initial plan; count only the final
