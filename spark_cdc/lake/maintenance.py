@@ -9,7 +9,12 @@ expire_snapshots procedures:
   (many small files accumulate when streaming micro-batches each touch
   a bucket) and drops delete tombstones older than every retained
   reader — after compaction a late event older than the tombstone
-  horizon is out of contract (standard CDC retention semantics).
+  horizon is out of contract (standard CDC retention semantics). Like
+  a ReplacingMergeTree part merge, it folds each bucket locally: one
+  Spark job without an exchange hands groups of buckets to Python
+  workers, which resolve and rewrite them with pyarrow, one bucket's
+  rows in memory at a time; the driver only registers the files and
+  commits.
 - ``expire_snapshots`` deletes manifests + data files unreachable from
   the last N snapshots (time travel window).
 """
@@ -18,6 +23,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -28,7 +34,7 @@ from spark_cdc.lake.table import (
     V_DEL,
     LakeTable,
     bucket_expr,
-    resolve_latest,
+    latest_arrow,
 )
 
 
@@ -51,7 +57,25 @@ def compact(
     their (prunable, still-correct) delta files until they accumulate
     enough to be worth rewriting, the same incremental part-merge
     discipline as ClickHouse background merges / Iceberg binpack
-    rewrite_data_files."""
+    rewrite_data_files.
+
+    What runs where: every file of a bucket is bucket-local, so the fold
+    needs no exchange. The driver groups the buckets by input bytes and
+    runs ONE Spark job over the groups (``sc.parallelize``, no shuffle,
+    no JVM sort). Each task, in a Python worker, rewrites its buckets
+    one at a time with pyarrow (:func:`_rewrite_bucket`): it reads the
+    bucket's files, null-fills columns added after a file was written,
+    keeps the latest version of each key (:func:`latest_arrow`, the
+    Arrow twin of the one resolver; an unkeyed table is concatenated),
+    drops tombstones under ``drop_tombstones`` and writes one key-sorted
+    file into this commit's ``data/snap<id>-<uuid>/_bucket=<k>/``. Only
+    file names come back; the driver reads their footers and commits,
+    as for any Spark write (:meth:`LakeTable.register_files`,
+    :meth:`LakeTable.replace_buckets`).
+
+    Memory bound: a task holds one bucket's decoded rows (all of its
+    versions) at a time, with no spill; a bucket must fit in a Python
+    worker's memory."""
     deltas = {int(b) for b in table.manifest.get("delta_buckets", [])}
     if not fold_all_deltas:
         deltas = {
@@ -69,34 +93,122 @@ def compact(
     )
     if not fragmented:
         return []
-    # single-exchange fold, the merge plan's shape: shuffle the raw
-    # multi-generation rows once on the bucket, then resolve per
-    # (bucket, key) in place; write tasks come out bucket-aligned
-    raw = table.read(buckets=fragmented, include_hidden=True, resolve=False)
-    keys = table.key_columns
-    if table.bucket_column:
-        raw = raw.withColumn(
-            BUCKET_COL, bucket_expr(table.bucket_column, table.num_buckets)
-        )
-    else:
-        raw = raw.withColumn(BUCKET_COL, F.lit(0))
-    np_ = min(
-        len(fragmented),
-        max(raw.sparkSession.sparkContext.defaultParallelism, 1),
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    units = []
+    for b in fragmented:
+        paths = [os.path.join(table.path, f) for f in table.manifest["files"].get(str(b), [])]
+        units.append((sum(os.path.getsize(p) for p in paths), b, paths))
+    sc = table.spark.sparkContext
+    n = min(len(units), max(sc.defaultParallelism, 1))
+    # largest bucket first onto the lightest group
+    groups: list[list] = [[] for _ in range(n)]
+    loads = [0] * n
+    for size, b, paths in sorted(units, reverse=True):
+        k = loads.index(min(loads))
+        groups[k].append((b, paths))
+        loads[k] += size
+    rel_dir = table.new_data_dir()
+    spec = {
+        # Spark's own type mapping (timestamps as UTC microseconds)
+        "schema": pa.schema([f.with_nullable(True) for f in to_arrow_schema(table.schema)]),
+        "keys": table.key_columns,
+        "bucket_column": table.bucket_column,
+        "drop_tombstones": drop_tombstones,
+        "root": table.path,
+        "rel_dir": rel_dir,
+    }
+    written = (
+        sc.parallelize(groups, n)
+        .flatMap(lambda group: [_rewrite_bucket(spec, b, paths) for b, paths in group])
+        .collect()
     )
-    if keys:
-        df = resolve_latest(raw, keys, partitions=np_)
-    else:
-        df = raw.repartition(np_, F.col(BUCKET_COL))
-    if drop_tombstones and V_DEL in df.columns:
-        df = df.filter(~F.coalesce(F.col(V_DEL), F.lit(False)))
-    table.overwrite_buckets(
-        df,
+    new_files = {str(b): [rel] for b, rel in written if rel is not None}
+    table.register_files(new_files)
+    table.replace_buckets(
+        new_files,
         fragmented,
         summary={"operation": "compact", "buckets": fragmented,
                  "dropped_tombstones": drop_tombstones},
     )
     return fragmented
+
+
+def _rewrite_bucket(spec: dict, bucket: int, paths: list[str]) -> tuple[int, str | None]:
+    """Runs in a Python worker: fold one bucket's files into one file
+    (see :func:`compact`). Returns the bucket and the written file's
+    path relative to the table root, or None when no row survives."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    schema = spec["schema"]
+    parts = []
+    for p in paths:
+        data = pq.ParquetFile(p).read(use_threads=False)
+        parts.append(pa.table(
+            [
+                data.column(f.name).cast(f.type) if f.name in data.column_names
+                else pa.nulls(data.num_rows, f.type)
+                for f in schema
+            ],
+            schema=schema,
+        ))
+    data = pa.concat_tables(parts) if parts else schema.empty_table()
+    if spec["keys"]:
+        data = latest_arrow(data, spec["keys"], spec["bucket_column"])
+    if spec["drop_tombstones"] and V_DEL in data.column_names:
+        data = data.filter(pc.invert(pc.fill_null(data.column(V_DEL), False)))
+    if data.num_rows == 0:
+        return bucket, None
+    rel = os.path.join(
+        spec["rel_dir"], f"{BUCKET_COL}={bucket}", f"part-{uuid.uuid4().hex}.parquet"
+    )
+    out = os.path.join(spec["root"], rel)
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    # what Spark writes: snappy, INT64 UTC microsecond timestamps, no
+    # Arrow schema blob in the footer, dictionaries only where they pay
+    pq.write_table(
+        data,
+        out,
+        compression="snappy",
+        use_dictionary=_dictionary_columns(data),
+        store_schema=False,
+        coerce_timestamps="us",
+    )
+    return bucket, rel
+
+
+def _dictionary_columns(data) -> list[str]:
+    """Columns worth dictionary-encoding, by parquet-mr's fallback rule:
+    a dictionary pays when the dictionary plus the bit-packed indices
+    are smaller than the plain values. pyarrow's default encodes every
+    column, which makes unique columns (free text, sequence numbers)
+    larger than Spark writes them."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = []
+    for field, col in zip(data.schema, data.columns):
+        t = field.type
+        if pa.types.is_boolean(t) or pa.types.is_nested(t) or pa.types.is_null(t):
+            continue
+        values = col.drop_null()
+        if len(values) == 0:
+            continue
+        distinct = pc.unique(values)
+        if pa.types.is_binary(t) or pa.types.is_string(t):
+            plain = pc.sum(pc.binary_length(values)).as_py() + 4 * len(values)
+            dictionary = pc.sum(pc.binary_length(distinct)).as_py() + 4 * len(distinct)
+        else:
+            width = t.bit_width // 8
+            plain = width * len(values)
+            dictionary = width * len(distinct)
+        dictionary += (len(values) * max(len(distinct) - 1, 1).bit_length() + 7) // 8
+        if dictionary < plain:
+            out.append(field.name)
+    return out
 
 
 def _zone_bounds_from_footers(
@@ -431,7 +543,6 @@ def expire_snapshots(table: LakeTable, keep_last: int = 3) -> dict:
     # time travel. Rewrite-then-delete is crash-safe in every prefix.
     if expired and retained:
         import json
-        import uuid
 
         root = dict(retained[0])
         root["parent_id"] = None

@@ -32,11 +32,11 @@ the driver where the DataFrame API analyzes once per transformation.
   resolve until ``maintenance.compact`` folds them.
 - One ``REPARTITION(min(|touched|, parallelism), bucket)`` feeds one
   ``groupBy(bucket, key)`` ``max_by``, the resolver
-  :func:`spark_cdc.lake.table.latest_sql` that the MoR read, the feed
-  diff and compaction share. The bucket is a function of the key, so
-  the shuffle on the bucket satisfies the grouping: the plan is
-  join-free with one exchange, and each write task holds whole
-  buckets. `spark_cdc.cdc.dedup` ships a salted two-phase variant,
+  :func:`spark_cdc.lake.table.latest_sql` that the MoR read and the
+  feed diff share (compaction runs its Arrow twin, ``latest_arrow``).
+  The bucket is a function of the key, so the shuffle on the bucket
+  satisfies the grouping: the plan is join-free with one exchange,
+  and each write task holds whole buckets. `spark_cdc.cdc.dedup` ships a salted two-phase variant,
   proven equivalent in tests, for engines that want the salt spelled
   out.
 - Touched buckets: with ``collect_stats`` a pre-pass job over the raw

@@ -106,6 +106,97 @@ def bucket_expr(bucket_column: str, num_buckets: int):
     return F.pmod(F.xxhash64(F.col(bucket_column)), F.lit(num_buckets)).cast("int")
 
 
+# Spark's XXH64 (org.apache.spark.sql.catalyst.expressions.XXH64), the
+# hash F.xxhash64 computes with seed 42: standard little-endian XXH64.
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+_XXHASH_SEED = 42
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = _XXHASH_SEED) -> int:
+    """Unsigned XXH64 of ``data``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little")
+                v[j] = _xxh_round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for acc in v:
+            h = ((h ^ _xxh_round(0, acc)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        lane = int.from_bytes(data[i:i + 8], "little")
+        h = (_rotl(h ^ _xxh_round(0, lane), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        lane = int.from_bytes(data[i:i + 4], "little")
+        h = (_rotl(h ^ (lane * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h = (_rotl(h ^ (byte * _P5 & _M64), 11) * _P1) & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+# bucket-column types whose Spark hash input is these bytes of the value
+_HASH_BYTES = {
+    T.StringType(): lambda v: v.encode("utf-8") if isinstance(v, str) else None,
+    T.IntegerType(): lambda v: _int_bytes(v, 4),
+    T.LongType(): lambda v: _int_bytes(v, 8),
+}
+
+
+def _int_bytes(v, width: int) -> bytes | None:
+    if not isinstance(v, int) or isinstance(v, bool):
+        return None
+    try:
+        return v.to_bytes(width, "little", signed=True)
+    except OverflowError:
+        return None
+
+
+def bucket_ids(values: list, data_type: T.DataType, num_buckets: int) -> list[int] | None:
+    """:func:`bucket_expr` of each value, computed driver-side without a
+    Spark job, for the bucket-column types the engine's tables use
+    (string, int, bigint; a null hashes to the seed, as in Spark). None
+    when the type or a value is outside that set: the caller then asks
+    Spark. Pinned against ``F.xxhash64`` by the tests."""
+    to_bytes = _HASH_BYTES.get(data_type)
+    if to_bytes is None:
+        return None
+    out = []
+    for v in values:
+        if v is None:
+            h = _XXHASH_SEED
+        else:
+            data = to_bytes(v)
+            if data is None:
+                return None
+            h = _xxh64(data)
+            if h >= 1 << 63:
+                h -= 1 << 64  # Spark's hash is a signed long; pmod is >= 0
+        out.append(h % num_buckets)
+    return out
+
+
 def _zone_value(v):
     """Normalize a parquet-footer statistic or probe bound for zone-map
     comparison: ints/floats as-is, ASCII strings as-is, datetimes and
@@ -173,14 +264,48 @@ def latest_sql(
     )
 
 
-def resolve_latest(
-    df: DataFrame, keys: list[str], partitions: int | None = None
-) -> DataFrame:
-    """:func:`latest_sql` over a DataFrame: the resolver of the MoR
-    read, the change-feed diff and compaction."""
-    return df.sparkSession.sql(
-        latest_sql("{df}", df.columns, keys, partitions), df=df
+def latest_arrow(data, keys: list[str], bucket_column: str | None = None):
+    """The Arrow twin of :func:`latest_sql`, for code that holds rows in
+    a ``pyarrow.Table`` rather than a DataFrame (compaction's per-bucket
+    rewrite): the latest version of each key of ``data`` under
+    :data:`VERSION_ORDER`, nulls losing. It sorts by ``bucket_column``
+    (when it is not the leading key) and the keys, then by the order
+    fields descending, and keeps the first row of each key, so the
+    result comes out key-sorted. Null key parts group together, as in
+    ``GROUP BY``. ``V_LSN`` only orders and is not returned. Rows that
+    tie on every order field are a free pick, as in ``max_by``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    by = [bucket_column] if bucket_column and bucket_column not in keys[:1] else []
+    by += [c for c in keys if c not in by]
+    order = [c for c in VERSION_ORDER if c in data.column_names]
+    idx = pc.sort_indices(
+        data,
+        sort_keys=[(c, "ascending") for c in by] + [(c, "descending") for c in order],
+        null_placement="at_end",
     )
+    data = data.take(idx)
+    if V_LSN in data.column_names:
+        data = data.drop_columns([V_LSN])
+    n = data.num_rows
+    if n < 2:
+        return data
+    first = pa.repeat(False, n - 1)
+    for c in by:
+        col = data.column(c).combine_chunks()
+        cur, prev = col.slice(1), col.slice(0, n - 1)
+        # null-safe "differs from the row before"
+        both_null = pc.and_(pc.is_null(cur), pc.is_null(prev))
+        differs = pc.and_not(pc.fill_null(pc.not_equal(cur, prev), True), both_null)
+        first = pc.or_(first, differs)
+    return data.filter(pa.concat_arrays([pa.array([True]), first]))
+
+
+def resolve_latest(df: DataFrame, keys: list[str]) -> DataFrame:
+    """:func:`latest_sql` over a DataFrame: the resolver of the MoR
+    read and the change-feed diff."""
+    return df.sparkSession.sql(latest_sql("{df}", df.columns, keys), df=df)
 
 
 class LakeTable:
@@ -508,33 +633,29 @@ class LakeTable:
         col = self.bucket_column
         if not col:
             raise ValueError("lookup requires a bucketed table")
-        row = (
-            self.spark.createDataFrame(
-                [(key_value,)],
-                T.StructType([T.StructField(col, self.schema[col].dataType)]),
-            )
-            .select(bucket_expr(col, self.num_buckets).alias("b"))
-            .first()
-        )
         df = self.read(
             snapshot_id=snapshot_id,
-            buckets=[int(row["b"])],
+            buckets=self.buckets_for([key_value]),
             key_between=(key_value, key_value),
         )
         return df.where(F.col(col) == F.lit(key_value))
 
     def buckets_for(self, values: list) -> list[int]:
-        """Bucket ids the given bucket-column values hash into — one
-        tiny Spark job over |values| local rows (the same JVM-exact
-        hash :func:`bucket_expr` writes with; never re-implemented
-        driver-side where it could drift). Bounded: probe value lists
-        are query-sized, not data-sized."""
+        """Bucket ids the given bucket-column values hash into, sorted
+        and distinct. String, int and bigint bucket columns hash
+        driver-side (:func:`bucket_ids`, no Spark job); any other type
+        runs one tiny Spark job over |values| local rows with
+        :func:`bucket_expr` itself. Bounded: probe value lists are
+        query-sized, not data-sized."""
         col = self.bucket_column
         if not col:
             raise ValueError("buckets_for requires a bucketed table")
+        dtype = self.schema[col].dataType
+        ids = bucket_ids(values, dtype, self.num_buckets)
+        if ids is not None:
+            return sorted(set(ids))
         rows = self.spark.createDataFrame(
-            [(v,) for v in values],
-            T.StructType([T.StructField(col, self.schema[col].dataType)]),
+            [(v,) for v in values], T.StructType([T.StructField(col, dtype)])
         )
         return sorted(
             r["b"]
@@ -781,11 +902,26 @@ class LakeTable:
         carrying ``_bucket``) becomes the new content of
         ``touched_buckets``; every other bucket carries over by
         reference. This is the commit primitive under MERGE (CoW mode)
-        and compaction; replaced buckets are single-version again, so
-        their delta flag clears. ``presorted`` skips the key-order
+        and z-order; compaction writes its files outside Spark and
+        commits through :meth:`replace_buckets`. Replaced buckets are
+        single-version again, so their delta flag clears. ``presorted`` skips the key-order
         sortWithinPartitions for callers that already arranged rows
         (z-order rewrite)."""
         new_files = self._write_data(df, presorted=presorted)
+        return self.replace_buckets(new_files, touched_buckets, properties, summary)
+
+    def replace_buckets(
+        self,
+        new_files: dict[str, list[str]],
+        touched_buckets: list[int],
+        properties: dict[str, Any] | None = None,
+        summary: dict[str, Any] | None = None,
+    ) -> int:
+        """Commit ``new_files`` (bucket → relative paths, registered by
+        :meth:`register_files`) as the whole content of
+        ``touched_buckets``: the commit half of
+        :meth:`overwrite_buckets`, for writers that produce files
+        outside Spark (compaction)."""
         files = {
             b: list(fl)
             for b, fl in self.manifest["files"].items()
@@ -900,11 +1036,7 @@ class LakeTable:
         import time as _time
 
         t0 = _time.monotonic()
-        self._last_write_stats = {}
-        self._last_write_col_stats = {}
-        self.last_write_rows = 0
-        self.last_write_files = 0
-        rel_dir = os.path.join(DATA_DIR, f"snap{self.snapshot_id + 1}-{uuid.uuid4().hex[:8]}")
+        rel_dir = self.new_data_dir()
         out_dir = os.path.join(self.path, rel_dir)
         if presorted:
             pass  # caller already ordered the partitions (e.g. z-order)
@@ -935,10 +1067,26 @@ class LakeTable:
                 for f in sorted(os.listdir(bdir))
                 if f.endswith(".parquet")
             ]
-        self.last_write_buckets = sorted(int(b) for b in files)
-        self._collect_footer_stats(files)
+        self.register_files(files)
         self.last_write_ms = (_time.monotonic() - t0) * 1000
         return files
+
+    def new_data_dir(self) -> str:
+        """Relative directory for the next snapshot's data files,
+        ``data/snap<id>-<uuid>``; files go under ``_bucket=<k>/``. Until
+        a commit references it, it is an orphan that
+        :func:`spark_cdc.lake.maintenance.expire_snapshots` removes."""
+        return os.path.join(DATA_DIR, f"snap{self.snapshot_id + 1}-{uuid.uuid4().hex[:8]}")
+
+    def register_files(self, files: dict[str, list[str]]) -> None:
+        """Record freshly written files (bucket → relative paths) for
+        the next commit: their buckets (``last_write_buckets``) and
+        footer statistics (:meth:`_collect_footer_stats`)."""
+        self._last_write_stats = {}
+        self._last_write_col_stats = {}
+        self.last_write_rows = 0
+        self.last_write_buckets = sorted(int(b) for b in files)
+        self._collect_footer_stats(files)
 
     def _collect_footer_stats(self, files: dict[str, list[str]]) -> None:
         """One footer read per written file, recording three things for

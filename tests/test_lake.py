@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_cdc.cdc.envelope import PAYLOAD_SCHEMA
-from spark_cdc.lake.table import LakeTable, bucket_expr
+from spark_cdc.lake.table import LakeTable, bucket_expr, bucket_ids
 from spark_cdc.sources.changelog import generate_transcripts
 
 
@@ -302,3 +302,61 @@ def test_create_race_fresh_claim_conflicts_stale_reclaims(spark, tmp_path):
     t2 = LakeTable.create(spark, path, PAYLOAD_SCHEMA,
                           key_columns=["conv_id", "turn_idx"], num_buckets=2)
     assert t2.snapshot_id == 0 and t2.read().count() == 0
+
+
+HASH_STRINGS = [
+    None, "", "a", "conv-17", "é", "日本語のテキスト", "emoji 🙂 tail",
+    "x" * 7, "x" * 8, "x" * 12, "x" * 31, "x" * 32, "x" * 33, "y" * 100,
+    "ab" * 40 + "é",
+]
+HASH_INTS = [None, 0, 1, -1, 7, 2**31 - 1, -(2**31), 123456789]
+
+
+def test_bucket_ids_match_spark_xxhash64(spark):
+    """The driver-side hash is Spark's: ``pmod(xxhash64(v), n)`` for
+    string, int and bigint values, null included (it hashes to the
+    seed), for both word paths of XXH64 (< 32 and >= 32 bytes) and
+    multi-byte UTF-8. An int and a bigint of the same value hash
+    differently, as in Spark."""
+    for n in (1, 7, 32):
+        got = bucket_ids(HASH_STRINGS, T.StringType(), n)
+        want = [
+            r[0] for r in spark.createDataFrame([(v,) for v in HASH_STRINGS], "s string")
+            .select(F.pmod(F.xxhash64("s"), F.lit(n))).collect()
+        ]
+        assert got == want, n
+        for ddl, dtype in (("int", T.IntegerType()), ("bigint", T.LongType())):
+            want = [
+                r[0] for r in spark.createDataFrame([(v,) for v in HASH_INTS], f"i {ddl}")
+                .select(F.pmod(F.xxhash64("i"), F.lit(n))).collect()
+            ]
+            assert bucket_ids(HASH_INTS, dtype, n) == want, (ddl, n)
+    assert bucket_ids([5], T.IntegerType(), 1000) != bucket_ids([5], T.LongType(), 1000)
+    # outside the ported set: the caller falls back to Spark
+    assert bucket_ids(["a"], T.DateType(), 4) is None
+    assert bucket_ids([1], T.StringType(), 4) is None
+    assert bucket_ids([True], T.IntegerType(), 4) is None
+    assert bucket_ids([2**31], T.IntegerType(), 4) is None
+
+
+def test_buckets_for_unchanged(spark, tmp_path):
+    """``buckets_for`` returns what the Spark hash job returned, for
+    each ported bucket-column type and for a date column, which still
+    runs the job."""
+    import datetime
+
+    cases = [
+        ("k string", [v for v in HASH_STRINGS if v is not None] + [None]),
+        ("k int", HASH_INTS),
+        ("k bigint", HASH_INTS + [2**40, -(2**40)]),
+        ("k date", [datetime.date(2024, 1, d) for d in range(1, 20)]),
+    ]
+    for i, (ddl, values) in enumerate(cases):
+        schema = T.StructType.fromDDL(f"{ddl}, v string")
+        t = LakeTable.create(spark, str(tmp_path / f"t{i}"), schema,
+                             key_columns=["k"], num_buckets=8)
+        want = sorted(
+            r[0] for r in spark.createDataFrame([(v,) for v in values], ddl)
+            .select(bucket_expr("k", 8)).distinct().collect()
+        )
+        assert t.buckets_for(values) == want, ddl

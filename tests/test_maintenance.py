@@ -228,3 +228,144 @@ def test_maintain_cli(spark, tmp_table_path, capsys):
     assert did["compacted_buckets"] == plan["compact_buckets"]
     t2 = LakeTable.load(spark, tmp_table_path)
     assert sorted(tuple(r) for r in t2.read().collect()) == state
+
+
+def _mor_table(spark, path, properties=None):
+    """A MoR table with delta buckets: three overlapping batches."""
+    log = generate_change_log(spark, n_events=900, n_convs=10, seed=4).cache()
+    table = LakeTable.create(spark, path, PAYLOAD_SCHEMA, key_columns=KEY_COLUMNS,
+                             num_buckets=4, properties=properties)
+    for i in range(3):
+        apply_batch(table, log.where(F.pmod("lsn", F.lit(3)) == i), batch_id=i,
+                    mode="mor", collect_lineage=False)
+    return table
+
+
+def test_compact_registers_files_like_a_spark_write(spark, tmp_path):
+    """Compaction's files go through the same registration as a Spark
+    write: per-file key ranges and zone maps (a timestamp column
+    included) equal the values in the written data, the rewritten
+    buckets leave ``delta_buckets``, fsck is clean, and the new
+    snapshot's ``snap<id>-`` directory tag finds exactly the new
+    files, one per bucket."""
+    import datetime
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from spark_cdc.lake.fsck import fsck
+
+    table = _mor_table(spark, str(tmp_path / "t"),
+                       properties={"stats_columns": ["ts", "turn_idx"]})
+    deltas = sorted(table.manifest["delta_buckets"])
+    assert deltas
+    before = sorted(tuple(r) for r in table.read().collect())
+    stored = table.read(include_hidden=True).count()
+    compacted = compact(table)
+    assert compacted == deltas
+    assert sorted(tuple(r) for r in table.read().collect()) == before
+    assert table.manifest["summary"]["operation"] == "compact"
+    assert not set(table.manifest["delta_buckets"]) & set(compacted)
+    tag = f"snap{table.snapshot_id}-"
+    files = table.manifest["files"]
+    assert all(len(files[str(b)]) == 1 and tag in files[str(b)][0] for b in compacted)
+
+    def rng(data, c):
+        out = []
+        for v in pc.min_max(data.column(c)).values():
+            v = v.as_py()
+            if isinstance(v, datetime.datetime):
+                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None).isoformat(sep=" ")
+            out.append(v)
+        return out
+
+    for b in compacted:
+        rel = files[str(b)][0]
+        data = pq.read_table(os.path.join(table.path, rel))
+        assert table.manifest["file_stats"][rel] == rng(data, "conv_id")
+        assert table.manifest["col_stats"][rel] == {
+            "ts": rng(data, "ts"), "turn_idx": rng(data, "turn_idx")
+        }
+    assert table.last_write_rows == stored
+    rep = fsck(table, deep=True)
+    assert rep["ok"] and not rep["errors"] and not rep["warnings"], rep
+
+
+def test_compact_crash_before_commit_leaves_collectable_orphan(spark, tmp_path, monkeypatch):
+    """A crash between the per-bucket writes and the commit leaves the
+    table at its old snapshot and the written files in an unreferenced
+    ``data/snap<id>-*`` directory, which ``expire_snapshots`` removes."""
+    from spark_cdc.lake.table import DATA_DIR
+
+    table = _mor_table(spark, str(tmp_path / "t"))
+    snap = table.snapshot_id
+    before = sorted(tuple(r) for r in table.read().collect())
+    dirs = set(os.listdir(os.path.join(table.path, DATA_DIR)))
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(LakeTable, "replace_buckets", crash)
+    try:
+        compact(table)
+    except RuntimeError:
+        pass
+    else:
+        raise AssertionError("compact did not reach the commit")
+    monkeypatch.undo()
+    orphans = set(os.listdir(os.path.join(table.path, DATA_DIR))) - dirs
+    assert len(orphans) == 1 and next(iter(orphans)).startswith(f"snap{snap + 1}-")
+    orphan = os.path.join(table.path, DATA_DIR, next(iter(orphans)))
+    assert any(f.endswith(".parquet") for _, _, fs in os.walk(orphan) for f in fs)
+    table = LakeTable.load(spark, table.path)
+    assert table.snapshot_id == snap
+    assert sorted(tuple(r) for r in table.read().collect()) == before
+    expire_snapshots(table, keep_last=1)
+    assert not os.path.exists(orphan)
+    assert sorted(tuple(r) for r in table.read().collect()) == before
+
+
+def test_compacted_file_types_match_a_spark_written_file(spark, tmp_path):
+    """Spark and DuckDB read a compacted file back with the types they
+    read from a file Spark wrote for the same table, and Spark's types
+    are the table's: UTC-adjusted INT64 microsecond timestamps, dates,
+    decimals, lists and maps included."""
+    import datetime
+    import decimal
+
+    import duckdb
+    from pyspark.sql import types as T
+
+    schema = T.StructType.fromDDL(
+        "id bigint, s string, i int, d double, ts timestamp, dt date, "
+        "dec decimal(10,2), flag boolean, vec array<float>, tags map<string,int>"
+    )
+    table = LakeTable.create(spark, str(tmp_path / "t"), schema, key_columns=["id"],
+                             num_buckets=1)
+    t0 = datetime.datetime(2024, 1, 1, 12, 30, 0, 123456)
+    rows = [
+        (k, f"s{k}", k % 7, k / 3, t0 + datetime.timedelta(minutes=k),
+         datetime.date(2024, 1, 1 + k % 28), decimal.Decimal(k) / 4,
+         k % 2 == 0, [float(k), 0.5], {"a": k})
+        for k in range(60)
+    ]
+    for lo in (0, 20, 40):
+        table.append(spark.createDataFrame(rows[lo:lo + 20], schema))
+    spark_file = os.path.join(table.path, table.manifest["files"]["0"][0])
+    before = sorted(tuple(r) for r in table.read().collect())
+    compact(table, max_files_per_bucket=0)
+    (rel,) = table.manifest["files"]["0"]
+    arrow_file = os.path.join(table.path, rel)
+    assert sorted(tuple(r) for r in table.read().collect()) == before
+
+    def spark_types(path):
+        return {f.name: f.dataType.simpleString() for f in spark.read.parquet(path).schema}
+
+    want = {f.name: f.dataType.simpleString() for f in table.schema}
+    assert spark_types(arrow_file) == spark_types(spark_file) == want
+
+    def duck_types(path):
+        return duckdb.sql(f"DESCRIBE SELECT * FROM read_parquet('{path}')").fetchall()
+
+    assert [r[:2] for r in duck_types(arrow_file)] == [r[:2] for r in duck_types(spark_file)]
+    assert dict((r[0], r[1]) for r in duck_types(arrow_file))["ts"] == "TIMESTAMP WITH TIME ZONE"

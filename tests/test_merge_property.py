@@ -6,7 +6,11 @@ ends in exactly the state of the one-shot replay oracle. This is the
 engine's core identity; the generator deliberately produces duplicate
 (ts, op_seq) versions, deletes, redeliveries and out-of-order lsn to
 hit the tie-break lattice of the version order (ts, op_seq, gen,
-lsn)."""
+lsn).
+
+The second property pins compaction's Arrow twin of the resolver
+(``latest_arrow``) to ``latest_sql``: for any multi-generation bucket
+content, both pick the same rows, and so does ``compact`` end to end."""
 
 from __future__ import annotations
 
@@ -20,7 +24,12 @@ from pyspark.sql import functions as F
 from spark_cdc.cdc.apply import apply_batch, replay_changes_df
 from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
 from spark_cdc.lake.maintenance import compact
-from spark_cdc.lake.table import LakeTable
+from spark_cdc.lake.table import (
+    V_DEL,
+    LakeTable,
+    latest_arrow,
+    resolve_latest,
+)
 
 BASE = datetime.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -110,3 +119,94 @@ def test_incremental_merge_equals_oracle_on_any_log(
         tuple(r) for r in replay_changes_df(log, KEY_COLUMNS).select(*cols).collect()
     )
     assert got == want
+
+
+# one stored row version: (conv_id, turn_idx, text, tool, _v_ts offset,
+# _v_seq, _deleted, _gen) — null key parts and null order fields included
+versions = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", None]),
+        st.one_of(st.none(), st.integers(0, 1)),
+        st.sampled_from(["x", "y", "z"]),
+        st.sampled_from(["t1", None]),
+        st.one_of(st.none(), st.integers(0, 2)),
+        st.one_of(st.none(), st.integers(0, 1)),
+        st.sampled_from([True, False, None]),
+        st.one_of(st.none(), st.integers(0, 3)),
+    ),
+    min_size=1,
+    max_size=24,
+    # a full tie on (ts, seq, gen) is a free pick in both resolvers
+    unique_by=lambda v: (v[0], v[1], v[4], v[5], v[7]),
+)
+
+
+def _rows(arrow_table):
+    return sorted(
+        (tuple(sorted(r.items())) for r in arrow_table.to_pylist()), key=repr
+    )
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    vs=versions,
+    n_files=st.integers(1, 3),
+    keyed=st.booleans(),
+    bucket_on_second_key=st.booleans(),
+    pre_evolution=st.booleans(),
+    drop_tombstones=st.booleans(),
+)
+def test_arrow_resolver_equals_latest_sql(
+    spark, tmp_path_factory, vs, n_files, keyed, bucket_on_second_key,
+    pre_evolution, drop_tombstones,
+):
+    """Multi-generation content of one bucket, written as up to three
+    files (the first optionally before ``tool`` was added): the Arrow
+    twin over the raw rows equals ``latest_sql`` over the same rows, and
+    ``compact`` leaves exactly that state (tombstones dropped only under
+    ``drop_tombstones``). An unkeyed table is concatenated."""
+    from pyspark.sql import types as T
+
+    base = T.StructType.fromDDL(
+        "conv_id string, turn_idx int, text string, _v_ts timestamp, "
+        "_v_seq bigint, _deleted boolean, _gen bigint"
+    )
+    keys = ["conv_id", "turn_idx"] if keyed else None
+    table = LakeTable.create(
+        spark, str(tmp_path_factory.mktemp("twin") / "t"), base,
+        key_columns=keys,
+        bucket_column="turn_idx" if bucket_on_second_key else "conv_id",
+        num_buckets=1,
+    )
+    rows = [
+        (conv, turn, text, tool,
+         None if ts is None else BASE + datetime.timedelta(seconds=ts), seq, dl, gen)
+        for conv, turn, text, tool, ts, seq, dl, gen in vs
+    ]
+    step = -(-len(rows) // n_files)
+    for i in range(0, len(rows), step):
+        if i or not pre_evolution:
+            table.add_columns([T.StructField("tool", T.StringType(), True)])
+        df = spark.createDataFrame(
+            rows[i:i + step],
+            "conv_id string, turn_idx int, text string, tool string, "
+            "_v_ts timestamp, _v_seq bigint, _deleted boolean, _gen bigint",
+        )
+        table.append(df.drop("tool") if "tool" not in table.schema.names else df)
+    raw = table.read(include_hidden=True, resolve=False)
+    if keyed:
+        want = resolve_latest(raw, keys)
+        twin = latest_arrow(raw.toArrow(), keys, table.bucket_column)
+        assert _rows(twin) == _rows(want.toArrow())
+    else:
+        want = raw
+    if drop_tombstones:
+        want = want.where(~F.coalesce(F.col(V_DEL), F.lit(False)))
+    compact(table, max_files_per_bucket=0, drop_tombstones=drop_tombstones)
+    assert len(table.manifest["files"].get("0", [])) <= 1
+    got = table.read(include_hidden=True, resolve=False)
+    assert _rows(got.toArrow()) == _rows(want.select(*got.columns).toArrow())

@@ -1,11 +1,16 @@
 """Guard: the engine defines its version order, its resolver and its
 exactly-once protocol once.
 
-Every latest-version pick in the lake (MoR read, feed diff, compaction,
-merge) and in the apply path goes through
-``spark_cdc.lake.table.latest_sql``. The first test fails when a
-``max_by`` or the old ``1900-01-01`` null-timestamp floor shows up
-anywhere else in that code, so the copies cannot grow back.
+Every latest-version pick in the lake and in the apply path goes
+through one of two spellings of the one order,
+``spark_cdc.lake.table.VERSION_ORDER``: ``latest_sql`` (MoR read, feed
+diff, merge) and its Arrow twin ``latest_arrow`` (compaction's
+per-bucket rewrite). The first test fails when a ``max_by`` or the old
+``1900-01-01`` null-timestamp floor shows up outside ``latest_sql``,
+or an Arrow sort (``sort_indices``, ``sort_by``) outside
+``latest_arrow``, so the copies cannot grow back; it also requires both
+to take their order fields from ``VERSION_ORDER`` rather than spell
+them. ``test_merge_property`` pins the two to the same rows.
 
 The second test holds the exactly-once protocol of derived tables to
 one definition per half: the batch-id guard's ``"last_batch_id"``
@@ -26,8 +31,14 @@ import pathlib
 ROOT = pathlib.Path(__file__).resolve().parents[1] / "spark_cdc"
 EXEMPT = {"cdc/dedup.py"}
 SCANNED = sorted((ROOT / "lake").glob("*.py")) + [ROOT / "cdc" / "apply.py"]
-MARKERS = ("max_by", "1900-01-01")
-THE_DEFINITION = {("lake/table.py", "latest_sql")}
+MARKERS = {
+    "max_by": ("lake/table.py", "latest_sql"),
+    "1900-01-01": ("lake/table.py", "latest_sql"),
+    "sort_indices": ("lake/table.py", "latest_arrow"),
+    "sort_by": ("lake/table.py", "latest_arrow"),
+}
+THE_DEFINITIONS = {("lake/table.py", "latest_sql"), ("lake/table.py", "latest_arrow")}
+ORDER_FIELDS = {"V_TS", "V_SEQ", "V_GEN"}
 
 
 def _docstrings(tree: ast.AST) -> set[int]:
@@ -53,7 +64,8 @@ def _code_nodes(path: pathlib.Path):
 
 
 def _marker_sites(path: pathlib.Path):
-    """(top-level definition name, line) of each code marker in ``path``."""
+    """(marker, top-level definition name, line) of each code marker in
+    ``path``."""
     for top, node in _code_nodes(path):
         if isinstance(node, ast.Constant) and isinstance(node.value, str):
             text = node.value
@@ -63,17 +75,27 @@ def _marker_sites(path: pathlib.Path):
             text = node.id
         else:
             continue
-        if any(m in text for m in MARKERS):
-            yield top, node.lineno
+        for m in MARKERS:
+            if m in text:
+                yield m, top, node.lineno
 
 
 def test_version_order_is_defined_once():
-    sites: dict[tuple[str, str | None], list[int]] = {}
+    sites: dict[tuple[str, str, str | None], list[int]] = {}
     for path in SCANNED:
         rel = path.relative_to(ROOT).as_posix()
-        for owner, line in _marker_sites(path):
-            sites.setdefault((rel, owner), []).append(line)
-    assert set(sites) == THE_DEFINITION, sites
+        for marker, owner, line in _marker_sites(path):
+            sites.setdefault((marker, rel, owner), []).append(line)
+    stray = {k: v for k, v in sites.items() if MARKERS[k[0]] != k[1:]}
+    assert not stray, stray
+    assert {k[1:] for k in sites} == THE_DEFINITIONS, sites
+    # both resolvers read their order from VERSION_ORDER, not spelled out
+    for rel, owner in THE_DEFINITIONS:
+        names = {
+            node.id for top, node in _code_nodes(ROOT / rel)
+            if top == owner and isinstance(node, ast.Name)
+        }
+        assert "VERSION_ORDER" in names and not names & ORDER_FIELDS, (owner, names)
 
 
 def test_exactly_once_protocol_is_defined_once():
