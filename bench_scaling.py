@@ -39,6 +39,38 @@ WORK = os.path.join("/dev/shm" if os.path.isdir("/dev/shm") else "/tmp", "spark_
 CORES_PER_EXECUTOR = 2
 
 
+def _cpu_jiffies() -> tuple[int, int]:
+    """(busy, steal) jiffies from /proc/stat line 1. busy = user+nice+
+    system+irq+softirq — the work this box actually got to do; steal =
+    cycles the hypervisor withheld."""
+    try:
+        with open("/proc/stat") as f:
+            parts = f.readline().split()
+        vals = [int(x) for x in parts[1:]]
+    except (OSError, ValueError):
+        return 0, 0
+    user, nice, system, _idle, _iowait, irq, softirq = (vals + [0] * 7)[:7]
+    steal = vals[7] if len(vals) > 7 else 0
+    return user + nice + system + irq + softirq, steal
+
+
+class StealWindow:
+    """Context manager sampling /proc/stat around a timed window.
+    ``steal_ratio`` = stealΔ / (stealΔ + busyΔ): the fraction of
+    compute the hypervisor withheld WHILE this window ran, recorded
+    next to each fleet timing so a slow window is attributable."""
+
+    def __enter__(self):
+        self.b0, self.s0 = _cpu_jiffies()
+        return self
+
+    def __exit__(self, *exc):
+        b1, s1 = _cpu_jiffies()
+        db, ds = b1 - self.b0, s1 - self.s0
+        self.steal_ratio = round(ds / (ds + db), 4) if (ds + db) > 0 else 0.0
+        return False
+
+
 def _burn(n: int) -> int:
     s = 0
     for i in range(n):
@@ -185,8 +217,6 @@ def run_pairs(events_per_part: int, mode: str, batches: int, trials: int) -> lis
     trials can pick a lucky-quiet N window against an unlucky 4N one
     and report spurious sub-linearity for a deterministic job. The
     best pair is the least-noise-contaminated observation."""
-    from bench import StealWindow
-
     paths = prepare_partitions(events_per_part, 4)
     pairs = []
     for _ in range(trials):

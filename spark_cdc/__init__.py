@@ -22,8 +22,11 @@ Layout (maps onto SURVEY.md §2's operator inventory):
   stream_etl/core/consumer.py)
 - ``spark_cdc.functions``  — tolerant parsers as Column expressions,
   Arrow-vectorized text normalization, text analysis, sketches
-- ``spark_cdc.operators``  — KPI views, dedup family (exact/minhash/
-  simhash/ngram/embedding), ANN similarity search, multimodal plumbing
+- ``spark_cdc.operators``  — incremental views, dedup family (exact/
+  minhash/simhash/ngram/embedding), ANN similarity search, multimodal
+  plumbing
+- ``spark_cdc.plans``      — the contract query registry (incl. the
+  five KPI views) with DuckDB oracles
 - ``spark_cdc.sources``    — testdata registry + deterministic fixture
   generators (replaces seeder/)
 - ``spark_cdc.metrics``    — per-partition lineage/offset metrics

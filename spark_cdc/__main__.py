@@ -10,7 +10,7 @@ compact  — run table maintenance
 
 Example::
 
-    spark-submit --py-files /tmp/spark_cdc_pyfiles.zip \
+    spark-submit --py-files spark_cdc.zip \
         -m spark_cdc stream \
         --source /data/changelog --table /lake/transcripts \
         --checkpoint /lake/_ckpt/transcripts --continuous

@@ -1,7 +1,8 @@
 """spark_cdc.operators — analytics + training-data operators.
 
-- kpi: the reference's five materialized KPI views (SURVEY.md §2.6)
-  re-expressed as recompute-on-read Spark plans
+(The reference's five KPI views are the ``kpi_*`` entries of the
+contract query registry, ``spark_cdc/plans/queries.py``.)
+
 - rollup: incremental additive rollups (SummingMergeTree analogue,
   exactly-once apply/rebuild into a lake table)
 - ivm: exact incremental view maintenance under update/delete

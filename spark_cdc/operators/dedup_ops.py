@@ -225,29 +225,6 @@ def minhash_signature(hashed, num_hashes: int = 32):
     )
 
 
-def minhash_signature_np(num_hashes: int = 32):
-    """Arrow-vectorized MinHash: the permutation loop runs in numpy
-    (C speed) over JVM-prehashed shingle arrays. ~20× faster than the
-    pure-expression form at 32 permutations (higher-order functions
-    are interpreted per element); returns a pandas UDF."""
-    params = _affine_params(num_hashes)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(hashes: pd.Series) -> pd.Series:
-        out = []
-        for h in hashes:
-            if h is None or len(h) == 0:
-                out.append([MERSENNE_P] * num_hashes)
-                continue
-            hv = np.asarray(h, dtype=np.int64)[None, :]
-            out.append(((hv * A + B) % MERSENNE_P).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return _sig
-
-
 def text_minhash_np(num_hashes: int = 32, shingle_k: int = 5):
     """End-to-end Arrow MinHash: normalized text → byte k-shingles →
     rolling polynomial hash → affine permutations, all inside numpy.

@@ -14,9 +14,10 @@ The events table plays the facts role the reference's impressions/
 clicks tables played (event_type 'view' ↔ impression, 'click' ↔
 click), so the five KPI views of
 /root/reference/etl/clickhouse_schema/kpi_views.sql are reproduced
-shape-for-shape over it (kpi_* entries below); the adtech-schema
-originals are additionally covered by pytest against a DuckDB oracle
-(tests/test_kpi.py).
+shape-for-shape over it (kpi_* entries below), the engine's one
+implementation of them. Their edge cases, which sf0.001 lacks, are
+pinned against the same oracles on a hand-written fixture by
+tests/test_entry_contract.py::test_kpi_entries_on_edge_cases.
 """
 
 from __future__ import annotations
@@ -488,8 +489,9 @@ def kpi_user_ctr(spark, sf_dir):
     rows for the driver's 50-entry window — both views' formulas are
     still independently value-checked as columns): agg-then-join,
     ratio from summed counts, try_divide/NULLIF guarded-division null
-    semantics. The adtech-schema originals of all five reference KPI
-    views stay pinned by tests/test_kpi.py."""
+    semantics. tests/test_entry_contract.py::test_kpi_entries_on_edge_cases
+    pins the zero-click / zero-view / redelivery cases and the equality
+    with the reference's naive join-then-COUNT(DISTINCT) form."""
     ev = _t(spark, sf_dir, "events")
     imp = ev.where(F.col("event_type") == "view").groupBy("user_id").agg(
         F.countDistinct("event_id").alias("impressions")

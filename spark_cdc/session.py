@@ -9,13 +9,42 @@ timezone so timestamps compare bit-exactly against the DuckDB oracle.
 
 from __future__ import annotations
 
+import hashlib
 import os
-import shutil
+import pathlib
 import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+def _package_zip(pkg_dir: str) -> str:
+    """Zip of every ``.py`` file under ``pkg_dir`` (as ``spark_cdc/...``)
+    in the system temp dir, named by a hash of each file's relative
+    path and bytes: checkouts with different code never share a zip,
+    and an edit always gets a new one whatever its mtime. The zip is
+    written under a temp name and renamed into place, so a concurrent
+    session never reads a half-written file."""
+    root = pathlib.Path(pkg_dir)
+    blobs = {p.relative_to(root).as_posix(): p.read_bytes() for p in sorted(root.rglob("*.py"))}
+    digest = hashlib.sha256()
+    for rel, data in blobs.items():
+        digest.update(rel.encode() + b"\0" + len(data).to_bytes(8, "little") + data)
+    name = f"spark_cdc_pyfiles_{digest.hexdigest()[:16]}.zip"
+    zip_path = os.path.join(tempfile.gettempdir(), name)
+    if not os.path.exists(zip_path):
+        fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=os.path.dirname(zip_path))
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as z:
+                for rel, data in blobs.items():
+                    z.writestr(f"spark_cdc/{rel}", data)
+            os.replace(tmp, zip_path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+    return zip_path
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -23,21 +52,7 @@ def _ship_package(spark: SparkSession) -> None:
     the programmatic equivalent of ``spark-submit --py-files`` (which
     is how the engine is deployed on a real cluster). Needed by any
     pandas-UDF / mapInPandas closure that references package symbols."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_base = os.path.join(tempfile.gettempdir(), "spark_cdc_pyfiles")
-    zip_path = zip_base + ".zip"
-    src_mtime = max(
-        os.path.getmtime(os.path.join(r, f))
-        for r, _, fs in os.walk(pkg_dir)
-        for f in fs
-        if f.endswith(".py")
-    )
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < src_mtime:
-        tmp = tempfile.mkdtemp()
-        shutil.copytree(pkg_dir, os.path.join(tmp, "spark_cdc"))
-        shutil.make_archive(zip_base, "zip", tmp)
-        shutil.rmtree(tmp, ignore_errors=True)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip(os.path.dirname(os.path.abspath(__file__))))
 
 
 def get_spark(
@@ -101,6 +116,5 @@ def get_spark(
     try:
         _ship_package(spark)
     except Exception:
-        pass  # already shipped via --py-files, or zip race — workers
-        # will import from PYTHONPATH instead
+        pass  # already shipped via --py-files: workers import from PYTHONPATH
     return spark

@@ -4,7 +4,6 @@ from spark_cdc.sources.registry import TESTDATA_TABLES, load_tables, register_vi
 from spark_cdc.sources.changelog import (
     generate_change_log,
     generate_transcripts,
-    generate_adtech,
 )
 
 __all__ = [
@@ -13,5 +12,4 @@ __all__ = [
     "register_views",
     "generate_change_log",
     "generate_transcripts",
-    "generate_adtech",
 ]

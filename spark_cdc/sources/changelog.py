@@ -1,4 +1,4 @@
-"""Deterministic synthetic fixtures (FIXTURES.md F1-F4).
+"""Deterministic synthetic fixtures (FIXTURES.md F1-F2).
 
 The Spark-native replacement for the reference seeder
 (/root/reference/seeder/seed.py:20-147,
@@ -193,89 +193,6 @@ def generate_transcripts(
         )
     )
     return df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-
-
-def generate_adtech(
-    spark: SparkSession,
-    n_advertisers: int = 5,
-    campaigns_per_adv: int = 3,
-    impressions_per_campaign: int = 1000,
-    ctr: float = 0.08,
-    seed: int = 42,
-) -> dict[str, DataFrame]:
-    """Adtech star fixture (FIXTURES.md F3) mirroring the reference
-    source schema (/root/reference/seeder/migrations/V1__create_schema.sql:1-30)
-    and seeder defaults (/root/reference/seeder/Dockerfile.seeder:13).
-
-    Guaranteed edge cases: the last advertiser has zero campaigns, the
-    last campaign zero impressions, the second-to-last campaign zero
-    clicks, and impressions span two calendar months.
-    """
-    base_ts = F.to_timestamp(F.lit(BASE_TS))
-    adv = (
-        spark.range(1, n_advertisers + 1)
-        .select(
-            F.col("id").cast("int").alias("id"),
-            F.concat(F.lit("advertiser_"), F.col("id")).alias("name"),
-            (base_ts + F.make_dt_interval(F.lit(0), F.lit(0), F.col("id").cast("double"), F.lit(0.0))).alias("updated_at"),
-            base_ts.alias("created_at"),
-        )
-    )
-    n_campaigns = (n_advertisers - 1) * campaigns_per_adv  # last adv: none
-    camp = (
-        spark.range(1, n_campaigns + 1)
-        .select(
-            F.col("id").cast("int").alias("id"),
-            F.concat(F.lit("campaign_"), F.col("id")).alias("name"),
-            F.round(F.lit(0.5) + _u(seed, 11, F.col("id")) * 4.5, 2).cast("decimal(10,2)").alias("bid"),
-            F.round(F.lit(100.0) + _u(seed, 12, F.col("id")) * 900.0, 2).cast("decimal(10,2)").alias("budget"),
-            F.to_date(F.lit("2024-01-01")).alias("start_date"),
-            F.to_date(F.lit("2024-03-01")).alias("end_date"),
-            (((F.col("id") - 1) / F.lit(campaigns_per_adv)).cast("int") + 1).alias("advertiser_id"),
-            (base_ts + F.make_dt_interval(F.lit(0), F.lit(0), F.col("id").cast("double"), F.lit(0.0))).alias("updated_at"),
-            base_ts.alias("created_at"),
-        )
-    )
-    n_imps = impressions_per_campaign * max(n_campaigns - 1, 1)  # last campaign: none
-    imp = (
-        spark.range(1, n_imps + 1)
-        .select(
-            F.col("id").cast("int").alias("id"),
-            F.least(
-                (F.floor(_u(seed, 13, F.col("id")) * (n_campaigns - 1)) + 1),
-                F.lit(n_campaigns - 1),
-            ).cast("int").alias("campaign_id"),
-            (
-                base_ts
-                + F.make_dt_interval(
-                    F.floor(_u(seed, 14, F.col("id")) * 59).cast("int"),  # days 0-58 → spans Jan+Feb
-                    F.floor(_u(seed, 15, F.col("id")) * 24).cast("int"),
-                    F.floor(_u(seed, 16, F.col("id")) * 60).cast("double"),
-                    F.lit(0.0),
-                )
-            ).alias("created_at"),
-        )
-    )
-    # clicks: sampled from impressions, 1-120 s later
-    # (/root/reference/seeder/seed.py:98-107); zero clicks for the
-    # second-to-last campaign. Click id = its impression id — unique by
-    # construction (≤1 click per impression) and derived arithmetically
-    # per row: a row_number() over a global Window here would funnel
-    # the whole fixture through one task at larger sf.
-    clk = (
-        imp.where(_u(seed, 17, F.col("id")) < F.lit(ctr))
-        .where(F.col("campaign_id") != F.lit(n_campaigns - 1))
-        .select(
-            F.col("id").cast("int").alias("id"),
-            F.col("campaign_id"),
-            (
-                F.col("created_at")
-                + F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0),
-                                     (F.lit(1.0) + _u(seed, 18, F.col("id")) * 119.0))
-            ).alias("created_at"),
-        )
-    )
-    return {"advertiser": adv, "campaign": camp, "impressions": imp, "clicks": clk}
 
 
 def generate_embeddings(

@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# The checkout this conftest belongs to, so pytest in any copy of the
+# repo imports that copy's own spark_cdc.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from spark_cdc.session import get_spark  # noqa: E402
 

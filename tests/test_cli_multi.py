@@ -10,6 +10,8 @@ import os
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 
 def _frames(spark, tmp_path):
     from spark_cdc.cdc.envelope import KAFKA_FRAME_SCHEMA
@@ -59,8 +61,8 @@ def test_stream_multi_cli(spark, tmp_path):
             "--num-buckets", "4",
         ],
         capture_output=True, text=True, timeout=300,
-        cwd="/root/repo",
-        env={**os.environ, "PYTHONPATH": "/root/repo"},
+        cwd=REPO_ROOT,
+        env={**os.environ, "PYTHONPATH": REPO_ROOT},
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])

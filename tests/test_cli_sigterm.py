@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from spark_cdc.lake.table import LakeTable
 from spark_cdc.sources.changelog import generate_change_log
+from tests.conftest import REPO_ROOT
 
 
 def _wait_for(cond, timeout=120, interval=0.5):
@@ -43,7 +44,7 @@ def test_continuous_sigterm_clean_stop_and_resume(spark, tmp_path):
         [sys.executable, "-m", "spark_cdc", "stream",
          "--source", src, "--table", tbl, "--checkpoint", ckpt,
          "--num-buckets", "4", "--continuous"],
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         env=env,
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
@@ -81,7 +82,7 @@ def test_continuous_sigterm_clean_stop_and_resume(spark, tmp_path):
         [sys.executable, "-m", "spark_cdc", "stream",
          "--source", src, "--table", tbl, "--checkpoint", ckpt,
          "--num-buckets", "4"],
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         env=env,
         capture_output=True,
         text=True,
