@@ -509,7 +509,7 @@ def main(argv: list[str] | None = None) -> int:
         print(
             json.dumps(
                 {
-                    "batches": len(runner.results),
+                    "batches": runner.batches,
                     "tables": {
                         name: {"snapshot_id": t.snapshot_id, "rows": t.read().count()}
                         for name, t in tables.items()
@@ -566,7 +566,7 @@ def main(argv: list[str] | None = None) -> int:
                 json.dumps(
                     {
                         "stopped": True,
-                        "batches": len(runner.results),
+                        "batches": runner.batches,
                         "snapshot_id": table.snapshot_id,
                         "rows": table.read().count(),
                     }
@@ -577,7 +577,7 @@ def main(argv: list[str] | None = None) -> int:
             print(
                 json.dumps(
                     {
-                        "batches": len(runner.results),
+                        "batches": runner.batches,
                         "snapshot_id": table.snapshot_id,
                         "rows": table.read().count(),
                     }

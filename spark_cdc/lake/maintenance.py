@@ -32,6 +32,7 @@ from spark_cdc.lake.table import (
     DATA_DIR,
     META_DIR,
     V_DEL,
+    V_LSN,
     LakeTable,
     bucket_expr,
     latest_arrow,
@@ -63,26 +64,18 @@ def compact(
     needs no exchange. The driver groups the buckets by input bytes and
     runs ONE Spark job over the groups (``sc.parallelize``, no shuffle,
     no JVM sort). Each task, in a Python worker, rewrites its buckets
-    one at a time with pyarrow (:func:`_rewrite_bucket`): it reads the
-    bucket's files, null-fills columns added after a file was written,
-    keeps the latest version of each key (:func:`latest_arrow`, the
-    Arrow twin of the one resolver; an unkeyed table is concatenated),
-    drops tombstones under ``drop_tombstones`` and writes one key-sorted
-    file into this commit's ``data/snap<id>-<uuid>/_bucket=<k>/``. Only
-    file names come back; the driver reads their footers and commits,
-    as for any Spark write (:meth:`LakeTable.register_files`,
-    :meth:`LakeTable.replace_buckets`).
+    one at a time with :func:`rewrite_bucket`, the per-bucket kernel
+    that also writes every merge's files; only file names come back.
+    The driver reads their footers and commits
+    (:meth:`LakeTable.register_files`, :meth:`LakeTable.replace_buckets`).
 
     Memory bound: a task holds one bucket's decoded rows (all of its
     versions) at a time, with no spill; a bucket must fit in a Python
     worker's memory."""
-    deltas = {int(b) for b in table.manifest.get("delta_buckets", [])}
-    if not fold_all_deltas:
-        deltas = {
-            b
-            for b in deltas
-            if len(table.manifest["files"].get(str(b), [])) > max_files_per_bucket
-        }
+    deltas = (
+        {int(b) for b in table.manifest.get("delta_buckets", [])}
+        if fold_all_deltas else set()
+    )
     fragmented = sorted(
         {
             int(b)
@@ -93,9 +86,6 @@ def compact(
     )
     if not fragmented:
         return []
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     units = []
     for b in fragmented:
         paths = [os.path.join(table.path, f) for f in table.manifest["files"].get(str(b), [])]
@@ -109,19 +99,10 @@ def compact(
         k = loads.index(min(loads))
         groups[k].append((b, paths))
         loads[k] += size
-    rel_dir = table.new_data_dir()
-    spec = {
-        # Spark's own type mapping (timestamps as UTC microseconds)
-        "schema": pa.schema([f.with_nullable(True) for f in to_arrow_schema(table.schema)]),
-        "keys": table.key_columns,
-        "bucket_column": table.bucket_column,
-        "drop_tombstones": drop_tombstones,
-        "root": table.path,
-        "rel_dir": rel_dir,
-    }
+    spec = {**bucket_spec(table), "drop_tombstones": drop_tombstones}
     written = (
         sc.parallelize(groups, n)
-        .flatMap(lambda group: [_rewrite_bucket(spec, b, paths) for b, paths in group])
+        .flatMap(lambda group: [rewrite_bucket(spec, b, paths) for b, paths in group])
         .collect()
     )
     new_files = {str(b): [rel] for b, rel in written if rel is not None}
@@ -135,27 +116,57 @@ def compact(
     return fragmented
 
 
-def _rewrite_bucket(spec: dict, bucket: int, paths: list[str]) -> tuple[int, str | None]:
-    """Runs in a Python worker: fold one bucket's files into one file
-    (see :func:`compact`). Returns the bucket and the written file's
-    path relative to the table root, or None when no row survives."""
+def bucket_spec(table: LakeTable) -> dict:
+    """What :func:`rewrite_bucket` needs to know of ``table``, shipped
+    to the Python workers: the Arrow schema of a stored row (Spark's own
+    type mapping, timestamps as UTC microseconds), the keys and bucket
+    column, and a fresh data directory of the next snapshot. Tombstones
+    are kept unless ``drop_tombstones`` is set."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return {
+        "schema": pa.schema([f.with_nullable(True) for f in to_arrow_schema(table.schema)]),
+        "keys": table.key_columns,
+        "bucket_column": table.bucket_column,
+        "drop_tombstones": False,
+        "root": table.path,
+        "rel_dir": table.new_data_dir(),
+    }
+
+
+def rewrite_bucket(spec: dict, bucket: int, paths: list[str], batch=None) -> tuple[int, str | None]:
+    """Runs in a Python worker: the one writer of resolved bucket files,
+    for :func:`compact` and :func:`spark_cdc.lake.merge.merge_changes`.
+    It reads the bucket's stored ``paths``, adds ``batch`` (a
+    ``pyarrow.Table`` of a merge's rows of this bucket, carrying
+    ``V_LSN``; stored rows have none, so their lsn is null and loses
+    ties), null-fills each part to the table schema, keeps the latest
+    version of each key (:func:`latest_arrow`; an unkeyed table is
+    concatenated), drops tombstones under ``drop_tombstones`` and writes
+    one key-sorted file into ``data/snap<id>-<uuid>/_bucket=<k>/``.
+    Returns the bucket and the file's path relative to the table root,
+    or None when no row survives."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     schema = spec["schema"]
-    parts = []
-    for p in paths:
-        data = pq.ParquetFile(p).read(use_threads=False)
-        parts.append(pa.table(
+    parts = [pq.ParquetFile(p).read(use_threads=False) for p in paths]
+    if batch is not None:
+        schema = schema.append(pa.field(V_LSN, pa.int64()))
+        parts.append(batch)
+    data = pa.concat_tables([
+        pa.table(
             [
-                data.column(f.name).cast(f.type) if f.name in data.column_names
-                else pa.nulls(data.num_rows, f.type)
+                part.column(f.name).cast(f.type) if f.name in part.column_names
+                else pa.nulls(part.num_rows, f.type)
                 for f in schema
             ],
             schema=schema,
-        ))
-    data = pa.concat_tables(parts) if parts else schema.empty_table()
+        )
+        for part in parts
+    ])
     if spec["keys"]:
         data = latest_arrow(data, spec["keys"], spec["bucket_column"])
     if spec["drop_tombstones"] and V_DEL in data.column_names:
@@ -224,10 +235,7 @@ def _zone_bounds_from_footers(
     (MoR) table — superseded row versions count — is harmless. Returns
     None when any live file lacks usable stats for any column (caller
     falls back to the aggregate)."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
-        return None
+    import pyarrow.parquet as pq
     from concurrent.futures import ThreadPoolExecutor
 
     rels = table.selected_files()

@@ -17,33 +17,31 @@ processor.py:214-217):
   (exactly-once under at-least-once delivery);
 - a winning ``op='d'`` leaves a tombstone; ``c``/``r``/``u`` upsert.
 
-Physical strategy: one plan builder, :func:`_merge_plan`, for both
-modes. It is one SQL text over the batch (and the target) passed as
-named DataFrame arguments, so a batch costs one parse/analyze pass on
-the driver where the DataFrame API analyzes once per transformation.
+Physical strategy: one Spark job shuffles the batch once on the bucket,
+and the per-bucket kernel that compaction also runs,
+:func:`spark_cdc.lake.maintenance.rewrite_bucket`, resolves and writes
+each bucket in a Python worker; the driver only registers the files
+and commits. Both modes run it:
 
-- The batch is normalised to the stored row shape: bucket, payload
-  (typed nulls for columns added after it was produced), the hidden
-  version columns, gen and lsn.
-- ``cow`` adds the stored rows of the touched buckets and rewrites
-  those buckets; every other bucket carries over by reference, so
-  MERGE cost ∝ |changed conversations|, not |table|. ``mor`` adds
-  nothing: the resolved batch is appended as delta files, which reads
-  resolve until ``maintenance.compact`` folds them.
-- One ``REPARTITION(min(|touched|, parallelism), bucket)`` feeds one
-  ``groupBy(bucket, key)`` ``max_by``, the resolver
-  :func:`spark_cdc.lake.table.latest_sql` that the MoR read and the
-  feed diff share (compaction runs its Arrow twin, ``latest_arrow``).
-  The bucket is a function of the key, so the shuffle on the bucket
-  satisfies the grouping: the plan is join-free with one exchange,
-  and each write task holds whole buckets. `spark_cdc.cdc.dedup` ships a salted two-phase variant,
-  proven equivalent in tests, for engines that want the salt spelled
-  out.
-- Touched buckets: with ``collect_stats`` a pre-pass job over the raw
-  batch computes the batch stats, the per-input-partition lineage and
-  the buckets its keys hash to, which prune the CoW target read.
-  Without it CoW reads every bucket and MoR takes them from the files
-  it wrote.
+- One SQL text over the batch, passed as a named DataFrame argument,
+  brings it to the stored row shape: bucket, payload (typed nulls for
+  columns added after it was produced), the hidden version columns,
+  gen and lsn.
+- ``repartition(min(num_buckets, parallelism), bucket)`` then
+  ``mapInArrow``: each task concatenates its partition's batch rows
+  and rewrites one bucket at a time, keeping the latest version of
+  each key with ``latest_arrow``, the Arrow twin of the resolver
+  ``latest_sql`` that the MoR read and the feed diff run in Spark.
+  Only (bucket, file path) comes back.
+- ``mor`` gives the kernel the batch rows only: the resolved batch is
+  appended as delta files, which reads resolve until
+  ``maintenance.compact`` folds them. ``cow`` also gives it the stored
+  files of each bucket the batch has rows for, and replaces exactly
+  the buckets that came back; every other bucket carries over by
+  reference, so MERGE cost ∝ |changed conversations|, not |table|.
+- ``collect_stats`` adds a pre-pass job over the raw batch for the
+  batch stats and the per-input-partition lineage. Touched buckets are
+  observed from the files written, in both modes.
 - On a real cluster the same call becomes Iceberg
   ``MERGE INTO t USING s ON t.conv_id=s.conv_id AND
   t.turn_idx=s.turn_idx WHEN MATCHED AND s.op='d' THEN DELETE
@@ -53,15 +51,16 @@ the driver where the DataFrame API analyzes once per transformation.
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 
+from spark_cdc.lake.maintenance import bucket_spec, rewrite_bucket
 from spark_cdc.lake.table import (
     BUCKET_COL,
-    HIDDEN_COLS,
     V_DEL,
     V_GEN,
     V_LSN,
@@ -69,7 +68,6 @@ from spark_cdc.lake.table import (
     V_TS,
     LakeTable,
     _bq,
-    latest_sql,
     with_batch_id,
 )
 
@@ -97,8 +95,8 @@ class MergeResult:
     wall_ms: float = 0.0
     partition_lineage: list[dict[str, Any]] = field(default_factory=list)
     # per-phase wall times: stats_ms (batch stats/lineage pre-pass, 0
-    # without collect_stats), exec_ms (the write action executing the
-    # full resolve plan), commit_ms (manifest fsync + pointer swap),
+    # without collect_stats), exec_ms (the job resolving and writing the
+    # buckets, plus the footer reads), commit_ms (manifest fsync + pointer swap),
     # plan_ms (driver-side plan construction = the py4j remainder)
     phases: dict[str, float] = field(default_factory=dict)
 
@@ -134,12 +132,15 @@ def merge_changes(
 
     ``collect_stats`` runs the pre-pass job that fills ``batch_rows``,
     ``batch_keys``, the lsn range and (with ``collect_lineage``) the
-    per-input-partition lineage, and lets CoW read only the buckets the
-    batch touches. Without it those fields are -1/None, CoW rewrites
-    every bucket and the merge is one Spark job: turn it off for MoR
-    backfills, keep it for targeted streaming batches where bucket
-    pruning pays. ``touched_buckets``, ``rows_written`` and
-    ``files_written`` are reported either way.
+    per-input-partition lineage, and skips the merge of an empty batch.
+    Without it those fields are -1/None and the merge is one Spark job:
+    turn it off for MoR backfills. ``touched_buckets``,
+    ``rows_written`` and ``files_written`` are reported either way: the
+    buckets the batch has rows for are the buckets written.
+
+    Memory bound: a merge task holds its partition's batch rows (about
+    ``|batch| / min(num_buckets, parallelism)``), plus in CoW mode one
+    bucket's stored rows, in a Python worker's memory, with no spill.
 
     Exactly-once: when ``batch_id`` is given and ≤ the last committed
     batch id for ``source_id`` (stored in snapshot properties — the
@@ -177,7 +178,6 @@ def merge_changes(
     batch_rows = batch_keys = -1
     min_lsn = max_lsn = None
     lineage: list[dict[str, Any]] = []
-    touched = list(range(table.num_buckets))
     if collect_stats:
         t_stats = time.monotonic()
         stat_rows = _batch_stats(table, changes, collect_lineage)
@@ -193,7 +193,6 @@ def merge_changes(
         min_lsn = min(lsns) if lsns else None
         lsns = [r["max_lsn"] for r in stat_rows if r["max_lsn"] is not None]
         max_lsn = max(lsns) if lsns else None
-        touched = sorted({int(b) for r in stat_rows for b in r["buckets"]})
         if collect_lineage:
             lineage = [
                 {k: r[k] for k in ("_pid", "rows", "keys", "min_lsn", "max_lsn")}
@@ -201,7 +200,12 @@ def merge_changes(
             ]
         stats_ms = (time.monotonic() - t_stats) * 1000
 
-    plan = _merge_plan(table, changes, mode, touched)
+    t_exec = time.monotonic()
+    written = [(r["bucket"], r["path"]) for r in _merge_plan(table, changes, mode).collect()]
+    new_files = {str(b): [rel] for b, rel in written if rel is not None}
+    table.register_files(new_files)
+    touched = sorted(b for b, _ in written)
+    exec_ms = (time.monotonic() - t_exec) * 1000
     props = with_batch_id(
         {**table.properties, **(extra_properties or {})}, batch_id, source_id
     )
@@ -213,14 +217,13 @@ def merge_changes(
         "batch_keys": int(batch_keys),
         "min_lsn": min_lsn,
         "max_lsn": max_lsn,
+        "touched_buckets": touched,
+        "partition_lineage": lineage,
     }
     if mode == "mor":
-        summary["partition_lineage"] = lineage
-        snap_id = table.append_deltas(plan, properties=props, summary=summary)
-        touched = table.last_write_buckets
+        snap_id = table.append_deltas(new_files, props, summary)
     else:
-        summary.update(touched_buckets=touched, partition_lineage=lineage)
-        snap_id = table.overwrite_buckets(plan, touched, props, summary)
+        snap_id = table.replace_buckets(new_files, touched, props, summary)
 
     res = MergeResult(
         snapshot_id=snap_id,
@@ -234,7 +237,16 @@ def merge_changes(
         partition_lineage=lineage,
     )
     res.wall_ms = (time.monotonic() - t0) * 1000
-    res.phases = _phases(stats_ms, table, res.wall_ms)
+    commit_ms = table.last_commit_ms
+    # the residual (plan_ms) is driver-side py4j plan construction and
+    # scheduling
+    plan_ms = max(res.wall_ms - stats_ms - exec_ms - commit_ms, 0.0)
+    res.phases = {
+        "stats_ms": round(stats_ms, 1),
+        "exec_ms": round(exec_ms, 1),
+        "commit_ms": round(commit_ms, 1),
+        "plan_ms": round(plan_ms, 1),
+    }
     return res
 
 
@@ -246,88 +258,79 @@ def _bucket_sql(table: LakeTable) -> str:
     )
 
 
-def _merge_plan(
-    table: LakeTable,
-    changes: DataFrame,
-    mode: str,
-    touched: list[int],
-) -> DataFrame:
-    """The one merge plan (see the module docstring): the batch as
-    stored rows of generation snapshot_id + 1, plus in ``cow`` mode the
-    stored rows of ``touched``, shuffled once on the bucket and
-    resolved to the latest version per key."""
-    spark = changes.sparkSession
+def _merge_plan(table: LakeTable, changes: DataFrame, mode: str) -> DataFrame:
+    """The merge's one Spark job (see the module docstring): the batch
+    as stored rows of generation snapshot_id + 1, shuffled once on the
+    bucket, and each bucket it has rows for rewritten by
+    :func:`rewrite_bucket`, with the bucket's stored files in ``cow``
+    mode. Collecting it writes the files and returns (bucket, relative
+    path or None) per written bucket."""
     cols = set(changes.columns)
     user = table.user_schema.fields
-    names = [f.name for f in user]
-    bucket = f"{_bucket_sql(table)} AS {_bq(BUCKET_COL)}"
-
-    def batch_col(f) -> str:
+    names = [BUCKET_COL, *(f.name for f in user), V_TS, V_SEQ, V_DEL, V_GEN, V_LSN]
+    exprs = [
+        _bucket_sql(table),
         # a typed null for a column added after the batch was produced
-        raw = _bq(f.name) if f.name in cols else f"CAST(NULL AS {f.dataType.simpleString()})"
-        return f"{raw} AS {_bq(f.name)}"
-
-    lsn = "CAST(lsn AS BIGINT)" if "lsn" in cols else "CAST(NULL AS BIGINT)"
-    rows = f"""
-        SELECT {bucket}, {', '.join(batch_col(f) for f in user)},
-               CAST(ts AS TIMESTAMP) AS {_bq(V_TS)},
-               coalesce(CAST(op_seq AS BIGINT), CAST(-1 AS BIGINT)) AS {_bq(V_SEQ)},
-               (op = 'd') AS {_bq(V_DEL)},
-               CAST({{gen}} AS BIGINT) AS {_bq(V_GEN)},
-               {lsn} AS {_bq(V_LSN)}
-        FROM {{src}}"""
-    args: dict[str, Any] = {"src": changes, "gen": table.snapshot_id + 1}
-    if mode == "cow":
-        stored = ", ".join(_bq(c) for c in [*names, *HIDDEN_COLS])
-        rows += f"""
-        UNION ALL
-        SELECT {bucket}, {stored}, CAST(NULL AS BIGINT) FROM {{tgt}}"""
-        # read in the batch's session: a streaming micro-batch has its
-        # own, and the SQL text sees only that session's views
-        args["tgt"] = LakeTable(spark, table.path, table.manifest).read(
-            buckets=touched, include_hidden=True, resolve=False
-        )
-    columns = [BUCKET_COL, *names, *HIDDEN_COLS, V_LSN]
-    partitions = min(len(touched), max(spark.sparkContext.defaultParallelism, 1))
-    return spark.sql(
-        latest_sql(f"({rows})", columns, table.key_columns, partitions), **args
+        *(_bq(f.name) if f.name in cols else f"CAST(NULL AS {f.dataType.simpleString()})"
+          for f in user),
+        "CAST(ts AS TIMESTAMP)",
+        "coalesce(CAST(op_seq AS BIGINT), CAST(-1 AS BIGINT))",
+        "(op = 'd')",
+        "CAST({gen} AS BIGINT)",
+        "CAST(lsn AS BIGINT)" if "lsn" in cols else "CAST(NULL AS BIGINT)",
+    ]
+    # positional names across the Python boundary: mapInArrow resolves
+    # each column by its name, which fails on names that need quoting
+    select = ", ".join(f"{e} AS c{i}" for i, e in enumerate(exprs))
+    rows = changes.sparkSession.sql(
+        f"SELECT {select} FROM {{src}}", src=changes, gen=table.snapshot_id + 1
     )
+    spec = bucket_spec(table)
+    stored = {
+        int(b): [os.path.join(table.path, f) for f in fl]
+        for b, fl in table.manifest["files"].items()
+    } if mode == "cow" else {}
+
+    def rewrite(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = list(batches)
+        if not batches:
+            return
+        data = pa.Table.from_batches(batches).rename_columns(names)
+        col = data.column(BUCKET_COL)
+        done = [
+            rewrite_bucket(spec, b, stored.get(b, []), data.filter(pc.equal(col, b)))
+            for b in pc.unique(col).to_pylist()
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([b for b, _ in done], pa.int32()), pa.array([r for _, r in done], pa.string())],
+            names=["bucket", "path"],
+        )
+
+    n = min(table.num_buckets, max(changes.sparkSession.sparkContext.defaultParallelism, 1))
+    return rows.repartition(n, "c0").mapInArrow(rewrite, "bucket int, path string")
 
 
 def _batch_stats(table: LakeTable, changes: DataFrame, lineage: bool) -> list:
     """The stats/lineage pre-pass over the raw batch rows: per input
     partition (one row when ``lineage`` is off) the rows and keys it
     contributes and their lsn range, with each key counted in the first
-    input partition that carries it, plus the buckets the keys hash
-    to."""
+    input partition that carries it."""
     keys = ", ".join(_bq(k) for k in table.key_columns)
     pid = "spark_partition_id()" if lineage else "0"
     lsn = "lsn" if "lsn" in changes.columns else "CAST(NULL AS BIGINT)"
     return changes.sparkSession.sql(
         f"""
         SELECT __pid AS _pid, sum(__n) AS `rows`, count(1) AS `keys`,
-               min(__lo) AS min_lsn, max(__hi) AS max_lsn,
-               collect_set(__b) AS buckets
+               min(__lo) AS min_lsn, max(__hi) AS max_lsn
         FROM (
           SELECT min(__pid) AS __pid, count(1) AS __n, min(__l) AS __lo,
-                 max(__l) AS __hi, min(__b) AS __b
-          FROM (SELECT {keys}, {pid} AS __pid, {lsn} AS __l,
-                       {_bucket_sql(table)} AS __b FROM {{src}})
+                 max(__l) AS __hi
+          FROM (SELECT {keys}, {pid} AS __pid, {lsn} AS __l FROM {{src}})
           GROUP BY {keys}
         )
         GROUP BY __pid""",
         src=changes,
     ).collect()
-
-
-def _phases(stats_ms: float, table: LakeTable, wall_ms: float) -> dict[str, float]:
-    """Per-phase breakdown of one merge: the residual (plan_ms) is
-    driver-side py4j plan construction + scheduling."""
-    exec_ms = getattr(table, "last_write_ms", 0.0)
-    commit_ms = getattr(table, "last_commit_ms", 0.0)
-    return {
-        "stats_ms": round(stats_ms, 1),
-        "exec_ms": round(exec_ms, 1),
-        "commit_ms": round(commit_ms, 1),
-        "plan_ms": round(max(wall_ms - stats_ms - exec_ms - commit_ms, 0.0), 1),
-    }

@@ -234,46 +234,37 @@ def _bq(name: str) -> str:
     return "`" + str(name).replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
 
 
-def latest_sql(
-    rel: str, columns: list[str], keys: list[str], partitions: int | None = None
-) -> str:
+def latest_sql(rel: str, columns: list[str], keys: list[str]) -> str:
     """SQL text of the one resolver: the latest version of each key of
     ``rel`` (a relation with ``columns``) under :data:`VERSION_ORDER`,
     as ``groupBy(key).agg(max_by(row, order))``. Order fields that
     ``rel`` lacks are null in every row and so never decide. ``V_LSN``
-    only orders and is not returned.
-
-    With ``partitions``, ``rel`` carries ``BUCKET_COL``: its rows are
-    shuffled once into ``partitions`` partitions on the bucket, then
-    grouped by (bucket, key). The bucket is a function of the key, so
-    that shuffle satisfies the grouping (no second exchange) and each
-    task holds whole buckets for the bucket-partitioned write."""
-    by = ([BUCKET_COL] if partitions else []) + list(keys)
-    payload = [c for c in columns if c not in by and c != V_LSN]
+    only orders and is not returned. It serves the Spark-side reads
+    (the MoR read and the change-feed diff); every write of resolved
+    bucket files runs its Arrow twin, :func:`latest_arrow`."""
+    payload = [c for c in columns if c not in keys and c != V_LSN]
     order = [c for c in VERSION_ORDER if c in columns]
-    by_sql = ", ".join(_bq(c) for c in by)
-    hint = (
-        f"/*+ REPARTITION({int(partitions)}, {_bq(BUCKET_COL)}) */ "
-        if partitions else ""
-    )
+    by_sql = ", ".join(_bq(c) for c in keys)
     return (
         f"SELECT {by_sql}, w.* FROM ("
         f"SELECT {by_sql}, max_by(struct({', '.join(_bq(c) for c in payload)}), "
         f"struct({', '.join(_bq(c) for c in order)})) AS w "
-        f"FROM (SELECT {hint}* FROM {rel}) GROUP BY {by_sql})"
+        f"FROM {rel} GROUP BY {by_sql})"
     )
 
 
 def latest_arrow(data, keys: list[str], bucket_column: str | None = None):
     """The Arrow twin of :func:`latest_sql`, for code that holds rows in
-    a ``pyarrow.Table`` rather than a DataFrame (compaction's per-bucket
-    rewrite): the latest version of each key of ``data`` under
-    :data:`VERSION_ORDER`, nulls losing. It sorts by ``bucket_column``
-    (when it is not the leading key) and the keys, then by the order
-    fields descending, and keeps the first row of each key, so the
-    result comes out key-sorted. Null key parts group together, as in
-    ``GROUP BY``. ``V_LSN`` only orders and is not returned. Rows that
-    tie on every order field are a free pick, as in ``max_by``."""
+    a ``pyarrow.Table`` rather than a DataFrame (the per-bucket rewrite
+    of merges and compaction,
+    :func:`spark_cdc.lake.maintenance.rewrite_bucket`): the latest
+    version of each key of ``data`` under :data:`VERSION_ORDER`, nulls
+    losing. It sorts by ``bucket_column`` (when it is not the leading
+    key) and the keys, then by the order fields descending, and keeps
+    the first row of each key, so the result comes out key-sorted. Null
+    key parts group together, as in ``GROUP BY``. ``V_LSN`` only orders
+    and is not returned. Rows that tie on every order field are a free
+    pick, as in ``max_by``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -304,7 +295,8 @@ def latest_arrow(data, keys: list[str], bucket_column: str | None = None):
 
 def resolve_latest(df: DataFrame, keys: list[str]) -> DataFrame:
     """:func:`latest_sql` over a DataFrame: the resolver of the MoR
-    read and the change-feed diff."""
+    read and the change-feed diff, the two Spark-side reads of
+    multi-version buckets."""
     return df.sparkSession.sql(latest_sql("{df}", df.columns, keys), df=df)
 
 
@@ -315,15 +307,12 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self.manifest = manifest
-        # wall time of the most recent data-write Spark action / manifest
-        # commit — per-phase lineage for MergeResult.phases and bench
-        self.last_write_ms = 0.0
+        # wall time of the most recent manifest commit (MergeResult.phases)
         self.last_commit_ms = 0.0
-        # rows/files/buckets the most recent _write_data wrote (MergeResult)
+        # rows/files the most recent register_files recorded (MergeResult)
         self.last_write_rows = 0
         self.last_write_files = 0
-        self.last_write_buckets: list[int] = []
-        # per-file [min,max] key stats from the most recent _write_data,
+        # per-file [min,max] key stats from the most recent register_files,
         # folded into the manifest by _commit_next
         self._last_write_stats: dict[str, list] = {}
         # per-file per-column zone maps for properties["stats_columns"]
@@ -901,12 +890,12 @@ class LakeTable:
         """Copy-on-write replacement of a bucket subset: ``df`` (already
         carrying ``_bucket``) becomes the new content of
         ``touched_buckets``; every other bucket carries over by
-        reference. This is the commit primitive under MERGE (CoW mode)
-        and z-order; compaction writes its files outside Spark and
-        commits through :meth:`replace_buckets`. Replaced buckets are
-        single-version again, so their delta flag clears. ``presorted`` skips the key-order
-        sortWithinPartitions for callers that already arranged rows
-        (z-order rewrite)."""
+        reference. This is the Spark-side write of z-order, the rollup
+        and the distinct view; merges and compaction write their files
+        outside Spark and commit through :meth:`replace_buckets`.
+        Replaced buckets are single-version again, so their delta flag
+        clears. ``presorted`` skips the key-order sortWithinPartitions
+        for callers that already arranged rows (z-order rewrite)."""
         new_files = self._write_data(df, presorted=presorted)
         return self.replace_buckets(new_files, touched_buckets, properties, summary)
 
@@ -921,7 +910,7 @@ class LakeTable:
         :meth:`register_files`) as the whole content of
         ``touched_buckets``: the commit half of
         :meth:`overwrite_buckets`, for writers that produce files
-        outside Spark (compaction)."""
+        outside Spark (a CoW merge, compaction)."""
         files = {
             b: list(fl)
             for b, fl in self.manifest["files"].items()
@@ -942,22 +931,24 @@ class LakeTable:
 
     def append_deltas(
         self,
-        df: DataFrame,
+        new_files: dict[str, list[str]],
         properties: dict[str, Any] | None = None,
         summary: dict[str, Any] | None = None,
     ) -> int:
-        """Merge-on-read commit: append ``df`` (carrying ``_bucket``) as
-        delta files to the buckets it writes, without rewriting existing
-        data, and flag those buckets. Ingest cost is O(batch); reads of
-        flagged buckets resolve latest-version on the fly until
-        :func:`spark_cdc.lake.maintenance.compact` folds them."""
-        new_files = self._write_data(df)
+        """Merge-on-read commit: append ``new_files`` (bucket → relative
+        paths, registered by :meth:`register_files`) as delta files to
+        their buckets, without rewriting existing data, and flag those
+        buckets. Ingest cost is O(batch); reads of flagged buckets
+        resolve latest-version on the fly until
+        :func:`spark_cdc.lake.maintenance.compact` folds them. The
+        commit half of a MoR merge, as :meth:`replace_buckets` is of a
+        CoW merge."""
         files = {b: list(fl) for b, fl in self.manifest["files"].items()}
         for b, fl in new_files.items():
             files.setdefault(b, []).extend(fl)
         deltas = sorted(
             set(int(b) for b in self.manifest.get("delta_buckets", []))
-            | set(self.last_write_buckets)
+            | set(int(b) for b in new_files)
         )
         return self._commit_next(
             files,
@@ -1029,13 +1020,7 @@ class LakeTable:
 
     def _write_data(self, df: DataFrame, presorted: bool = False) -> dict[str, list[str]]:
         """Write df (with ``_bucket``) partitioned by bucket, as files of
-        the next snapshot; return relative file paths per bucket. Wall
-        time of the write job (the Spark action that executes the whole
-        merge plan) is recorded in ``last_write_ms`` for per-phase
-        lineage/bench reporting."""
-        import time as _time
-
-        t0 = _time.monotonic()
+        the next snapshot; return relative file paths per bucket."""
         rel_dir = self.new_data_dir()
         out_dir = os.path.join(self.path, rel_dir)
         if presorted:
@@ -1068,7 +1053,6 @@ class LakeTable:
                 if f.endswith(".parquet")
             ]
         self.register_files(files)
-        self.last_write_ms = (_time.monotonic() - t0) * 1000
         return files
 
     def new_data_dir(self) -> str:
@@ -1080,12 +1064,11 @@ class LakeTable:
 
     def register_files(self, files: dict[str, list[str]]) -> None:
         """Record freshly written files (bucket → relative paths) for
-        the next commit: their buckets (``last_write_buckets``) and
-        footer statistics (:meth:`_collect_footer_stats`)."""
+        the next commit: their footer statistics
+        (:meth:`_collect_footer_stats`)."""
         self._last_write_stats = {}
         self._last_write_col_stats = {}
         self.last_write_rows = 0
-        self.last_write_buckets = sorted(int(b) for b in files)
         self._collect_footer_stats(files)
 
     def _collect_footer_stats(self, files: dict[str, list[str]]) -> None:
@@ -1124,10 +1107,7 @@ class LakeTable:
         self.last_write_files = len(rels)
         if not col and not zone_cols:
             return
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            return
+        import pyarrow.parquet as pq
 
         def one(rel: str):
             try:

@@ -22,7 +22,10 @@ tests/test_entry_contract.py::test_kpi_entries_on_edge_cases.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import weakref
 from typing import Callable
 
@@ -43,6 +46,21 @@ from spark_cdc.operators import ann, dedup_ops, multimodal, temporal
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+
+
+# The lake-building entries keep their tables under one per-process
+# parent directory, removed at exit: the DataFrames they return read
+# those tables lazily, so the files must outlive the call.
+_SCRATCH: list[str] = []
+
+
+def _scratch_dir(tag: str) -> str:
+    """A fresh directory for one entry's tables, under the process's
+    ``spark_cdc_contract_*`` parent."""
+    if not _SCRATCH:
+        _SCRATCH.append(tempfile.mkdtemp(prefix="spark_cdc_contract_"))
+        atexit.register(shutil.rmtree, _SCRATCH[0], True)
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=_SCRATCH[0])
 
 
 # Input-table scan plans, registered once per (session, dir, table) —
@@ -859,8 +877,6 @@ def cdc_replay_mor_table(spark, sf_dir):
     then a snapshot read. cdc_replay_final_state checks the replay
     ALGEBRA; this entry checks manifests, tombstones, delta resolution
     and compaction against the identical SQL oracle."""
-    import tempfile
-
     from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.lake.maintenance import compact
     from spark_cdc.lake.table import LakeTable
@@ -884,7 +900,7 @@ def cdc_replay_mor_table(spark, sf_dir):
             T.StructField("ts", T.TimestampType(), True),
         ]
     )
-    path = tempfile.mkdtemp(prefix="spark_cdc_contract_mor_") + "/t"
+    path = _scratch_dir("mor") + "/t"
     table = LakeTable.create(spark, path, schema, key_columns=["conv_id", "turn_idx"], num_buckets=8)
     for i in range(4):
         apply_batch(
@@ -924,8 +940,6 @@ def cdc_schema_evolution(spark, sf_dir):
     winning row has a tool value. The oracle recomputes that from the
     winner's batch parity. Also exercises SET-* semantics: a newer
     pre-evolution version nulls a stale tool."""
-    import tempfile
-
     from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.lake.table import LakeTable
     from pyspark.sql import types as T
@@ -949,7 +963,7 @@ def cdc_schema_evolution(spark, sf_dir):
             T.StructField("ts", T.TimestampType(), True),
         ]
     )
-    path = tempfile.mkdtemp(prefix="spark_cdc_contract_evo_") + "/t"
+    path = _scratch_dir("evo") + "/t"
     table = LakeTable.create(spark, path, schema, key_columns=["conv_id", "turn_idx"], num_buckets=8)
     for i in range(4):
         batch = log.where(F.pmod("lsn", F.lit(4)) == i)
@@ -984,8 +998,6 @@ def cdc_time_travel(spark, sf_dir):
     merges advance the table, then the FIRST post-merge snapshot is
     read back by id — it must equal the replay of only the first batch,
     bit-for-bit, regardless of everything committed after it."""
-    import tempfile
-
     from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.lake.table import LakeTable
     from pyspark.sql import types as T
@@ -1008,7 +1020,7 @@ def cdc_time_travel(spark, sf_dir):
             T.StructField("ts", T.TimestampType(), True),
         ]
     )
-    path = tempfile.mkdtemp(prefix="spark_cdc_contract_tt_") + "/t"
+    path = _scratch_dir("tt") + "/t"
     table = LakeTable.create(spark, path, schema, key_columns=["conv_id", "turn_idx"], num_buckets=8)
     apply_batch(table, log.where(F.pmod("lsn", F.lit(4)) == 0), batch_id=0, collect_lineage=False)
     first_snap = table.snapshot_id
@@ -1062,8 +1074,6 @@ def cdc_change_feed(spark, sf_dir):
     identical payloads. The oracle recomputes the diff as a full outer
     join of the two replayed states. The engine side reads only buckets
     whose manifest file lists differ (change-set-proportional cost)."""
-    import tempfile
-
     from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.lake.table import LakeTable
     from pyspark.sql import types as T
@@ -1086,7 +1096,7 @@ def cdc_change_feed(spark, sf_dir):
             T.StructField("ts", T.TimestampType(), True),
         ]
     )
-    path = tempfile.mkdtemp(prefix="spark_cdc_contract_cdf_") + "/t"
+    path = _scratch_dir("cdf") + "/t"
     table = LakeTable.create(
         spark, path, schema, key_columns=["conv_id", "turn_idx"], num_buckets=8
     )
@@ -1122,8 +1132,6 @@ def cdc_point_lookup(spark, sf_dir):
     min/max stats, with MoR resolution running over just the kept
     files. Equal to filtering the full replay, by construction of the
     covering-file invariant."""
-    import tempfile
-
     from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.lake.table import LakeTable
     from pyspark.sql import types as T
@@ -1146,7 +1154,7 @@ def cdc_point_lookup(spark, sf_dir):
             T.StructField("ts", T.TimestampType(), True),
         ]
     )
-    path = tempfile.mkdtemp(prefix="spark_cdc_contract_lkp_") + "/t"
+    path = _scratch_dir("lkp") + "/t"
     table = LakeTable.create(
         spark, path, schema, key_columns=["conv_id", "turn_idx"], num_buckets=8
     )
@@ -1185,8 +1193,6 @@ def ivm_feed_rollup(spark, sf_dir):
     state. Goes beyond the reference's SummingMergeTree views, which
     only ever ingest append-only facts (kpi_views.sql) and whose CDC
     path drops deletes (processor.py:214-217)."""
-    import tempfile
-
     from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.lake.feed import ChangeFeedConsumer
     from spark_cdc.lake.table import LakeTable
@@ -1219,7 +1225,7 @@ def ivm_feed_rollup(spark, sf_dir):
             T.StructField("turn_sum", T.LongType(), True),
         ]
     )
-    base = tempfile.mkdtemp(prefix="spark_cdc_contract_ivm_")
+    base = _scratch_dir("ivm")
     src = LakeTable.create(
         spark, base + "/src", src_schema, key_columns=["conv_id", "turn_idx"], num_buckets=8
     )
@@ -1279,8 +1285,6 @@ def rollup_incremental(spark, sf_dir):
     lake table (additive deltas, add-merge, exactly-once), and the
     final state must equal the from-scratch SQL aggregate — the
     equivalence contract as a driver-checked row."""
-    import tempfile
-
     from spark_cdc.lake.table import LakeTable
     from spark_cdc.operators.rollup import IncrementalRollup
     from pyspark.sql import types as T
@@ -1294,7 +1298,7 @@ def rollup_incremental(spark, sf_dir):
             T.StructField("spend", T.DoubleType(), True),
         ]
     )
-    path = tempfile.mkdtemp(prefix="spark_cdc_contract_rollup_") + "/t"
+    path = _scratch_dir("rollup") + "/t"
     table = LakeTable.create(spark, path, schema, key_columns=["user_id"], num_buckets=8)
     rollup = IncrementalRollup(
         table,
@@ -1824,8 +1828,6 @@ def bm25_index_incr(spark, sf_dir):
     so any stale, leaked or lost posting shifts a score and fails the
     value hash. Maintained == rebuilt row equality is additionally
     pinned by tests/test_index_maint.py."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from spark_cdc.cdc.apply import apply_batch
@@ -1841,7 +1843,7 @@ def bm25_index_incr(spark, sf_dir):
         .where(F.col("doc_id") < 300)
         .select("doc_id", "text")
     )
-    base = tempfile.mkdtemp(prefix="spark_cdc_contract_bm25idx_")
+    base = _scratch_dir("bm25idx")
     docs_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), False),

@@ -80,7 +80,10 @@ class StreamRunner:
         # preserving, so it can run between any two triggers.
         self.compact_every = compact_every
         self._applied = 0
-        self.results: list = []
+        # a long tail keeps no per-batch history: a count and the last
+        # MergeResult
+        self.batches = 0
+        self.last_result = None
 
     def _reader(self):
         reader = self.spark.readStream.schema(self.schema).format(self.source_format)
@@ -103,7 +106,8 @@ class StreamRunner:
             quarantine=self.quarantine,
             mode=self.mode,
         )
-        self.results.append(res)
+        self.batches += 1
+        self.last_result = res
         if not res.skipped:
             self._applied += 1
             if self.compact_every and self._applied % self.compact_every == 0:
@@ -113,8 +117,9 @@ class StreamRunner:
         if self.on_batch:
             self.on_batch(batch_id, res)
 
-    def run_available(self) -> list:
-        """Process everything currently in the source dir, then stop
+    def run_available(self) -> int:
+        """Process everything currently in the source dir, then stop, and
+        return the number of micro-batches handled so far
         (``availableNow`` — replay/catch-up mode, the analogue of the
         reference's run-once batch cycle, /root/reference/etl/main.py:121-127)."""
         q = (
@@ -125,7 +130,7 @@ class StreamRunner:
             .start()
         )
         q.awaitTermination()
-        return self.results
+        return self.batches
 
     def start_continuous(self, processing_time: str = "2 seconds"):
         """Continuous micro-batch tail (the long-running service mode,
@@ -177,7 +182,8 @@ class MultiTableStreamRunner:
         self.quarantine = quarantine
         self.on_batch = on_batch
         self.schema = KAFKA_FRAME_SCHEMA
-        self.results: list[dict] = []
+        self.batches = 0
+        self.last_result: dict | None = None
 
     def _handle(self, batch_df: DataFrame, batch_id: int) -> None:
         from spark_cdc.cdc.apply import apply_batch_routed
@@ -190,11 +196,12 @@ class MultiTableStreamRunner:
             batch_id=batch_id,
             quarantine=self.quarantine,
         )
-        self.results.append(res)
+        self.batches += 1
+        self.last_result = res
         if self.on_batch:
             self.on_batch(batch_id, res)
 
-    def run_available(self) -> list[dict]:
+    def run_available(self) -> int:
         reader = self.spark.readStream.schema(self.schema).format(self.source_format)
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
@@ -206,4 +213,4 @@ class MultiTableStreamRunner:
             .start()
         )
         q.awaitTermination()
-        return self.results
+        return self.batches

@@ -169,3 +169,31 @@ def test_kpi_entries_on_edge_cases(spark, tmp_path):
     nation = {r["nation"]: r for r in out["kpi_nation_performance"].collect()}
     assert (nation["BRAZIL"]["customer_count"], nation["BRAZIL"]["revenue"]) == (0, 0.0)
     assert (nation["ALGERIA"]["customer_count"], nation["ALGERIA"]["n_orders"]) == (2, 2)
+
+
+def test_lake_entries_remove_their_tables_at_exit(tmp_path):
+    """A lake-building entry keeps its table under the process's one
+    ``spark_cdc_contract_*`` directory while the process lives, and the
+    directory is gone once the process exits."""
+    import subprocess
+    import sys
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import glob, os, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from spark_cdc.session import get_spark\n"
+        "from spark_cdc.plans import QUERIES\n"
+        "spark = get_spark(master='local[2]', shuffle_partitions=4)\n"
+        f"assert QUERIES['cdc_point_lookup'](spark, {SF_DIR!r}).count() >= 0\n"
+        f"assert glob.glob(os.path.join({str(tmp)!r}, 'spark_cdc_contract_*', 'lkp_*'))\n"
+        "spark.stop()\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code], env={**os.environ, "TMPDIR": str(tmp)},
+        cwd=str(tmp_path), timeout=600, capture_output=True, text=True,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert not list(tmp.glob("spark_cdc_contract_*"))

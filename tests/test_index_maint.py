@@ -837,7 +837,7 @@ def test_bm25_index_maintained_on_stream(spark, tmp_path):
         on_batch=maint.on_batch,
     )
     runner.run_available()
-    assert len(runner.results) >= 2
+    assert runner.batches >= 2
     # the stream really merged the docs corpus (keyed, not degenerate)
     assert docs.read().where(F.col("doc_id").isNull()).count() == 0
     assert docs.read().count() > 20

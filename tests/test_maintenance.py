@@ -369,3 +369,18 @@ def test_compacted_file_types_match_a_spark_written_file(spark, tmp_path):
 
     assert [r[:2] for r in duck_types(arrow_file)] == [r[:2] for r in duck_types(spark_file)]
     assert dict((r[0], r[1]) for r in duck_types(arrow_file))["ts"] == "TIMESTAMP WITH TIME ZONE"
+
+    # a merge writes its files with the same kernel, in both modes
+    from spark_cdc.lake.merge import merge_changes
+
+    changes = spark.createDataFrame(rows[:10], schema).select(
+        "*", F.lit("u").alias("op"), F.col("id").alias("op_seq")
+    )
+    for mode in ("mor", "cow"):
+        res = merge_changes(table, changes, mode=mode, collect_stats=False)
+        (rel,) = [f for f in table.manifest["files"]["0"] if f"snap{res.snapshot_id}-" in f]
+        merged_file = os.path.join(table.path, rel)
+        assert spark_types(merged_file) == spark_types(spark_file), mode
+        assert [r[:2] for r in duck_types(merged_file)] == [
+            r[:2] for r in duck_types(spark_file)
+        ], mode

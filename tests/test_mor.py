@@ -82,28 +82,38 @@ def test_mor_fast_path_no_stats(spark, tmp_path):
 
 
 def test_mor_touched_buckets_are_this_commits(spark, tmp_path):
-    """A MoR merge reports the buckets it wrote, not the table's
-    accumulated delta buckets, and counts its rows and files, with and
-    without the stats pre-pass."""
+    """A merge reports the buckets it wrote, observed from the files it
+    wrote: MoR not the table's accumulated delta buckets, CoW not every
+    bucket when there is no stats pre-pass. It counts its rows and
+    files, and every other bucket's file list stays as it was. An empty
+    CoW batch changes no file list and still records its batch id."""
     from spark_cdc.lake.table import bucket_expr
 
     log = generate_change_log(spark, n_events=400, n_convs=40, seed=37)
     hot = log.select("conv_id").first()["conv_id"]
     one = log.where(F.col("conv_id") == hot).withColumn("lsn", F.col("lsn") + 10_000)
     want = [one.select(bucket_expr("conv_id", 8)).first()[0]]
-    for stats in (False, True):
-        mor = LakeTable.create(
-            spark, str(tmp_path / f"t{stats}"), PAYLOAD_SCHEMA,
-            key_columns=KEY_COLUMNS, num_buckets=8,
-        )
-        apply_batch(mor, log, batch_id=0, mode="mor", collect_stats=stats)
-        assert len(mor.manifest["delta_buckets"]) > 1
-        files = {b: list(fl) for b, fl in mor.manifest["files"].items()}
-        res = apply_batch(mor, one, batch_id=1, mode="mor", collect_stats=stats)
-        assert res.touched_buckets == want, (stats, res.touched_buckets)
-        grew = [int(b) for b, fl in mor.manifest["files"].items() if fl != files.get(b)]
-        assert grew == want
-        assert res.rows_written > 0 and res.files_written > 0
+    for mode in ("mor", "cow"):
+        for stats in (False, True):
+            table = LakeTable.create(
+                spark, str(tmp_path / f"{mode}{stats}"), PAYLOAD_SCHEMA,
+                key_columns=KEY_COLUMNS, num_buckets=8,
+            )
+            apply_batch(table, log, batch_id=0, mode=mode, collect_stats=stats)
+            if mode == "mor":
+                assert len(table.manifest["delta_buckets"]) > 1
+            files = {b: list(fl) for b, fl in table.manifest["files"].items()}
+            res = apply_batch(table, one, batch_id=1, mode=mode, collect_stats=stats)
+            assert res.touched_buckets == want, (mode, stats, res.touched_buckets)
+            changed = [
+                int(b) for b, fl in table.manifest["files"].items() if fl != files.get(b)
+            ]
+            assert changed == want, (mode, stats, changed)
+            assert res.rows_written > 0 and res.files_written > 0
+        files = {b: list(fl) for b, fl in table.manifest["files"].items()}
+        res = apply_batch(table, one.limit(0), batch_id=2, mode=mode, collect_stats=False)
+        assert res.touched_buckets == [] and table.manifest["files"] == files, mode
+        assert table.has_committed("default", 2), mode
 
 
 def test_merge_quotes_hostile_identifiers(spark, tmp_path):

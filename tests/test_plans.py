@@ -68,11 +68,12 @@ def test_lsh_dedup_plan_has_no_cartesian(spark):
 
 
 def test_merge_plan_is_single_exchange(spark, tmp_path):
-    """The one merge plan must shuffle exactly once (on the bucket) in
-    both modes, over every bucket (no pre-pass) and over a touched
-    subset: HashPartitioning(bucket) satisfies groupBy(bucket, key)'s
-    clustering, so no second exchange may appear — the one-exchange
-    property the 10^10-event ingest path depends on."""
+    """The merge's one Spark job must shuffle exactly once (on the
+    bucket) into one Arrow map in both modes, with no Spark-side
+    resolve or sort and no scan of the table's own files: the per-bucket
+    kernel in the Python workers resolves, sorts and reads stored
+    files — the one-exchange property the 10^10-event ingest path
+    depends on."""
     from spark_cdc.cdc.apply import apply_batch
     from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
     from spark_cdc.lake.merge import _merge_plan
@@ -83,17 +84,20 @@ def test_merge_plan_is_single_exchange(spark, tmp_path):
         spark, str(tmp_path / "t"), PAYLOAD_SCHEMA, key_columns=KEY_COLUMNS, num_buckets=8
     )
     src = generate_change_log(spark, n_events=2000, n_convs=50, seed=1, partitions=4)
-    # stored rows for the CoW side of the plan to read
+    # stored rows for the CoW side of the kernel to read
     apply_batch(table, src, batch_id=0, collect_stats=False, collect_lineage=False)
+    data_dir = str(tmp_path / "t" / "data")
     for mode in ("cow", "mor"):
-        for touched in (list(range(8)), [1, 5]):
-            plan_df = _merge_plan(table, src, mode, touched)
-            plan_df.collect()
-            plan = plan_df._jdf.queryExecution().executedPlan().toString()
-            # AQE prints the final AND the initial plan; count only the final
-            final = plan.split("== Initial Plan ==")[0]
-            assert final.count("Exchange hashpartitioning") == 1, (mode, touched, final)
-            assert "partial_max_by" in final, (mode, touched, final)
+        plan_df = _merge_plan(table, src, mode)
+        plan_df.collect()
+        plan = plan_df._jdf.queryExecution().executedPlan().toString()
+        # AQE prints the final AND the initial plan; count only the final
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("Exchange hashpartitioning") == 1, (mode, final)
+        assert final.count("MapInArrow") == 1, (mode, final)
+        for node in ("SortAggregate", "Sort ", "max_by"):
+            assert node not in final, (mode, node, final)
+        assert data_dir not in plan, (mode, plan)
 
 
 def test_wholestage_codegen_in_flagship(spark):

@@ -36,7 +36,7 @@ def test_stream_resume_and_exactly_once(spark, tmp_path):
     _write_phase(log, 0, 1500, src)
     r1 = StreamRunner(spark, table, src, ckpt, max_files_per_trigger=1)
     r1.run_available()
-    assert len(r1.results) >= 1
+    assert r1.batches >= 1
     mid_state = table.read().count()
     assert mid_state > 0
 
@@ -203,8 +203,7 @@ def test_streaming_mor_with_auto_compaction(spark, tmp_path):
         spark, table, src, str(tmp_path / "ckpt"),
         max_files_per_trigger=2, mode="mor", compact_every=2,
     )
-    results = runner.run_available()
-    assert len(results) >= 2
+    assert runner.run_available() >= 2
     # compaction ran mid-stream: not every bucket is still delta-flagged
     table.refresh()
     # final state == one-shot replay oracle

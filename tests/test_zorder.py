@@ -96,7 +96,7 @@ def test_zone_pruning_never_resurrects_mor_versions(spark, tmp_path):
     file holding the new version has out-of-range stats. Guarded by
     (a) no zone file-pruning in delta buckets, (b) the row predicate
     applying after MoR resolution."""
-    from spark_cdc.lake.table import V_DEL, V_GEN, V_SEQ, V_TS, BUCKET_COL, bucket_expr
+    from spark_cdc.lake.merge import merge_changes
 
     tbl = _mk_table(spark, str(tmp_path / "t"), n=2_000)
     zorder_compact(tbl, ["ts"], files_per_bucket=2)
@@ -107,14 +107,8 @@ def test_zone_pruning_never_resurrects_mor_versions(spark, tmp_path):
     # MoR-append a newer version of that key far outside the window
     newer = spark.createDataFrame(
         [(moved_k, EPOCH + datetime.timedelta(days=500), 99)], SCHEMA
-    ).select(
-        "*",
-        F.lit(EPOCH + datetime.timedelta(days=500)).alias(V_TS),
-        F.lit(10_000_000).alias(V_SEQ).cast("long"),
-        F.lit(False).alias(V_DEL),
-        F.lit(99).cast("long").alias(V_GEN),
-    ).withColumn(BUCKET_COL, bucket_expr("k", tbl.num_buckets))
-    tbl.append_deltas(newer)
+    ).select("*", F.lit("u").alias("op"), F.lit(10_000_000).cast("long").alias("op_seq"))
+    merge_changes(tbl, newer, mode="mor")
     got = _rows(tbl.read(zone_between=window))
     assert moved_k not in {r[0] for r in got}
     assert got == [r for r in in_window if r[0] != moved_k]
