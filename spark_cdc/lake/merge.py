@@ -32,16 +32,18 @@ and commits. Both modes run it:
   and rewrites one bucket at a time, keeping the latest version of
   each key with ``latest_arrow``, the Arrow twin of the resolver
   ``latest_sql`` that the MoR read and the feed diff run in Spark.
-  Only (bucket, file path) comes back.
+  Only (bucket, file path) comes back, plus the batch stats below.
 - ``mor`` gives the kernel the batch rows only: the resolved batch is
   appended as delta files, which reads resolve until
   ``maintenance.compact`` folds them. ``cow`` also gives it the stored
   files of each bucket the batch has rows for, and replaces exactly
   the buckets that came back; every other bucket carries over by
   reference, so MERGE cost ∝ |changed conversations|, not |table|.
-- ``collect_stats`` adds a pre-pass job over the raw batch for the
-  batch stats and the per-input-partition lineage. Touched buckets are
-  observed from the files written, in both modes.
+- Touched buckets are observed from the files written, in both modes.
+  Under ``collect_stats`` each task also reports the rows, keys and lsn
+  range of its keys per input partition of the batch (a key counts in
+  the first that carries it), the way Iceberg writers return file stats
+  with their commit messages: the batch stats and lineage cost no job.
 - On a real cluster the same call becomes Iceberg
   ``MERGE INTO t USING s ON t.conv_id=s.conv_id AND
   t.turn_idx=s.turn_idx WHEN MATCHED AND s.op='d' THEN DELETE
@@ -57,6 +59,8 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from spark_cdc.lake.maintenance import bucket_spec, rewrite_bucket
 from spark_cdc.lake.table import (
@@ -80,8 +84,8 @@ class MergeResult:
     the buckets this commit wrote (CoW: rewrote; MoR: appended deltas
     to); ``rows_written``/``files_written`` count its new files. The
     batch fields (``batch_rows``, ``batch_keys``, the lsn range,
-    ``partition_lineage``) come from the ``collect_stats`` pre-pass
-    and are -1/None/empty without it."""
+    ``partition_lineage``) are -1/None/empty without ``collect_stats``
+    (the lineage also without ``collect_lineage``)."""
 
     snapshot_id: int
     skipped: bool = False
@@ -94,8 +98,7 @@ class MergeResult:
     max_lsn: int | None = None
     wall_ms: float = 0.0
     partition_lineage: list[dict[str, Any]] = field(default_factory=list)
-    # per-phase wall times: stats_ms (batch stats/lineage pre-pass, 0
-    # without collect_stats), exec_ms (the job resolving and writing the
+    # per-phase wall times: exec_ms (the job resolving and writing the
     # buckets, plus the footer reads), commit_ms (manifest fsync + pointer swap),
     # plan_ms (driver-side plan construction = the py4j remainder)
     phases: dict[str, float] = field(default_factory=dict)
@@ -130,13 +133,14 @@ def merge_changes(
       ``maintenance.compact`` folds them. Same final-state semantics
       (tested equal to cow).
 
-    ``collect_stats`` runs the pre-pass job that fills ``batch_rows``,
+    ``collect_stats`` has the merge job's tasks report ``batch_rows``,
     ``batch_keys``, the lsn range and (with ``collect_lineage``) the
-    per-input-partition lineage, and skips the merge of an empty batch.
-    Without it those fields are -1/None and the merge is one Spark job:
-    turn it off for MoR backfills. ``touched_buckets``,
+    per-input-partition lineage; without it those fields are -1/None.
+    Either way the merge is one Spark job. ``touched_buckets``,
     ``rows_written`` and ``files_written`` are reported either way: the
-    buckets the batch has rows for are the buckets written.
+    buckets the batch has rows for are the buckets written. An empty
+    batch writes nothing and commits only its batch id and
+    ``extra_properties``, as one ``set_properties`` snapshot.
 
     Memory bound: a merge task holds its partition's batch rows (about
     ``|batch| / min(num_buckets, parallelism)``), plus in CoW mode one
@@ -174,47 +178,35 @@ def merge_changes(
     if new_fields:
         table.add_columns([type(f)(f.name, f.dataType, True) for f in new_fields])
 
-    stats_ms = 0.0
-    batch_rows = batch_keys = -1
-    min_lsn = max_lsn = None
-    lineage: list[dict[str, Any]] = []
-    if collect_stats:
-        t_stats = time.monotonic()
-        stat_rows = _batch_stats(table, changes, collect_lineage)
-        batch_keys = sum(r["keys"] for r in stat_rows)
-        if batch_keys == 0:
-            res = MergeResult(snapshot_id=table.snapshot_id)
-            res.wall_ms = (time.monotonic() - t0) * 1000
-            if batch_id is not None:
-                table.set_properties(with_batch_id(table.properties, batch_id, source_id))
-            return res
-        batch_rows = sum(r["rows"] or 0 for r in stat_rows)
-        lsns = [r["min_lsn"] for r in stat_rows if r["min_lsn"] is not None]
-        min_lsn = min(lsns) if lsns else None
-        lsns = [r["max_lsn"] for r in stat_rows if r["max_lsn"] is not None]
-        max_lsn = max(lsns) if lsns else None
-        if collect_lineage:
-            lineage = [
-                {k: r[k] for k in ("_pid", "rows", "keys", "min_lsn", "max_lsn")}
-                for r in stat_rows
-            ]
-        stats_ms = (time.monotonic() - t_stats) * 1000
-
     t_exec = time.monotonic()
-    written = [(r["bucket"], r["path"]) for r in _merge_plan(table, changes, mode).collect()]
+    out = _merge_plan(table, changes, mode, collect_stats, collect_lineage).collect()
+    written = [(r["bucket"], r["path"]) for r in out if r["bucket"] is not None]
+    stats = [r for r in out if r["bucket"] is None]
+    lineage = [
+        {"_pid": pid, **_sum_stats([r for r in stats if r["pid"] == pid])}
+        for pid in sorted({r["pid"] for r in stats})
+    ] if collect_lineage else []
+    batch = _sum_stats(stats)
+    batch_rows, batch_keys = (batch["rows"], batch["keys"]) if collect_stats else (-1, -1)
+    min_lsn, max_lsn = batch["min_lsn"], batch["max_lsn"]
+    props = with_batch_id(
+        {**table.properties, **(extra_properties or {})}, batch_id, source_id
+    )
+    if not written:  # an empty batch: only the batch id and properties to record
+        if batch_id is not None or extra_properties:
+            table.set_properties(props)
+        return MergeResult(table.snapshot_id, batch_rows=batch_rows, batch_keys=batch_keys,
+                           wall_ms=(time.monotonic() - t0) * 1000)
     new_files = {str(b): [rel] for b, rel in written if rel is not None}
     table.register_files(new_files)
     touched = sorted(b for b, _ in written)
     exec_ms = (time.monotonic() - t_exec) * 1000
-    props = with_batch_id(
-        {**table.properties, **(extra_properties or {})}, batch_id, source_id
-    )
     summary = {
         "operation": "merge_mor" if mode == "mor" else "merge",
         "batch_id": batch_id,
         "source_id": source_id,
-        "batch_rows": int(batch_rows),
-        "batch_keys": int(batch_keys),
+        "batch_rows": batch_rows,
+        "batch_keys": batch_keys,
         "min_lsn": min_lsn,
         "max_lsn": max_lsn,
         "touched_buckets": touched,
@@ -230,8 +222,8 @@ def merge_changes(
         touched_buckets=touched,
         rows_written=table.last_write_rows,
         files_written=table.last_write_files,
-        batch_rows=int(batch_rows),
-        batch_keys=int(batch_keys),
+        batch_rows=batch_rows,
+        batch_keys=batch_keys,
         min_lsn=min_lsn,
         max_lsn=max_lsn,
         partition_lineage=lineage,
@@ -240,9 +232,8 @@ def merge_changes(
     commit_ms = table.last_commit_ms
     # the residual (plan_ms) is driver-side py4j plan construction and
     # scheduling
-    plan_ms = max(res.wall_ms - stats_ms - exec_ms - commit_ms, 0.0)
+    plan_ms = max(res.wall_ms - exec_ms - commit_ms, 0.0)
     res.phases = {
-        "stats_ms": round(stats_ms, 1),
         "exec_ms": round(exec_ms, 1),
         "commit_ms": round(commit_ms, 1),
         "plan_ms": round(plan_ms, 1),
@@ -258,13 +249,16 @@ def _bucket_sql(table: LakeTable) -> str:
     )
 
 
-def _merge_plan(table: LakeTable, changes: DataFrame, mode: str) -> DataFrame:
+def _merge_plan(table: LakeTable, changes: DataFrame, mode: str, stats=False, lineage=False):
     """The merge's one Spark job (see the module docstring): the batch
     as stored rows of generation snapshot_id + 1, shuffled once on the
     bucket, and each bucket it has rows for rewritten by
     :func:`rewrite_bucket`, with the bucket's stored files in ``cow``
     mode. Collecting it writes the files and returns (bucket, relative
-    path or None) per written bucket."""
+    path or None) per written bucket and, under ``stats``, with a null
+    bucket, (pid, rows, keys, min_lsn, max_lsn) of each task's keys per
+    input partition first carrying them (pid 0 without ``lineage``).
+    A key's rows all land in one task, so these sum exactly."""
     cols = set(changes.columns)
     user = table.user_schema.fields
     names = [BUCKET_COL, *(f.name for f in user), V_TS, V_SEQ, V_DEL, V_GEN, V_LSN]
@@ -278,6 +272,8 @@ def _merge_plan(table: LakeTable, changes: DataFrame, mode: str) -> DataFrame:
         "(op = 'd')",
         "CAST({gen} AS BIGINT)",
         "CAST(lsn AS BIGINT)" if "lsn" in cols else "CAST(NULL AS BIGINT)",
+        # evaluated before the exchange: the batch's input partition
+        "spark_partition_id()" if lineage else "0",
     ]
     # positional names across the Python boundary: mapInArrow resolves
     # each column by its name, which fails on names that need quoting
@@ -290,6 +286,9 @@ def _merge_plan(table: LakeTable, changes: DataFrame, mode: str) -> DataFrame:
         int(b): [os.path.join(table.path, f) for f in fl]
         for b, fl in table.manifest["files"].items()
     } if mode == "cow" else {}
+    out_schema = StructType.fromDDL(
+        "bucket int, path string, pid int, rows bigint, keys bigint, min_lsn bigint, max_lsn bigint"
+    )
 
     def rewrite(batches):
         import pyarrow as pa
@@ -298,39 +297,39 @@ def _merge_plan(table: LakeTable, changes: DataFrame, mode: str) -> DataFrame:
         batches = list(batches)
         if not batches:
             return
-        data = pa.Table.from_batches(batches).rename_columns(names)
+        data = pa.Table.from_batches(batches)
+        pid = data.column(len(names))
+        data = data.select(range(len(names))).rename_columns(names)
         col = data.column(BUCKET_COL)
-        done = [
-            rewrite_bucket(spec, b, stored.get(b, []), data.filter(pc.equal(col, b)))
+        out = [
+            dict(zip(("bucket", "path"), rewrite_bucket(
+                spec, b, stored.get(b, []), data.filter(pc.equal(col, b))
+            )))
             for b in pc.unique(col).to_pylist()
         ]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([b for b, _ in done], pa.int32()), pa.array([r for _, r in done], pa.string())],
-            names=["bucket", "path"],
-        )
+        if stats:
+            # per key (first input partition, rows, lsn range), then per partition
+            k = [f"k{i}" for i in range(len(spec["keys"]))]
+            by_key = pa.table(
+                [*(data.column(c) for c in spec["keys"]), pid, data.column(V_LSN)],
+                names=[*k, "pid", "lsn"],
+            ).group_by(k, use_threads=False).aggregate(
+                [("pid", "min"), ([], "count_all"), ("lsn", "min"), ("lsn", "max")]
+            )
+            out += by_key.group_by("pid_min", use_threads=False).aggregate(
+                [("count_all", "sum"), ([], "count_all"), ("lsn_min", "min"), ("lsn_max", "max")]
+            ).select(["pid_min", "count_all_sum", "count_all", "lsn_min_min", "lsn_max_max"]
+            ).rename_columns(["pid", "rows", "keys", "min_lsn", "max_lsn"]).to_pylist()
+        yield pa.RecordBatch.from_pylist(out, schema=to_arrow_schema(out_schema))
 
     n = min(table.num_buckets, max(changes.sparkSession.sparkContext.defaultParallelism, 1))
-    return rows.repartition(n, "c0").mapInArrow(rewrite, "bucket int, path string")
+    return rows.repartition(n, "c0").mapInArrow(rewrite, out_schema)
 
 
-def _batch_stats(table: LakeTable, changes: DataFrame, lineage: bool) -> list:
-    """The stats/lineage pre-pass over the raw batch rows: per input
-    partition (one row when ``lineage`` is off) the rows and keys it
-    contributes and their lsn range, with each key counted in the first
-    input partition that carries it."""
-    keys = ", ".join(_bq(k) for k in table.key_columns)
-    pid = "spark_partition_id()" if lineage else "0"
-    lsn = "lsn" if "lsn" in changes.columns else "CAST(NULL AS BIGINT)"
-    return changes.sparkSession.sql(
-        f"""
-        SELECT __pid AS _pid, sum(__n) AS `rows`, count(1) AS `keys`,
-               min(__lo) AS min_lsn, max(__hi) AS max_lsn
-        FROM (
-          SELECT min(__pid) AS __pid, count(1) AS __n, min(__l) AS __lo,
-                 max(__l) AS __hi
-          FROM (SELECT {keys}, {pid} AS __pid, {lsn} AS __l FROM {{src}})
-          GROUP BY {keys}
-        )
-        GROUP BY __pid""",
-        src=changes,
-    ).collect()
+def _sum_stats(stats: list) -> dict[str, Any]:
+    """Stats rows of :func:`_merge_plan` summed: rows and keys added, lsn
+    ranges joined."""
+    lo = [r["min_lsn"] for r in stats if r["min_lsn"] is not None]
+    hi = [r["max_lsn"] for r in stats if r["max_lsn"] is not None]
+    return {"rows": sum(r["rows"] for r in stats), "keys": sum(r["keys"] for r in stats),
+            "min_lsn": min(lo, default=None), "max_lsn": max(hi, default=None)}

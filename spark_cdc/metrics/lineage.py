@@ -34,8 +34,11 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("files_written", T.LongType(), True),
         T.StructField("wall_ms", T.DoubleType(), True),
         # per-phase breakdown of the batch merge (SURVEY §7 Phase 6):
-        # stats pre-pass / plan execution (write) / manifest commit /
-        # driver-side plan construction residual
+        # plan execution (write) / manifest commit / driver-side plan
+        # construction residual. stats_ms timed a batch stats job the
+        # merge no longer runs (its own tasks report the stats): new
+        # rows leave it null, and the column stays so that existing
+        # metrics tables still append.
         T.StructField("stats_ms", T.DoubleType(), True),
         T.StructField("exec_ms", T.DoubleType(), True),
         T.StructField("commit_ms", T.DoubleType(), True),
@@ -90,7 +93,7 @@ class MetricsLog:
                 res.rows_written,
                 res.files_written,
                 res.wall_ms,
-                res.phases.get("stats_ms"),
+                None,  # stats_ms
                 res.phases.get("exec_ms"),
                 res.phases.get("commit_ms"),
                 res.phases.get("plan_ms"),

@@ -157,19 +157,63 @@ def test_deletes_and_noop_cycle(spark, tmp_table_path):
     assert table.snapshot_id >= before
 
 
-def test_lineage_metrics_recorded(spark, tmp_table_path):
+# the batch stats pre-pass merge_changes once ran as its own job: per
+# input partition, the rows and keys it contributes and their lsn range,
+# each key counted in the first input partition that carries it
+LINEAGE_ORACLE_SQL = """
+SELECT __pid AS _pid, sum(__n) AS `rows`, count(1) AS `keys`,
+       min(__lo) AS min_lsn, max(__hi) AS max_lsn
+FROM (
+  SELECT min(__pid) AS __pid, count(1) AS __n, min(lsn) AS __lo, max(lsn) AS __hi
+  FROM (SELECT conv_id, turn_idx, {pid} AS __pid, lsn FROM {{src}})
+  GROUP BY conv_id, turn_idx
+)
+GROUP BY __pid
+"""
+
+
+def test_lineage_metrics_recorded(spark, tmp_path):
+    """Batch stats and per-input-partition lineage equal the stats
+    pre-pass, in both modes, with lineage on and off, over 7 input
+    partitions that split the versions and redeliveries of keys."""
     log = generate_change_log(spark, n_events=500, n_convs=10, seed=3)
-    table = LakeTable.create(
-        spark, tmp_table_path, PAYLOAD_SCHEMA, key_columns=KEY_COLUMNS, num_buckets=4
+    batch = log.repartition(5, "lsn").union(log.where("lsn % 7 = 0").repartition(2, "lsn"))
+    assert batch.rdd.getNumPartitions() == 7
+    spanning = (
+        batch.withColumn("_p", F.spark_partition_id())
+        .groupBy(*KEY_COLUMNS)
+        .agg(F.countDistinct("_p").alias("n"))
+        .where("n > 1")
     )
-    res = apply_batch(table, log, batch_id=0)
-    assert res.batch_rows >= 500  # includes redelivered duplicates
-    assert res.min_lsn == 0 and res.max_lsn == 499
-    assert res.rows_written > 0 and res.files_written > 0
-    assert res.partition_lineage, "per-partition lineage must be emitted"
-    summ = table.manifest["summary"]
-    assert summ["operation"] == "merge" and summ["batch_id"] == 0
-    assert summ["min_lsn"] == 0 and summ["max_lsn"] == 499
+    assert spanning.count() > 0
+    for mode in ("cow", "mor"):
+        for lineage in (True, False):
+            want = [
+                r.asDict()
+                for r in spark.sql(
+                    LINEAGE_ORACLE_SQL.format(pid="spark_partition_id()" if lineage else "0"),
+                    src=batch,
+                ).collect()
+            ]
+            table = LakeTable.create(
+                spark, str(tmp_path / f"{mode}{lineage}"), PAYLOAD_SCHEMA,
+                key_columns=KEY_COLUMNS, num_buckets=4,
+            )
+            res = apply_batch(table, batch, batch_id=0, mode=mode, collect_lineage=lineage)
+            got = sorted(res.partition_lineage, key=lambda p: p["_pid"])
+            assert got == (sorted(want, key=lambda p: p["_pid"]) if lineage else []), (mode, lineage)
+            if lineage:
+                assert len(got) >= 5, got
+            assert res.batch_rows == sum(r["rows"] for r in want) > 500  # redeliveries
+            assert res.batch_keys == sum(r["keys"] for r in want)
+            assert res.min_lsn == min(r["min_lsn"] for r in want) == 0
+            assert res.max_lsn == max(r["max_lsn"] for r in want) == 499
+            assert res.rows_written > 0 and res.files_written > 0
+            summ = table.manifest["summary"]
+            assert summ["operation"] == ("merge" if mode == "cow" else "merge_mor")
+            assert summ["batch_id"] == 0 and summ["batch_rows"] == res.batch_rows
+            assert summ["min_lsn"] == 0 and summ["max_lsn"] == 499
+            assert sorted(summ["partition_lineage"], key=lambda p: p["_pid"]) == got
 
 
 def test_zipf_changelog_replay_correct_under_skew(spark, tmp_table_path):

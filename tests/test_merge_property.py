@@ -1,6 +1,6 @@
 """Property-based check (hypothesis): for ANY change log — adversarial
 ties and null op_seq included — ANY batch split, either merge mode,
-with or without the stats pre-pass and with or without a compaction
+with or without the batch stats and with or without a compaction
 before the read, incrementally merging every batch into a LakeTable
 ends in exactly the state of the one-shot replay oracle. This is the
 engine's core identity; the generator deliberately produces duplicate

@@ -84,9 +84,10 @@ def test_mor_fast_path_no_stats(spark, tmp_path):
 def test_mor_touched_buckets_are_this_commits(spark, tmp_path):
     """A merge reports the buckets it wrote, observed from the files it
     wrote: MoR not the table's accumulated delta buckets, CoW not every
-    bucket when there is no stats pre-pass. It counts its rows and
+    bucket, with or without batch stats. It counts its rows and
     files, and every other bucket's file list stays as it was. An empty
-    CoW batch changes no file list and still records its batch id."""
+    batch, with or without stats, changes no file list and still records
+    its batch id and extra properties."""
     from spark_cdc.lake.table import bucket_expr
 
     log = generate_change_log(spark, n_events=400, n_convs=40, seed=37)
@@ -110,17 +111,21 @@ def test_mor_touched_buckets_are_this_commits(spark, tmp_path):
             ]
             assert changed == want, (mode, stats, changed)
             assert res.rows_written > 0 and res.files_written > 0
-        files = {b: list(fl) for b, fl in table.manifest["files"].items()}
-        res = apply_batch(table, one.limit(0), batch_id=2, mode=mode, collect_stats=False)
-        assert res.touched_buckets == [] and table.manifest["files"] == files, mode
-        assert table.has_committed("default", 2), mode
+        for bid, stats in ((2, False), (3, True)):
+            files = {b: list(fl) for b, fl in table.manifest["files"].items()}
+            res = apply_batch(
+                table, one.limit(0), batch_id=bid, mode=mode, collect_stats=stats,
+                extra_properties={"probe": bid},
+            )
+            assert res.touched_buckets == [] and table.manifest["files"] == files, (mode, stats)
+            assert table.has_committed("default", bid), (mode, stats)
+            assert table.properties["probe"] == bid, (mode, stats)
 
 
 def test_merge_quotes_hostile_identifiers(spark, tmp_path):
-    """The SQL-text merge plan and pre-pass quote what they embed:
-    payload columns named with a backtick, braces and a quote end
-    equal to the one-shot replay in every mode, with and without the
-    stats pre-pass."""
+    """The SQL-text merge plan quotes what it embeds: payload columns
+    named with a backtick, braces and a quote end equal to the one-shot
+    replay in every mode, with and without the batch stats."""
     import datetime
     import random
 
@@ -160,7 +165,7 @@ def test_merge_quotes_hostile_identifiers(spark, tmp_path):
             spark, str(tmp_path / mode), payload,
             key_columns=["conv_id", "turn_idx"], num_buckets=4,
         )
-        # the pre-pass alternates, so runs with and without it meet stored rows
+        # the batch stats alternate, so runs with and without them meet stored rows
         for i, stats in enumerate((True, False, True)):
             apply_batch(
                 table, log.where((F.col("lsn") >= 8 * i) & (F.col("lsn") < 8 * i + 8)),

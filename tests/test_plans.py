@@ -100,6 +100,36 @@ def test_merge_plan_is_single_exchange(spark, tmp_path):
         assert data_dir not in plan, (mode, plan)
 
 
+def test_batch_stats_start_no_job(spark, tmp_path):
+    """The batch stats and lineage ride the merge's own job: a merge
+    with ``collect_stats`` runs no more Spark jobs than one without."""
+    from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
+    from spark_cdc.lake.merge import merge_changes
+    from spark_cdc.lake.table import LakeTable
+    from spark_cdc.sources.changelog import generate_change_log
+
+    sc = spark.sparkContext
+    src = generate_change_log(spark, n_events=2000, n_convs=50, seed=1, partitions=4)
+    for mode in ("cow", "mor"):
+        jobs = {}
+        for stats in (False, True):
+            table = LakeTable.create(
+                spark, str(tmp_path / f"{mode}{stats}"), PAYLOAD_SCHEMA,
+                key_columns=KEY_COLUMNS, num_buckets=8,
+            )
+            group = f"merge_{mode}_{stats}"
+            sc.setJobGroup(group, group)
+            try:
+                res = merge_changes(
+                    table, src, batch_id=0, mode=mode, collect_stats=stats, collect_lineage=stats
+                )
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[stats] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert res.batch_keys > 0 and res.partition_lineage, mode
+        assert 0 < jobs[True] <= jobs[False], (mode, jobs)
+
+
 def test_wholestage_codegen_in_flagship(spark):
     # '*(n)' prefixes mark whole-stage-codegen stages in the plan text
     plan = _plan(spark, "tpch_q1_pricing_summary")
