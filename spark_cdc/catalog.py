@@ -11,9 +11,12 @@ as temp views and keeps writing SQL::
     attach(spark, "transcripts_y", "/lake/transcripts", snapshot_id=12)  # time travel
     spark.sql("SELECT role, count(*) FROM transcripts GROUP BY role")
 
-Views are plain DataFrame registrations over :meth:`LakeTable.read`,
-so Catalyst sees the real scan (predicate pushdown, column pruning and
-whole-stage codegen all apply); MoR buckets resolve on read as usual.
+Views are plain DataFrame registrations over :meth:`LakeTable.read`.
+Over single-version buckets Catalyst sees the real scan (predicate
+pushdown, column pruning and whole-stage codegen all apply). A view
+whose buckets carry MoR deltas resolves them in Python workers
+(``mapInArrow`` into the bucket kernel): predicates and column pruning
+apply after resolution there, not in the file read.
 A view is a SNAPSHOT: it pins the manifest read at attach time —
 re-attach (or use :func:`refresh`) to see later commits. That is
 exactly Iceberg/Delta view semantics over a table version.

@@ -31,11 +31,11 @@ from spark_cdc.lake.table import (
     BUCKET_COL,
     DATA_DIR,
     META_DIR,
-    V_DEL,
-    V_LSN,
     LakeTable,
     bucket_expr,
-    latest_arrow,
+    bucket_groups,
+    read_latest,
+    read_spec,
 )
 
 
@@ -86,22 +86,17 @@ def compact(
     )
     if not fragmented:
         return []
-    units = []
-    for b in fragmented:
-        paths = [os.path.join(table.path, f) for f in table.manifest["files"].get(str(b), [])]
-        units.append((sum(os.path.getsize(p) for p in paths), b, paths))
     sc = table.spark.sparkContext
-    n = min(len(units), max(sc.defaultParallelism, 1))
-    # largest bucket first onto the lightest group
-    groups: list[list] = [[] for _ in range(n)]
-    loads = [0] * n
-    for size, b, paths in sorted(units, reverse=True):
-        k = loads.index(min(loads))
-        groups[k].append((b, paths))
-        loads[k] += size
+    groups = bucket_groups(
+        {
+            b: [os.path.join(table.path, f) for f in table.manifest["files"].get(str(b), [])]
+            for b in fragmented
+        },
+        sc.defaultParallelism,
+    )
     spec = {**bucket_spec(table), "drop_tombstones": drop_tombstones}
     written = (
-        sc.parallelize(groups, n)
+        sc.parallelize(groups, len(groups))
         .flatMap(lambda group: [rewrite_bucket(spec, b, paths) for b, paths in group])
         .collect()
     )
@@ -118,17 +113,11 @@ def compact(
 
 def bucket_spec(table: LakeTable) -> dict:
     """What :func:`rewrite_bucket` needs to know of ``table``, shipped
-    to the Python workers: the Arrow schema of a stored row (Spark's own
-    type mapping, timestamps as UTC microseconds), the keys and bucket
-    column, and a fresh data directory of the next snapshot. Tombstones
-    are kept unless ``drop_tombstones`` is set."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    to the Python workers: :func:`read_spec` of its snapshot and a fresh
+    data directory of the next snapshot. Tombstones are kept unless
+    ``drop_tombstones`` is set."""
     return {
-        "schema": pa.schema([f.with_nullable(True) for f in to_arrow_schema(table.schema)]),
-        "keys": table.key_columns,
-        "bucket_column": table.bucket_column,
+        **read_spec(table.manifest),
         "drop_tombstones": False,
         "root": table.path,
         "rel_dir": table.new_data_dir(),
@@ -138,39 +127,15 @@ def bucket_spec(table: LakeTable) -> dict:
 def rewrite_bucket(spec: dict, bucket: int, paths: list[str], batch=None) -> tuple[int, str | None]:
     """Runs in a Python worker: the one writer of resolved bucket files,
     for :func:`compact` and :func:`spark_cdc.lake.merge.merge_changes`.
-    It reads the bucket's stored ``paths``, adds ``batch`` (a
-    ``pyarrow.Table`` of a merge's rows of this bucket, carrying
-    ``V_LSN``; stored rows have none, so their lsn is null and loses
-    ties), null-fills each part to the table schema, keeps the latest
-    version of each key (:func:`latest_arrow`; an unkeyed table is
-    concatenated), drops tombstones under ``drop_tombstones`` and writes
-    one key-sorted file into ``data/snap<id>-<uuid>/_bucket=<k>/``.
-    Returns the bucket and the file's path relative to the table root,
-    or None when no row survives."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    It resolves the bucket's stored ``paths`` and a merge's ``batch``
+    with :func:`read_latest`, dropping tombstones under
+    ``drop_tombstones``, and writes one key-sorted file into
+    ``data/snap<id>-<uuid>/_bucket=<k>/``. Returns the bucket and the
+    file's path relative to the table root, or None when no row
+    survives."""
     import pyarrow.parquet as pq
 
-    schema = spec["schema"]
-    parts = [pq.ParquetFile(p).read(use_threads=False) for p in paths]
-    if batch is not None:
-        schema = schema.append(pa.field(V_LSN, pa.int64()))
-        parts.append(batch)
-    data = pa.concat_tables([
-        pa.table(
-            [
-                part.column(f.name).cast(f.type) if f.name in part.column_names
-                else pa.nulls(part.num_rows, f.type)
-                for f in schema
-            ],
-            schema=schema,
-        )
-        for part in parts
-    ])
-    if spec["keys"]:
-        data = latest_arrow(data, spec["keys"], spec["bucket_column"])
-    if spec["drop_tombstones"] and V_DEL in data.column_names:
-        data = data.filter(pc.invert(pc.fill_null(data.column(V_DEL), False)))
+    data = read_latest(spec, paths, batch, drop_tombstones=spec["drop_tombstones"])
     if data.num_rows == 0:
         return bucket, None
     rel = os.path.join(

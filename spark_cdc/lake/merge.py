@@ -30,8 +30,8 @@ and commits. Both modes run it:
 - ``repartition(min(num_buckets, parallelism), bucket)`` then
   ``mapInArrow``: each task concatenates its partition's batch rows
   and rewrites one bucket at a time, keeping the latest version of
-  each key with ``latest_arrow``, the Arrow twin of the resolver
-  ``latest_sql`` that the MoR read and the feed diff run in Spark.
+  each key with ``latest_arrow``, the one resolver, which every read
+  of multi-version buckets also runs.
   Only (bucket, file path) comes back, plus the batch stats below.
 - ``mor`` gives the kernel the batch rows only: the resolved batch is
   appended as delta files, which reads resolve until

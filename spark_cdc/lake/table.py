@@ -12,7 +12,10 @@ Layout on disk::
 A snapshot manifest records the full table schema, the bucket spec,
 the complete file list per bucket, arbitrary properties (used by the
 CDC runner for exactly-once batch-id bookkeeping) and a summary with
-lineage metrics. Commit = write manifest, then atomically replace the
+lineage metrics. The latest version of a key under
+:data:`VERSION_ORDER` has one resolver, :func:`latest_arrow`, run by the
+bucket kernel :func:`read_latest` on every write and every read of
+multi-version buckets. Commit = write manifest, then atomically replace the
 VERSION pointer (``os.replace``); readers resolve VERSION → manifest →
 files, so they always see a consistent snapshot. Single-writer by
 design (one Structured Streaming query owns a table), matching the
@@ -28,7 +31,8 @@ Scale notes (100 TB design):
   untouched buckets carry over into the new manifest by reference,
   so MERGE cost scales with the change set, not the table.
 - All turns of one conversation land in one bucket → per-conversation
-  operators (stitching, ordered reads) need no extra shuffle.
+  operators (stitching, ordered reads) need no extra shuffle, and a
+  bucket resolves on its own: the bucket column must be a key column.
 - The manifest is O(#files) JSON; at real scale this becomes Iceberg
   metadata, the API here does not change.
 """
@@ -234,37 +238,16 @@ def _bq(name: str) -> str:
     return "`" + str(name).replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
 
 
-def latest_sql(rel: str, columns: list[str], keys: list[str]) -> str:
-    """SQL text of the one resolver: the latest version of each key of
-    ``rel`` (a relation with ``columns``) under :data:`VERSION_ORDER`,
-    as ``groupBy(key).agg(max_by(row, order))``. Order fields that
-    ``rel`` lacks are null in every row and so never decide. ``V_LSN``
-    only orders and is not returned. It serves the Spark-side reads
-    (the MoR read and the change-feed diff); every write of resolved
-    bucket files runs its Arrow twin, :func:`latest_arrow`."""
-    payload = [c for c in columns if c not in keys and c != V_LSN]
-    order = [c for c in VERSION_ORDER if c in columns]
-    by_sql = ", ".join(_bq(c) for c in keys)
-    return (
-        f"SELECT {by_sql}, w.* FROM ("
-        f"SELECT {by_sql}, max_by(struct({', '.join(_bq(c) for c in payload)}), "
-        f"struct({', '.join(_bq(c) for c in order)})) AS w "
-        f"FROM {rel} GROUP BY {by_sql})"
-    )
-
-
 def latest_arrow(data, keys: list[str], bucket_column: str | None = None):
-    """The Arrow twin of :func:`latest_sql`, for code that holds rows in
-    a ``pyarrow.Table`` rather than a DataFrame (the per-bucket rewrite
-    of merges and compaction,
-    :func:`spark_cdc.lake.maintenance.rewrite_bucket`): the latest
-    version of each key of ``data`` under :data:`VERSION_ORDER`, nulls
-    losing. It sorts by ``bucket_column`` (when it is not the leading
-    key) and the keys, then by the order fields descending, and keeps
-    the first row of each key, so the result comes out key-sorted. Null
-    key parts group together, as in ``GROUP BY``. ``V_LSN`` only orders
-    and is not returned. Rows that tie on every order field are a free
-    pick, as in ``max_by``."""
+    """The one resolver: the latest version of each key of ``data`` (a
+    ``pyarrow.Table``) under :data:`VERSION_ORDER`, nulls losing. Every
+    read and write of multi-version rows runs it through
+    :func:`read_latest`. It sorts by ``bucket_column`` (when it is not
+    the leading key) and the keys, then by the order fields descending,
+    and keeps the first row of each key, so the result comes out
+    key-sorted. Null key parts group together, as in ``GROUP BY``.
+    ``V_LSN`` only orders and is not returned. Rows that tie on every
+    order field are a free pick."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -293,11 +276,88 @@ def latest_arrow(data, keys: list[str], bucket_column: str | None = None):
     return data.filter(pa.concat_arrays([pa.array([True]), first]))
 
 
-def resolve_latest(df: DataFrame, keys: list[str]) -> DataFrame:
-    """:func:`latest_sql` over a DataFrame: the resolver of the MoR
-    read and the change-feed diff, the two Spark-side reads of
-    multi-version buckets."""
-    return df.sparkSession.sql(latest_sql("{df}", df.columns, keys), df=df)
+def read_spec(manifest: dict[str, Any]) -> dict[str, Any]:
+    """What :func:`read_latest` needs to know of a snapshot, shipped to
+    the Python workers: the Arrow schema of a stored row (Spark's own
+    type mapping, timestamps as UTC microseconds), the keys and the
+    bucket column."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(T.StructType.fromJson(manifest["schema"]))
+    return {
+        "schema": pa.schema([f.with_nullable(True) for f in schema]),
+        "keys": list(manifest["key_columns"]),
+        "bucket_column": manifest["bucket_column"],
+    }
+
+
+def read_latest(spec: dict, paths: list[str], batch=None, key_between=None, key_in=None,
+                drop_tombstones=False):
+    """The read half of the bucket kernel, run in a Python worker by
+    every resolved read, merge and compaction, and on the driver by a
+    lookup. It reads ``paths`` with pyarrow, passing ``key_between`` and
+    ``key_in`` (as in :meth:`LakeTable.read`) to the parquet reader as a
+    predicate on the bucket column, adds ``batch`` (a ``pyarrow.Table``
+    of a merge's rows of the bucket, carrying ``V_LSN``; stored rows
+    have none, so their lsn is null and loses ties), null-fills each
+    part to the table schema and keeps the latest version of each key
+    (:func:`latest_arrow`; an unkeyed table is concatenated), without
+    tombstones under ``drop_tombstones``.
+
+    The predicate applies before resolution. That is safe because the
+    bucket column is a key column (:meth:`LakeTable.create` requires
+    it): the predicate keeps or drops every version of a key together."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    col, schema = spec["bucket_column"], spec["schema"]
+    filters = [(col, ">=", key_between[0]), (col, "<=", key_between[1])] if key_between else []
+    filters += [(col, "in", list(key_in))] if key_in is not None else []
+    # the dataset reader that applies filters costs about 0.5 ms more per
+    # small file than a plain read, which merges and compactions would pay
+    parts = [
+        pq.read_table(p, filters=filters, use_threads=False) if filters
+        else pq.ParquetFile(p).read(use_threads=False)
+        for p in paths
+    ]
+    if batch is not None:
+        schema = schema.append(pa.field(V_LSN, pa.int64()))
+        parts.append(batch)
+    data = pa.concat_tables([
+        pa.table(
+            [
+                part.column(f.name).cast(f.type) if f.name in part.column_names
+                else pa.nulls(part.num_rows, f.type)
+                for f in schema
+            ],
+            schema=schema,
+        )
+        for part in parts
+    ] or [schema.empty_table()])
+    if spec["keys"]:
+        data = latest_arrow(data, spec["keys"], col)
+    if drop_tombstones and V_DEL in data.column_names:
+        data = data.filter(pc.invert(pc.fill_null(data.column(V_DEL), False)))
+    return data
+
+
+def bucket_groups(files: dict[int, list[str]], n: int) -> list[list[tuple[int, list[str]]]]:
+    """``files`` (bucket → absolute paths) dealt into at most ``n``
+    groups of about equal bytes, largest bucket first onto the lightest
+    group: the tasks of a compaction and of a resolved read."""
+    groups: list[list] = [[] for _ in range(min(len(files), max(n, 1)))]
+    loads = [0] * len(groups)
+    units = sorted(
+        ((sum(os.path.getsize(p) for p in paths), b, paths) for b, paths in files.items()),
+        reverse=True,
+    )
+    for size, b, paths in units:
+        k = loads.index(min(loads))
+        groups[k].append((b, paths))
+        loads[k] += size
+    return groups
 
 
 class LakeTable:
@@ -332,10 +392,14 @@ class LakeTable:
     ) -> "LakeTable":
         if os.path.exists(os.path.join(path, META_DIR, VERSION_FILE)):
             raise ValueError(f"table already exists at {path}")
-        os.makedirs(os.path.join(path, META_DIR), exist_ok=True)
-        os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
         if key_columns and bucket_column is None:
             bucket_column = key_columns[0]
+        if key_columns and bucket_column not in key_columns:
+            # buckets resolve on their own and key predicates apply before
+            # resolution: a key's versions must share its bucket-column value
+            raise ValueError(f"bucket_column {bucket_column!r} is not a key: {key_columns}")
+        os.makedirs(os.path.join(path, META_DIR), exist_ok=True)
+        os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
         if key_columns:
             # keyed (mergeable) tables carry hidden per-row version
             # columns used by the MERGE newer-wins guard
@@ -444,16 +508,21 @@ class LakeTable:
     ) -> DataFrame:
         """Snapshot read; optionally restricted to a bucket subset.
 
-        Files written before a schema evolution lack the added columns;
-        passing the current schema to the parquet reader null-fills
-        them (Iceberg ADD COLUMN semantics).
-
         Merge-on-read: buckets carrying delta files (appended by
         ``merge_changes(mode='mor')``) may hold several versions of a
-        key across file generations; those buckets are resolved to
-        latest-version-per-key on the fly (Iceberg MoR read path).
-        ``resolve`` forces/suppresses this (default: auto from the
-        manifest's ``delta_buckets``).
+        key, so a read of them resolves the latest version per key
+        (Iceberg MoR read path); ``resolve`` forces or suppresses this
+        (default: auto from the manifest's ``delta_buckets``). A
+        resolved read is one Spark job with no exchange: ``mapInArrow``
+        over byte-balanced bucket groups (:func:`bucket_groups`), each
+        task running :func:`read_latest` one bucket at a time, so it
+        holds one bucket's filtered rows; Catalyst cannot push
+        predicates or prune columns into it. Otherwise the read is a
+        plain Spark parquet scan.
+
+        Files written before a schema evolution lack the added columns;
+        both paths null-fill them to the snapshot's schema (Iceberg ADD
+        COLUMN semantics).
 
         ``key_between=(lo, hi)`` prunes FILES via the manifest's
         per-file min/max statistics on the bucket column (files are
@@ -483,36 +552,25 @@ class LakeTable:
             self.manifest if snapshot_id is None else self._read_manifest(snapshot_id)
         )
         schema = T.StructType.fromJson(manifest["schema"])
-        delta_buckets = {
-            int(b)
-            for b in manifest.get("delta_buckets", [])
-            if buckets is None or int(b) in buckets
-        }
-        key_in_sorted = sorted(set(key_in)) if key_in is not None else None
-        files = [
-            os.path.join(self.path, f)
-            for f in self.selected_files(
-                manifest, buckets, key_between, key_in_sorted, zone_between
-            )
-        ]
+        bucket_of = {f: int(b) for b, fl in manifest["files"].items() for f in fl}
+        files: dict[int, list[str]] = {}  # bucket → absolute paths
+        for f in self.selected_files(manifest, buckets, key_between, key_in, zone_between):
+            files.setdefault(bucket_of[f], []).append(os.path.join(self.path, f))
+        if resolve is None:
+            resolve = bool({int(b) for b in manifest.get("delta_buckets", [])} & set(files))
         if not files:
             df = self.spark.createDataFrame([], schema)
+        elif resolve and manifest["key_columns"]:
+            df = self._resolved(manifest, files, key_between, key_in)
         else:
-            df = self.spark.read.schema(schema).parquet(*files)
-        if key_between is not None and self.bucket_column:
-            # the row-level twin of the file pruning above — without it
-            # out-of-range keys could surface incorrectly resolved (see
-            # docstring); pushed down to the parquet scan by Catalyst.
-            lo, hi = key_between
-            kc = F.col(self.bucket_column)
-            df = df.where((kc >= F.lit(lo)) & (kc <= F.lit(hi)))
-        if key_in_sorted is not None and self.bucket_column:
-            # row-level twin of the key_in file pruning (same safety
-            # argument); pushed down to the parquet scan by Catalyst
-            df = df.where(F.col(self.bucket_column).isin(key_in_sorted))
-        need_resolve = bool(delta_buckets) if resolve is None else resolve
-        if need_resolve and self.key_columns and files:
-            df = resolve_latest(df, list(manifest["key_columns"]))
+            df = self.spark.read.schema(schema).parquet(*[p for ps in files.values() for p in ps])
+            # the row-level twins of the file pruning (see docstring),
+            # pushed down to the parquet scan by Catalyst
+            kc = F.col(self.bucket_column) if self.bucket_column else None
+            if key_between is not None and kc is not None:
+                df = df.where(kc.between(F.lit(key_between[0]), F.lit(key_between[1])))
+            if key_in is not None and kc is not None:
+                df = df.where(kc.isin(sorted(set(key_in))))
         if zone_between:
             # row-level twin of the zone-map file pruning — applied
             # AFTER MoR resolution, because a zone column is not the
@@ -531,6 +589,25 @@ class LakeTable:
                 df = df.filter(~F.coalesce(F.col(V_DEL), F.lit(False)))
             df = df.drop(*[c for c in HIDDEN_COLS if c in df.columns])
         return df
+
+    def _resolved(self, manifest: dict[str, Any], files: dict[int, list[str]],
+                  key_between, key_in) -> DataFrame:
+        """The resolved read of ``files`` (bucket → absolute paths): one
+        task per :func:`bucket_groups` group, yielding :func:`read_latest`
+        of its buckets one at a time."""
+        spec = read_spec(manifest)
+        groups = bucket_groups(files, self.spark.sparkContext.defaultParallelism)
+
+        def resolve(batches):
+            for batch in batches:
+                for g in batch.column(0).to_pylist():
+                    for _, paths in groups[g]:
+                        data = read_latest(spec, paths, key_between=key_between, key_in=key_in)
+                        yield from data.to_batches()
+
+        return self.spark.range(len(groups), numPartitions=len(groups)).mapInArrow(
+            resolve, T.StructType.fromJson(manifest["schema"])
+        )
 
     def selected_files(
         self,
@@ -554,7 +631,7 @@ class LakeTable:
         version survives — delta buckets are read in full and filtered
         after MoR resolution instead. Exposed so pruning is testable
         and observable (the Iceberg ``planFiles`` analogue);
-        :meth:`read` consumes exactly this list."""
+        :meth:`read` and :meth:`lookup` consume exactly this list."""
         manifest = self.manifest if manifest is None else manifest
         stats = manifest.get("file_stats", {})
         col_stats = manifest.get("col_stats", {})
@@ -612,22 +689,28 @@ class LakeTable:
         return files
 
     def lookup(self, key_value, snapshot_id: int | None = None) -> DataFrame:
-        """Point read of one bucket-key value (e.g. one conversation):
-        hash to its bucket, skip files whose min/max key range misses
-        it, then filter — the serving-path read. On a bucketed 100 TB
-        table this touches 1/num_buckets of the metadata and, within
-        the bucket, only files actually containing the key (tight
-        ranges: files are written key-sorted); MoR resolution then runs
-        over just those rows."""
+        """Point read of one bucket-key value (e.g. one conversation),
+        the serving path, with no Spark job: hash to its bucket, skip
+        files whose min/max key range misses it (tight: files are
+        written key-sorted), resolve the rest on the driver with
+        :func:`read_latest`, the key pushed into the parquet reader, and
+        return a DataFrame over the local result. Memory bound: the
+        driver holds one key's versions."""
         col = self.bucket_column
         if not col:
             raise ValueError("lookup requires a bucketed table")
-        df = self.read(
-            snapshot_id=snapshot_id,
-            buckets=self.buckets_for([key_value]),
-            key_between=(key_value, key_value),
+        manifest = self.manifest if snapshot_id is None else self._read_manifest(snapshot_id)
+        key = (key_value, key_value)
+        paths = [
+            os.path.join(self.path, f)
+            for f in self.selected_files(manifest, self.buckets_for([key_value]), key)
+        ]
+        data = read_latest(read_spec(manifest), paths, key_between=key, drop_tombstones=True)
+        user = [f for f in T.StructType.fromJson(manifest["schema"]).fields
+                if f.name not in HIDDEN_COLS]
+        return self.spark.createDataFrame(
+            data.select([f.name for f in user]), T.StructType(user)
         )
-        return df.where(F.col(col) == F.lit(key_value))
 
     def buckets_for(self, values: list) -> list[int]:
         """Bucket ids the given bucket-column values hash into, sorted
@@ -661,7 +744,9 @@ class LakeTable:
         postings table this is the reference's primary-key probe
         semantics (ClickHouse ORDER BY index, /root/reference/etl/
         clickhouse_schema/init.sql:41): an n-value probe reads
-        ≤ n/num_buckets of the metadata and only matching files."""
+        ≤ n/num_buckets of the metadata and only matching files. It
+        stays a distributed :meth:`read`, because one value's rows (a
+        token's postings) are unbounded."""
         if not values:
             raise ValueError("probe needs at least one value")
         return self.read(
@@ -673,84 +758,30 @@ class LakeTable:
     def _diff_sides(
         self, m_from: dict[str, Any], m_to: dict[str, Any], changed: list[int]
     ):
-        """(old, new) VISIBLE-row DataFrames feeding the change-feed
-        outer join — with an append-only fast path.
-
-        The general form reads BOTH complete snapshots of the changed
-        buckets and lets the outer join shuffle them — O(touched-bucket
-        data) twice per poll, which on a steadily-growing MoR source is
-        O(table). But the common commit between two polls only APPENDS
-        delta files (MoR merges); then the keys that can possibly
-        differ are exactly the keys present in the appended files, so:
-
-        - ``new side`` = resolve(old-matching rows ∪ appended rows),
-        - ``old side`` = resolve(old-matching rows),
-
-        where *old-matching* is the old snapshot semi-joined to the
-        appended files' key set — the appended files are read once
-        (O(change set) bytes), the old snapshot's buckets are scanned
-        once WITHOUT a full-width shuffle (the semi-join broadcasts the
-        key set when the appended bytes are small), and both resolves
-        aggregate O(change-set keys) rows. Keys absent from the
-        appended files have byte-identical file lists in both
-        snapshots and therefore identical visible state — they cannot
-        produce a feed row in either form, so the two forms return the
-        same diff (pinned by the feed property tests + the
-        cdc_change_feed oracle).
-
-        Falls back to the general two-snapshot form whenever any bucket
-        saw files removed or reordered (CoW merges, compaction,
-        z-order, GC) — the prefix check below."""
-        from_id, to_id = m_from["snapshot_id"], m_to["snapshot_id"]
+        """(old, new) visible rows of the keys that can differ between
+        the two snapshots, feeding the change-feed outer join: the keys
+        of the files in exactly one snapshot's ``changed`` buckets (a
+        key whose rows all sit in files common to both resolves the same
+        way on both sides). Each side is :meth:`read` of its snapshot's
+        changed buckets semi-joined to that key set: after a MoR merge
+        the appended files' keys, after a CoW merge or a compaction
+        every key of the rewritten buckets."""
         keys = list(m_to["key_columns"])
-        appended: list[str] = []
-        append_only = True
-        for b in set(m_from["files"]) | set(m_to["files"]):
-            old_l = m_from["files"].get(b, [])
-            new_l = m_to["files"].get(b, [])
-            if new_l[: len(old_l)] != old_l:
-                append_only = False
-                break
-            appended.extend(new_l[len(old_l):])
-        if not append_only or not appended:
-            return (
-                self.read(snapshot_id=from_id, buckets=changed),
-                self.read(snapshot_id=to_id, buckets=changed),
-            )
-        to_schema = T.StructType.fromJson(m_to["schema"])
-        delta = self.spark.read.schema(to_schema).parquet(
-            *[os.path.join(self.path, f) for f in appended]
-        )
-        key_set = delta.select(*keys).distinct()
-        try:
-            appended_bytes = sum(
-                os.path.getsize(os.path.join(self.path, f)) for f in appended
-            )
-        except OSError:
-            appended_bytes = None
-        if appended_bytes is not None and appended_bytes < 64 * 1024 * 1024:
-            key_set = F.broadcast(key_set)
-        old_raw = self.read(
-            snapshot_id=from_id, buckets=changed,
-            include_hidden=True, resolve=False,
-        )
-        old_m = old_raw.join(key_set, keys, "left_semi")
-        # evolution between the snapshots: align the old rows to the
-        # new schema before the union (null-filled adds)
-        for f in to_schema.fields:
-            if f.name not in old_m.columns:
-                old_m = old_m.withColumn(f.name, F.lit(None).cast(f.dataType))
 
-        def visible(df):
-            res = resolve_latest(df, keys)
-            if V_DEL in res.columns:
-                res = res.filter(~F.coalesce(F.col(V_DEL), F.lit(False)))
-            return res.drop(*[c for c in HIDDEN_COLS if c in res.columns])
+        def changed_files(m):
+            return {f for b in changed for f in m["files"].get(str(b), [])}
 
-        new_side = visible(
-            old_m.unionByName(delta, allowMissingColumns=True)
+        differ = sorted(changed_files(m_from) ^ changed_files(m_to))
+        fields = {f.name: f for f in T.StructType.fromJson(m_to["schema"]).fields}
+        key_set = self.spark.read.schema(T.StructType([fields[k] for k in keys])).parquet(
+            *[os.path.join(self.path, f) for f in differ]
+        ).distinct()
+        return tuple(
+            self.read(snapshot_id=m["snapshot_id"], buckets=changed).join(
+                key_set, keys, "left_semi"
+            )
+            for m in (m_from, m_to)
         )
-        return visible(old_m), new_side
 
     def read_changes(
         self,
@@ -779,11 +810,12 @@ class LakeTable:
         :mod:`spark_cdc.operators.ivm`).
 
         Scale path: per-bucket file lists carry over BY REFERENCE
-        across commits, so buckets whose lists are identical in both
-        manifests cannot differ — the diff join reads only changed
-        buckets (cost ∝ change set, not table size). Both sides are
-        hash-bucketed on the same key, so the outer join co-partitions
-        cleanly; no driver-side state.
+        across commits, so buckets whose file sets are identical in both
+        manifests cannot differ — the diff reads only changed buckets,
+        and of those only the keys of files in one snapshot but not the
+        other (:meth:`_diff_sides`). Each side still resolves all of its
+        changed buckets' rows before the key semi-join, so a poll costs
+        the changed buckets, not the change set. No driver-side state.
         """
         to_id = self.snapshot_id if to_snapshot_id is None else to_snapshot_id
         m_from = self._read_manifest(from_snapshot_id)
@@ -794,7 +826,7 @@ class LakeTable:
         changed = sorted(
             int(b)
             for b in set(m_from["files"]) | set(m_to["files"])
-            if m_from["files"].get(b) != m_to["files"].get(b)
+            if set(m_from["files"].get(b, [])) != set(m_to["files"].get(b, []))
         )
         to_user = [
             f.name

@@ -13,7 +13,7 @@ from pyspark.sql import types as T
 
 from spark_cdc.cdc.apply import apply_batch
 from spark_cdc.lake.feed import ChangeFeedConsumer
-from spark_cdc.lake.table import LakeTable
+from spark_cdc.lake.table import LakeTable, read_latest, read_spec
 from spark_cdc.operators.index_maint import (
     BM25_INDEX_KEYS,
     BM25_INDEX_SCHEMA,
@@ -526,10 +526,22 @@ def test_bm25_servable_probe_prunes_files_and_scores_match(spark, tmp_path):
     scored = maint.scores("alpha delta")
     got = {r["doc_id"]: round(r["score"], 9) for r in scored.collect()}
     assert got == want
-    # the token probe is pushed into the parquet scan (row-level twin
-    # of the file pruning): no full-postings scan on the query path
+    # the probe reads the postings through the resolving kernel, never
+    # a Spark scan of the postings table
     plan = scored._jdf.queryExecution().executedPlan().toString()
-    assert "In(token" in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert not [line for line in plan.splitlines()
+                if "FileScan" in line and idx_tbl.path in line], plan
+    # the kernel applies the token probe (the row-level twin of the
+    # file pruning) before it resolves: from a file that holds other
+    # tokens too, it returns only the probed token's rows
+    import pyarrow.parquet as pq
+
+    rel = idx_tbl.selected_files(buckets=idx_tbl.buckets_for(["alpha"]), key_in=["alpha"])[0]
+    path = os.path.join(idx_tbl.path, rel)
+    assert set(pq.read_table(path).column("token").to_pylist()) - {"alpha"}
+    got = read_latest(read_spec(idx_tbl.manifest), [path], key_in=["alpha"])
+    assert got.num_rows and set(got.column("token").to_pylist()) == {"alpha"}
     top = maint.topk("alpha delta", k=3).collect()
     assert [r["rank"] for r in top] == [1, 2, 3]
 

@@ -172,10 +172,10 @@ def test_file_stats_pruning_and_lookup(spark, tmp_table_path):
     assert sorted(tuple(s) for s in stats.values()) == [
         ("c000", "c000"), ("c000", "c099"), ("c100", "c199"),
     ]
-    # range read prunes to the covering generation only
+    # file skipping prunes to the covering generation only (the list
+    # read() resolves)...
+    assert len(t.selected_files(key_between=("c150", "c150"))) == 1
     pruned = t.read(key_between=("c150", "c150"))
-    # file skipping prunes to the covering generation only...
-    assert len(pruned.inputFiles()) == 1
     # ...and the built-in row predicate keeps out-of-range keys from
     # surfacing (possibly stale-resolved) rows
     assert [(r["conv_id"], r["text"]) for r in pruned.collect()] == [("c150", "v1")]
@@ -189,6 +189,41 @@ def test_file_stats_pruning_and_lookup(spark, tmp_table_path):
     want = [(r["conv_id"], r["text"])
             for r in t.read().where("conv_id = 'c150'").collect()]
     assert [(r["conv_id"], r["text"]) for r in t.lookup("c150").collect()] == want
+
+
+def test_bucket_column_must_be_a_key(spark, tmp_path):
+    """Buckets resolve on their own and key predicates on the bucket
+    column apply before resolution, so a keyed table must bucket on one
+    of its keys. Bucketed on ``role``, a key (a, 0) that moves from
+    ``user`` to ``assistant`` would keep its stale version in the other
+    bucket; ``create`` refuses that table. Bucketed on the second key
+    column, the same two versions resolve to the newer one."""
+    import datetime
+
+    import pytest
+
+    from spark_cdc.cdc.apply import apply_batch
+    from spark_cdc.cdc.envelope import CHANGE_SCHEMA
+
+    keys = ["conv_id", "turn_idx"]
+    with pytest.raises(ValueError, match="bucket_column"):
+        LakeTable.create(spark, str(tmp_path / "role"), PAYLOAD_SCHEMA,
+                         key_columns=keys, bucket_column="role", num_buckets=4)
+    assert not (tmp_path / "role").exists()
+    t = LakeTable.create(spark, str(tmp_path / "turn"), PAYLOAD_SCHEMA,
+                         key_columns=keys, bucket_column="turn_idx", num_buckets=4)
+    day = datetime.datetime(2024, 1, 1)
+    changes = spark.createDataFrame(
+        [(0, 0, "c", "a", 0, "user", "v1", None, day),
+         (1, 1, "u", "a", 0, "assistant", "v2", None, day + datetime.timedelta(seconds=1))],
+        CHANGE_SCHEMA,
+    )
+    apply_batch(t, changes.where("lsn = 0"), batch_id=0, mode="mor", collect_lineage=False)
+    apply_batch(t, changes.where("lsn = 1"), batch_id=1, mode="mor", collect_lineage=False)
+    want = [("a", 0, "assistant", "v2")]
+    for df in (t.read(), t.lookup(0)):
+        assert [tuple(r) for r in df.select("conv_id", "turn_idx", "role", "text").collect()] == want
+    assert t.lookup(7).collect() == []  # no file holds the key
 
 
 def test_commit_conflict_detected_not_lost(spark, tmp_path):

@@ -8,9 +8,12 @@ engine's core identity; the generator deliberately produces duplicate
 hit the tie-break lattice of the version order (ts, op_seq, gen,
 lsn).
 
-The second property pins compaction's Arrow twin of the resolver
-(``latest_arrow``) to ``latest_sql``: for any multi-generation bucket
-content, both pick the same rows, and so does ``compact`` end to end."""
+The first property also checks ``lookup`` of every drawn conversation
+against the oracle. The second pins the engine's one resolver
+(``latest_arrow``) to the independent reference
+``cdc/dedup.py::latest_version_per_key`` ordered by ``VERSION_ORDER``:
+for any multi-generation bucket content, both pick the same rows, and
+so does ``compact`` end to end."""
 
 from __future__ import annotations
 
@@ -22,13 +25,14 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from spark_cdc.cdc.apply import apply_batch, replay_changes_df
+from spark_cdc.cdc.dedup import latest_version_per_key
 from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
 from spark_cdc.lake.maintenance import compact
 from spark_cdc.lake.table import (
     V_DEL,
+    VERSION_ORDER,
     LakeTable,
     latest_arrow,
-    resolve_latest,
 )
 
 BASE = datetime.datetime(2024, 1, 1, 0, 0, 0)
@@ -119,6 +123,9 @@ def test_incremental_merge_equals_oracle_on_any_log(
         tuple(r) for r in replay_changes_df(log, KEY_COLUMNS).select(*cols).collect()
     )
     assert got == want
+    for conv in {e[0] for e in evs}:
+        looked_up = sorted(tuple(r) for r in table.lookup(conv).select(*cols).collect())
+        assert looked_up == [r for r in want if r[0] == conv], conv
 
 
 # one stored row version: (conv_id, turn_idx, text, tool, _v_ts offset,
@@ -136,7 +143,7 @@ versions = st.lists(
     ),
     min_size=1,
     max_size=24,
-    # a full tie on (ts, seq, gen) is a free pick in both resolvers
+    # a full tie on (ts, seq, gen) is a free pick in the resolver and the reference
     unique_by=lambda v: (v[0], v[1], v[4], v[5], v[7]),
 )
 
@@ -160,13 +167,14 @@ def _rows(arrow_table):
     pre_evolution=st.booleans(),
     drop_tombstones=st.booleans(),
 )
-def test_arrow_resolver_equals_latest_sql(
+def test_resolver_equals_reference_dedup(
     spark, tmp_path_factory, vs, n_files, keyed, bucket_on_second_key,
     pre_evolution, drop_tombstones,
 ):
     """Multi-generation content of one bucket, written as up to three
-    files (the first optionally before ``tool`` was added): the Arrow
-    twin over the raw rows equals ``latest_sql`` over the same rows, and
+    files (the first optionally before ``tool`` was added): the
+    resolver over the raw rows equals the reference window dedup over
+    the same rows, ordered by ``VERSION_ORDER`` with nulls losing, and
     ``compact`` leaves exactly that state (tombstones dropped only under
     ``drop_tombstones``). An unkeyed table is concatenated."""
     from pyspark.sql import types as T
@@ -199,7 +207,7 @@ def test_arrow_resolver_equals_latest_sql(
         table.append(df.drop("tool") if "tool" not in table.schema.names else df)
     raw = table.read(include_hidden=True, resolve=False)
     if keyed:
-        want = resolve_latest(raw, keys)
+        want = latest_version_per_key(raw, keys, VERSION_ORDER)
         twin = latest_arrow(raw.toArrow(), keys, table.bucket_column)
         assert _rows(twin) == _rows(want.toArrow())
     else:

@@ -130,6 +130,57 @@ def test_batch_stats_start_no_job(spark, tmp_path):
         assert 0 < jobs[True] <= jobs[False], (mode, jobs)
 
 
+def _jobs(spark, group, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _delta_table(spark, path):
+    """A table whose every bucket carries MoR delta files."""
+    from pyspark.sql import functions as F
+
+    from spark_cdc.cdc.apply import apply_batch
+    from spark_cdc.cdc.envelope import KEY_COLUMNS, PAYLOAD_SCHEMA
+    from spark_cdc.lake.table import LakeTable
+    from spark_cdc.sources.changelog import generate_change_log
+
+    table = LakeTable.create(spark, path, PAYLOAD_SCHEMA, key_columns=KEY_COLUMNS, num_buckets=4)
+    src = generate_change_log(spark, n_events=2000, n_convs=50, seed=1, partitions=4)
+    for i in range(2):
+        apply_batch(table, src.where(F.col("lsn") % 2 == i), batch_id=i, mode="mor",
+                    collect_lineage=False)
+    assert len(table.manifest["delta_buckets"]) == 4
+    return table
+
+
+def test_lookup_runs_no_job(spark, tmp_path):
+    """A lookup on a delta-carrying table resolves the key's versions on
+    the driver and returns a local relation: no Spark job."""
+    table = _delta_table(spark, str(tmp_path / "t"))
+    conv = table.read().first()["conv_id"]
+    rows, jobs = _jobs(spark, "lookup", lambda: table.lookup(conv).collect())
+    assert rows and {r["conv_id"] for r in rows} == {conv}
+    assert jobs == 0, jobs
+
+
+def test_resolved_read_is_one_job_without_exchange(spark, tmp_path):
+    """A read that resolves delta buckets is one Spark job: each task
+    resolves its group of buckets in a Python worker, so nothing is
+    exchanged."""
+    table = _delta_table(spark, str(tmp_path / "t"))
+    df = table.read()
+    rows, jobs = _jobs(spark, "read", df.collect)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert rows and jobs == 1, jobs
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
+
+
 def test_wholestage_codegen_in_flagship(spark):
     # '*(n)' prefixes mark whole-stage-codegen stages in the plan text
     plan = _plan(spark, "tpch_q1_pricing_summary")

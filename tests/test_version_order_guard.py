@@ -1,16 +1,15 @@
 """Guard: the engine defines its version order, its resolver and its
 exactly-once protocol once.
 
-Every latest-version pick in the lake and in the apply path goes
-through one of two spellings of the one order,
-``spark_cdc.lake.table.VERSION_ORDER``: ``latest_sql`` (MoR read, feed
-diff, merge) and its Arrow twin ``latest_arrow`` (compaction's
-per-bucket rewrite). The first test fails when a ``max_by`` or the old
-``1900-01-01`` null-timestamp floor shows up outside ``latest_sql``,
-or an Arrow sort (``sort_indices``, ``sort_by``) outside
-``latest_arrow``, so the copies cannot grow back; it also requires both
-to take their order fields from ``VERSION_ORDER`` rather than spell
-them. ``test_merge_property`` pins the two to the same rows.
+Every latest-version pick in the lake and in the apply path, on reads
+and writes alike, runs the one resolver ``latest_arrow``, which takes
+its order fields from ``spark_cdc.lake.table.VERSION_ORDER``. The first
+test fails when an Arrow sort (``sort_indices``, ``sort_by``) shows up
+outside ``latest_arrow``, or a ``max_by`` or the old ``1900-01-01``
+null-timestamp floor shows up anywhere, so a second spelling cannot
+grow back; it also requires ``latest_arrow`` to take its order fields
+from ``VERSION_ORDER`` rather than spell them. ``test_merge_property``
+pins it to the reference dedup.
 
 The second test holds the exactly-once protocol of derived tables to
 one definition per half: the batch-id guard's ``"last_batch_id"``
@@ -31,13 +30,14 @@ import pathlib
 ROOT = pathlib.Path(__file__).resolve().parents[1] / "spark_cdc"
 EXEMPT = {"cdc/dedup.py"}
 SCANNED = sorted((ROOT / "lake").glob("*.py")) + [ROOT / "cdc" / "apply.py"]
+# marker → the one (file, definition) allowed to hold it; None: nowhere
 MARKERS = {
-    "max_by": ("lake/table.py", "latest_sql"),
-    "1900-01-01": ("lake/table.py", "latest_sql"),
+    "max_by": None,
+    "1900-01-01": None,
     "sort_indices": ("lake/table.py", "latest_arrow"),
     "sort_by": ("lake/table.py", "latest_arrow"),
 }
-THE_DEFINITIONS = {("lake/table.py", "latest_sql"), ("lake/table.py", "latest_arrow")}
+THE_DEFINITIONS = {("lake/table.py", "latest_arrow")}
 ORDER_FIELDS = {"V_TS", "V_SEQ", "V_GEN"}
 
 
@@ -89,7 +89,7 @@ def test_version_order_is_defined_once():
     stray = {k: v for k, v in sites.items() if MARKERS[k[0]] != k[1:]}
     assert not stray, stray
     assert {k[1:] for k in sites} == THE_DEFINITIONS, sites
-    # both resolvers read their order from VERSION_ORDER, not spelled out
+    # the resolver reads its order from VERSION_ORDER, not spelled out
     for rel, owner in THE_DEFINITIONS:
         names = {
             node.id for top, node in _code_nodes(ROOT / rel)
