@@ -36,10 +36,11 @@ ingress guard skips the redelivered apply, which makes the pipeline
 exactly-once end to end. (A consumer whose apply is a latest-version-
 wins MERGE is idempotent even without the guard.)
 
-Scale: a poll costs O(change set) — ``read_changes`` reads only buckets
+Scale: a poll's diff is one Spark job with no exchange over the buckets
 whose manifest file lists differ between the cursor snapshot and the
-head snapshot; a caught-up poll touches no data files at all (two
-manifest reads).
+head snapshot, resolving in each only the bucket-column values of
+the keys in files the commits added or dropped; a caught-up poll
+touches no data files at all (two manifest reads).
 """
 
 from __future__ import annotations

@@ -120,7 +120,8 @@ def merge_changes(
     (``'d'`` deletes; ``c``/``r``/``u`` upsert), ``ts`` and ``op_seq``
     (the version) and, optionally, ``lsn`` (the tie-break within the
     batch). Payload columns the table lacks are added to its schema
-    (nullable; older rows read them as null).
+    (nullable; older rows read them as null) in the merge's own commit. A
+    null in a NOT NULL key column fails the merge before any write or commit.
 
     ``mode``:
 
@@ -175,11 +176,16 @@ def merge_changes(
         for f in changes.schema.fields
         if f.name not in known and f.name not in ENVELOPE_COLS
     ]
-    if new_fields:
-        table.add_columns([type(f)(f.name, f.dataType, True) for f in new_fields])
+    # staged, not committed: the columns ride this merge's own commit
+    base = table.manifest
+    table.stage_columns([type(f)(f.name, f.dataType, True) for f in new_fields])
 
     t_exec = time.monotonic()
-    out = _merge_plan(table, changes, mode, collect_stats, collect_lineage).collect()
+    try:
+        out = _merge_plan(table, changes, mode, collect_stats, collect_lineage).collect()
+    except BaseException:
+        table.manifest = base  # a failed batch commits nothing, not even its columns
+        raise
     written = [(r["bucket"], r["path"]) for r in out if r["bucket"] is not None]
     stats = [r for r in out if r["bucket"] is None]
     lineage = [
@@ -193,7 +199,7 @@ def merge_changes(
         {**table.properties, **(extra_properties or {})}, batch_id, source_id
     )
     if not written:  # an empty batch: only the batch id and properties to record
-        if batch_id is not None or extra_properties:
+        if batch_id is not None or extra_properties or new_fields:
             table.set_properties(props)
         return MergeResult(table.snapshot_id, batch_rows=batch_rows, batch_keys=batch_keys,
                            wall_ms=(time.monotonic() - t0) * 1000)
@@ -262,11 +268,20 @@ def _merge_plan(table: LakeTable, changes: DataFrame, mode: str, stats=False, li
     cols = set(changes.columns)
     user = table.user_schema.fields
     names = [BUCKET_COL, *(f.name for f in user), V_TS, V_SEQ, V_DEL, V_GEN, V_LSN]
+    # a typed null for a column added after the batch was produced
+    values = {f.name: _bq(f.name) if f.name in cols else f"CAST(NULL AS {f.dataType.simpleString()})"
+              for f in user}
+    for f in user:
+        if f.name in table.key_columns and not f.nullable:
+            # fails the job before the exchange and any write; repr quotes the
+            # message as a SQL literal, braces doubled for spark.sql's format
+            msg = repr(f"key column {f.name!r} is NOT NULL, but a change has a null there: "
+                       "route such changes to a quarantine sink (apply_batch(..., quarantine=...))")
+            values[f.name] = (f"coalesce({values[f.name]}, raise_error("
+                              f"{msg.replace('{', '{{').replace('}', '}}')}))")
     exprs = [
         _bucket_sql(table),
-        # a typed null for a column added after the batch was produced
-        *(_bq(f.name) if f.name in cols else f"CAST(NULL AS {f.dataType.simpleString()})"
-          for f in user),
+        *values.values(),
         "CAST(ts AS TIMESTAMP)",
         "coalesce(CAST(op_seq AS BIGINT), CAST(-1 AS BIGINT))",
         "(op = 'd')",

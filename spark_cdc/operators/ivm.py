@@ -27,9 +27,11 @@ append-only facts (/root/reference/etl/clickhouse_schema/
 kpi_views.sql), and its CDC path drops deletes entirely
 (/root/reference/stream_etl/core/processor.py:214-217).
 
-Scale: a maintenance step costs O(change set) — the feed diff reads
-only changed buckets, signed expansion is a projection + union, and
-the rollup rewrites only buckets containing touched groups.
+Scale: a maintenance step costs O(change set) — the feed diff is one
+Spark job without an exchange that resolves only the bucket-column
+values of the keys in files the commits added or dropped, signed
+expansion is a projection + union, and the rollup rewrites only
+buckets containing touched groups.
 """
 
 from __future__ import annotations

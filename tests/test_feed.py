@@ -165,3 +165,63 @@ def test_feed_across_schema_evolution(spark, tmp_path):
     pre = sorted((r["conv_id"], r["_pre_text"], r["tool"])
                  for r in t.read_changes(snap_a, include_preimage=True).collect())
     assert pre == [("c1", "a", "search"), ("c3", None, None)]
+
+
+def test_feed_carries_null_keys(spark, tmp_path):
+    """A key with a null part is a key like any other: the update and
+    the delete of a row keyed (conv, null) or (null, turn) reach the
+    feed, with and without pre-images, in both merge modes."""
+    from pyspark.sql import types as T
+
+    def loose(schema):
+        return T.StructType([T.StructField(f.name, f.dataType, True) for f in schema.fields])
+
+    batches = [
+        [_ev(1, "c", "a", None, "v1", 1), _ev(2, "c", None, 1, "w1", 1), _ev(3, "c", "a", 0, "x", 1)],
+        [_ev(4, "u", "a", None, "v2", 2), _ev(5, "u", None, 1, "w2", 2)],
+        [_ev(6, "d", "a", None, "v2", 3), _ev(7, "d", None, 1, "w2", 3)],
+    ]
+    want = [
+        {("a", None): ("update_postimage", "v2", "v1"), (None, 1): ("update_postimage", "w2", "w1")},
+        {("a", None): ("delete", "v2", "v2"), (None, 1): ("delete", "w2", "w2")},
+    ]
+    for mode in ("cow", "mor"):
+        t = LakeTable.create(spark, str(tmp_path / mode), loose(PAYLOAD_SCHEMA),
+                             key_columns=["conv_id", "turn_idx"], num_buckets=2)
+        apply_batch(t, spark.createDataFrame(batches[0], loose(CHANGE_SCHEMA)),
+                    batch_id=0, mode=mode, collect_lineage=False)
+        for i, rows in enumerate(batches[1:], 1):
+            snap = t.snapshot_id
+            apply_batch(t, spark.createDataFrame(rows, loose(CHANGE_SCHEMA)),
+                        batch_id=i, mode=mode, collect_lineage=False)
+            post = {(r["conv_id"], r["turn_idx"]): (r["_change_type"], r["text"])
+                    for r in t.read_changes(snap).collect()}
+            pre = {(r["conv_id"], r["turn_idx"]): (r["_change_type"], r["text"], r["_pre_text"])
+                   for r in t.read_changes(snap, include_preimage=True).collect()}
+            assert post == {k: v[:2] for k, v in want[i - 1].items()}, (mode, i, post)
+            want_pre = {k: (c, None if c == "delete" else p, q) for k, (c, p, q) in want[i - 1].items()}
+            assert pre == want_pre, (mode, i, pre)
+
+
+def test_diff_kernel_returns_only_changed_keys(spark, tmp_path):
+    """The feed's bucket kernel resolves whole conversations (the bucket
+    column's values) but returns only the keys of the files a commit
+    added: a MoR update of one turn of a 20-turn conversation leaves the
+    kernel as one row, not twenty for the Spark no-op filter to drop."""
+    from spark_cdc.lake.table import diff_bucket, read_spec
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAYLOAD_SCHEMA,
+                         key_columns=["conv_id", "turn_idx"], num_buckets=2)
+    base = [_ev(i, "c", "a", i, f"t{i}", 1) for i in range(20)]
+    apply_batch(t, spark.createDataFrame(base, CHANGE_SCHEMA), batch_id=0, collect_lineage=False)
+    snap = t.snapshot_id
+    apply_batch(t, spark.createDataFrame([_ev(20, "u", "a", 3, "t3b", 2)], CHANGE_SCHEMA),
+                batch_id=1, mode="mor", collect_lineage=False)
+    m_from, m_to = t._read_manifest(snap), t.manifest
+    rows = []
+    for b, files in m_to["files"].items():
+        sides = tuple([os.path.join(t.path, f) for f in m["files"].get(b, [])] for m in (m_from, m_to))
+        if sides[0] != sides[1]:
+            rows += diff_bucket(read_spec(m_to), sides).to_pylist()
+    assert [(r["conv_id"], r["turn_idx"], r["text"], r["_pre_text"], r["_change_type"])
+            for r in rows] == [("a", 3, "t3b", "t3", "update_postimage")]

@@ -174,3 +174,47 @@ def test_merge_quotes_hostile_identifiers(spark, tmp_path):
             )
         got = sorted(tuple(r.asDict()[c] for c in names) for r in table.read().collect())
         assert got == want, mode
+
+
+def test_merge_rejects_null_in_not_null_key(spark, tmp_path):
+    """A null in a key column the table declares NOT NULL fails the
+    merge in both modes before it writes a file or commits, and the
+    error names the column and the quarantine sink; the table reads as
+    before. The rejected batch also carries a column the table lacks
+    (``tool``): schema evolution rides the merge's own commit, so the
+    table keeps its schema, in memory and on disk, until a good batch
+    commits data and column as one snapshot."""
+    import datetime
+    import os
+
+    import pytest
+    from pyspark.sql import types as T
+
+    from spark_cdc.cdc.envelope import CHANGE_SCHEMA
+
+    loose = T.StructType([T.StructField(f.name, f.dataType, True) for f in CHANGE_SCHEMA.fields])
+    day = datetime.datetime(2024, 1, 1)
+    good = spark.createDataFrame([(1, 1, "c", "a", 0, "user", "x", None, day)], loose).drop("tool")
+    bad = spark.createDataFrame([(2, 2, "c", "a", None, "user", "y", "s", day)], loose)
+    evolved = spark.createDataFrame([(3, 3, "c", "a", 1, "user", "z", "s", day)], loose)
+    fields = [f for f in PAYLOAD_SCHEMA.fields if f.name != "tool"]
+    for mode in ("cow", "mor"):
+        table = LakeTable.create(spark, str(tmp_path / mode), T.StructType(fields),
+                                 key_columns=KEY_COLUMNS, num_buckets=4)
+        apply_batch(table, good, batch_id=0, mode=mode)
+        snap, data = table.snapshot_id, os.path.join(table.path, "data")
+        written = sorted(os.listdir(data))
+        with pytest.raises(Exception, match="'turn_idx'.*quarantine"):
+            apply_batch(table, bad, batch_id=1, mode=mode)
+        for t in (table, LakeTable.load(spark, table.path)):
+            assert t.snapshot_id == snap, mode
+            assert "tool" not in t.schema.fieldNames(), mode
+        assert sorted(os.listdir(data)) == written, mode
+        assert [tuple(r) for r in table.read().select("conv_id", "turn_idx", "text").collect()] == [
+            ("a", 0, "x")
+        ], mode
+        apply_batch(table, evolved, batch_id=1, mode=mode)
+        assert table.snapshot_id == snap + 1, mode
+        assert sorted(tuple(r) for r in table.read().select("turn_idx", "tool").collect()) == [
+            (0, None), (1, "s")
+        ], mode

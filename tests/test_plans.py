@@ -181,6 +181,32 @@ def test_resolved_read_is_one_job_without_exchange(spark, tmp_path):
     assert "MapInArrow" in plan and "Exchange" not in plan, plan
 
 
+def test_resolved_read_is_never_broadcast(spark, tmp_path):
+    """The planner cannot see the size of a resolved read, which runs in
+    Python workers, so a join must not plan to broadcast it: joined to
+    a 5M-row relation, the resolved side is not broadcast."""
+    from pyspark.sql import functions as F
+
+    table = _delta_table(spark, str(tmp_path / "t"))
+    big = spark.range(5_000_000).select(F.col("id").cast("string").alias("conv_id"))
+    joined = big.join(table.read(resolve=True), "conv_id")
+    plan = joined._jdf.queryExecution().sparkPlan().toString()
+    assert "Broadcast" not in plan, plan
+
+
+def test_feed_diff_is_one_job_without_exchange(spark, tmp_path):
+    """The change-feed diff of a MoR poll, with pre-images, is one Spark
+    job: both sides of a key sit in its bucket, so each task diffs its
+    group of changed buckets in a Python worker and nothing is
+    exchanged."""
+    table = _delta_table(spark, str(tmp_path / "t"))
+    df = table.read_changes(table.snapshot_id - 1, include_preimage=True)
+    rows, jobs = _jobs(spark, "feed", df.collect)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert rows and jobs == 1, jobs
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
+
+
 def test_wholestage_codegen_in_flagship(spark):
     # '*(n)' prefixes mark whole-stage-codegen stages in the plan text
     plan = _plan(spark, "tpch_q1_pricing_summary")
